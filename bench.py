@@ -1,19 +1,27 @@
 #!/usr/bin/env python
-"""Benchmark runner: executes every registered query at SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...}.
+"""Full-registry benchmark sweep: executes every registered query at
+SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata, see main()) on
+local[SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}, then a
+compact summary line.
 
 Each query is materialized with the noop sink (full execution, no driver
-collect). Use BENCH_QUERIES=q1,q2 to restrict, BENCH_REPEAT=n for medians.
+collect). The gated per-change benchmark is perfbench/ (BENCHMARK.json);
+this sweep is the whole-registry draw behind the DuckDB comparator ratios.
 
-The JSON is also written to BENCH_OUT (default bench_result.json next to this
-file) so per-query timings survive even when the caller captures only a
-truncated stdout tail. BENCH_DUCKDB=0 disables the built-in DuckDB comparator
-that times every batch-oracled query's oracle SQL on the same parquet and
-reports spark_batch_sec / duckdb_sec / ratio (streaming replays excluded:
-their cost is micro-batch + state-store machinery, which DuckDB has no
-equivalent of).
+Settings (environment):
+  BENCH_QUERIES      comma list restricting the sweep (default: every entry)
+  BENCH_REPEAT       timing passes, min kept (default 3)
+  BENCH_BUDGET_S     wall budget for re-timing passes (default 600)
+  BENCH_OUT          result JSON path (default bench_result.json here)
+  BENCH_DUCKDB       0 disables the built-in DuckDB comparator, which times
+                     every batch-oracled query's oracle SQL on the same
+                     parquet and reports spark_batch_sec / duckdb_sec / ratio
+                     (streaming replays get a separate overhead factor)
+  BENCH_MAX_REDRAWS  full re-executions allowed after a degraded-box draw
+                     (default 2)
+  BENCH_RELAYOUT     rel (default) relayouts the relational tables; 0 times
+                     the shipped layout (see relayout())
 """
 
 from __future__ import annotations
@@ -21,8 +29,14 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
+
+import duckdb
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -30,11 +44,58 @@ from nexmark_vanilla_flink_spark.plans import REGISTRY  # noqa: E402
 from nexmark_vanilla_flink_spark.plans.registry import EAGER_TAGS  # noqa: E402
 from nexmark_vanilla_flink_spark.session import get_session  # noqa: E402
 from nexmark_vanilla_flink_spark.sources.tables import TABLE_NAMES  # noqa: E402
+from nexmark_vanilla_flink_spark.streaming.runner import (  # noqa: E402
+    reclaim_replay_sinks,
+    run_available_now,
+)
+from nexmark_vanilla_flink_spark.streaming.sources import (  # noqa: E402
+    stream_events,
+)
+
+# Fixed sweep parameters.
+# Row-group size of the relayouted relational tables (relayout()).
+RELAYOUT_ROW_GROUP = 16384
+# Shuffle partitions sized to the SF, not the core count: the largest
+# shuffle at sf0.1 is ~600 K rows, and 8 partitions ≈ 75 K rows/task —
+# the "few, large tasks" sizing the brief prescribes. 32 partitions of
+# ~20 K rows pay 2x in task-launch + fetch overhead on every one of ~90
+# queries (measured: event_type_stats 0.45 s @32 → 0.19 s @8). AQE skew
+# splitting still breaks up any hot key. At 100 TB you'd size this UP
+# from the data volume the same way (bytes-per-task, not cores).
+SHUFFLE_PARTITIONS = 8
+# Outlier alarm (VERDICT r6 task 1c): any pass-1 sample above OUTLIER_S is
+# immediately re-taken after a cache clear + GC, up to 2 retries, min kept
+# — the r6 artifact's 46 s source_dup_matrix was exactly this failure mode
+# (sweep-accumulated JVM state landing on one query), and an immediate
+# clean retake reads the real number. Retries are globally budgeted
+# (OUTLIER_BUDGET_S) so a genuinely-slow tail can't double the sweep.
+OUTLIER_S = 5.0
+OUTLIER_BUDGET_S = 120.0
+# Guaranteed re-timing (VERDICT r6 task 1b): even if pass 1 ate the whole
+# budget — exactly how BENCH_r06 collapsed to timing_passes=1 and shipped
+# single-sample GC noise as the headline — the slowest MIN_RETIME batch
+# entries are re-timed anyway. Their retime cost is bounded by the head of
+# the distribution (~tens of seconds), and they are precisely the entries
+# whose pass-1 noise moves the ratio. Since r10 the slowest
+# MIN_RETIME_STREAM streaming entries get the same guarantee:
+# stream_net_factor is a headline number too, and with streaming sorted
+# last in the retime order a budget-bound sweep used to ship SINGLE-sample
+# replay timings (the r10 first full sweep read net_factor 12.1 off cold
+# pass-1 draws that isolated min-of-3 measured 25-30% lower).
+# r11: raised 12/8 -> 20/12 after a slow-box draw spent the whole budget
+# in pass 1 and shipped single-sample timings for 118 entries.
+# r12: stream floor raised to 24 (= the whole oracled streaming cohort):
+# stream_net_factor divides a ~20-entry sum by a ~3 s denominator, so even
+# a few single-sample streaming tails move it by ~1x.
+MIN_RETIME = 20
+MIN_RETIME_STREAM = 24
 
 
 def relayout(sf_dir: str) -> tuple[str, float]:
-    """One-time ingest normalization: rewrite each table into multi-row-group
-    parquet (DuckDB COPY, preserving logical types) so scans can parallelize.
+    """One-time ingest normalization: rewrite each relational table into
+    multi-row-group parquet (DuckDB COPY, preserving logical types) so scans
+    can parallelize; documents/embeddings pass through byte-identical (hard
+    links, copy as fallback).
 
     The driver testdata ships ONE row group per file. Spark's file splitter
     aligns splits to row-group boundaries, so every scan of every table runs
@@ -48,56 +109,27 @@ def relayout(sf_dir: str) -> tuple[str, float]:
     Both engines read the SAME relayouted files; the one-time cost is
     reported in the JSON as relayout_sec, not folded into query timings.
 
-    DEFAULT since r7: BENCH_RELAYOUT=rel — relational tables only;
-    documents/embeddings pass through byte-identical (hard links). The
-    r7 three-way A/B at sf0.1 (identical code, same box, full 177-entry
-    sweeps):
+    Relational tables only (since r7). The r7 three-way A/B at sf0.1
+    (identical code, same box, full 177-entry sweeps):
       shipped layout   raw 2.27 / net 1.93   (spark 97.1, duck 42.8)
       full relayout    raw 1.87 / net 1.34   (spark 100.2, duck 53.7)
       relational-only  raw 1.96 / net 1.68   (spark 83.1,  duck 42.5)
-    The relational-only mode is the honest one: DuckDB's total is
-    UNCHANGED (42.5 vs 42.8 — the ratio gain is not denominator
-    manipulation), and the full mode's duck slowdown concentrated in two
-    iterated-join oracles (triangles 5.8->18.4 s) that did NOT reproduce
-    in isolation — noise this mode does not invite. What relational-only
-    fixes is purely the tiny-SF artifact: the driver ships ONE row group
-    per file, so every 600 K-row lineitem scan is a single Spark task
-    regardless of cores, while DuckDB parallelizes inside the row group —
-    at production scale files carry thousands of row groups and the
-    default 128 MB splitting gives full scan parallelism for free. The
-    doc/embedding tables stay shipped because their ops already recover
-    parallelism at runtime (repartition guard) and the r7 full-mode A/B
-    showed multi-splitting them mostly reshuffles noise for both engines.
-    BENCH_RELAYOUT=0 times the shipped layout (the pre-r7 comparable
-    series); BENCH_RELAYOUT=1 is the full mode for layout experiments
-    (SCALE_NOTES.md).
+    DuckDB's total is UNCHANGED under relational-only (42.5 vs 42.8 — the
+    ratio gain is not denominator manipulation). The full mode (documents/
+    embeddings also split into 16-file directories) slowed two
+    iterated-join oracles (triangles 5.8->18.4 s) that did NOT reproduce in
+    isolation, so those two tables stay as shipped: their entries recover
+    parallelism at runtime (repartition guard). BENCH_RELAYOUT=0 skips this
+    step and times the shipped layout (the pre-r7 comparable series).
     """
-    import duckdb
-
-    mode = os.environ.get("BENCH_RELAYOUT", "0")
-    out = os.path.join(
-        "/tmp",
-        f"bench_relayout{'_rel' if mode == 'rel' else ''}_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = f"/tmp/bench_relayout_rel_{os.path.basename(sf_dir.rstrip('/'))}"
     t0 = time.perf_counter()
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     for t in TABLE_NAMES:
         src, dst = f"{sf_dir.rstrip('/')}/{t}.parquet", f"{out}/{t}.parquet"
-        if os.path.exists(dst) and os.path.getmtime(dst) > os.path.getmtime(src):
-            continue
-        if mode == "rel" and t in ("documents", "embeddings"):
-            # BENCH_RELAYOUT=rel: relational tables only. The doc/embedding
-            # entries already recover parallelism at runtime (repartition
-            # guard) and the r7 full-relayout A/B showed the multi-file
-            # split mostly reshuffles NOISE for both engines on these two;
-            # the single-row-group handicap that matters is the relational
-            # scans (a 600 K-row lineitem scan is one task no matter how
-            # many cores). Hard-link/copy the originals so the out dir is
-            # self-contained.
-            import shutil
-
+        if t in ("documents", "embeddings"):
+            # hard-link/copy the originals so the out dir is self-contained
             if os.path.isdir(src):
                 shutil.copytree(src, dst, dirs_exist_ok=True)
             else:
@@ -108,41 +140,285 @@ def relayout(sf_dir: str) -> tuple[str, float]:
                 except OSError:
                     shutil.copy2(src, dst)
             continue
-        if t in ("documents", "embeddings"):
-            # the small-but-heavy tables (5 K rows of fat text / vectors,
-            # ~1-2 MB total) get a DIRECTORY of ~16 files: Spark schedules
-            # one split per file regardless of maxPartitionBytes, so the
-            # CPU-dense ops over them (regex, shingling, hashing, cosine)
-            # parallelize without shrinking the split target for everyone
-            # else. DuckDB reads the same directory via glob.
-            import shutil
-
-            n_rows = con.execute(
-                f"SELECT count(*) FROM read_parquet('{src}')"
-            ).fetchone()[0]
-            shutil.rmtree(dst, ignore_errors=True)
-            os.makedirs(dst, exist_ok=True)
-            chunk = max(1, -(-n_rows // 16))
-            for i in range(16):
-                lo = i * chunk
-                if lo >= n_rows:
-                    break
-                # ORDER BY the (unique) leading id column makes
-                # LIMIT/OFFSET a correct disjoint partitioning
-                con.execute(
-                    f"COPY (SELECT * FROM read_parquet('{src}') ORDER BY 1 "
-                    f"LIMIT {chunk} OFFSET {lo}) TO '{dst}/part-{i:02d}.parquet' "
-                    f"(FORMAT PARQUET, ROW_GROUP_SIZE {max(512, chunk)})"
-                )
+        if os.path.exists(dst) and os.path.getmtime(dst) > os.path.getmtime(src):
             continue
-        # relational tables stay single-file; ~16k-row groups give the 1 MB
-        # split target row-group-aligned boundaries on the 10-30 MB tables
+        # ~16k-row groups give the 1 MB split target row-group-aligned
+        # boundaries on the 10-30 MB tables
         con.execute(
             f"COPY (SELECT * FROM read_parquet('{src}')) TO '{dst}' "
-            f"(FORMAT PARQUET, ROW_GROUP_SIZE 16384)"
+            f"(FORMAT PARQUET, ROW_GROUP_SIZE {RELAYOUT_ROW_GROUP})"
         )
     con.close()
     return out, round(time.perf_counter() - t0, 3)
+
+
+def stream_class(name: str) -> tuple[str, int]:
+    """Machinery class of an oracled streaming replay, and the full query
+    lifecycles one timed sample runs, derived from its registry tags:
+
+    * ``stateful`` tag → ``pystateful`` (applyInPandasWithState /
+      transformWithState: Python channel + state store);
+    * ``state-store`` tag → ``stateful`` (JVM stateful operator: windowed /
+      session aggregation, stream-stream join, watermark dedup);
+    * neither → ``stateless``;
+    * ``exactly-once`` → two cycles (crash + resume), otherwise one.
+
+    Each class has its own floor probe (``stream_floor_*_sec``) that feeds
+    ``stream_net_factor_classed``."""
+    tags = set(REGISTRY[name].tags)
+    if "stateful" in tags:
+        cls = "pystateful"
+    elif "state-store" in tags:
+        cls = "stateful"
+    else:
+        cls = "stateless"
+    return cls, 2 if "exactly-once" in tags else 1
+
+
+def timed(fn) -> float:
+    """Wall seconds of one ``fn()`` call."""
+    t0 = time.perf_counter()
+    fn()
+    return time.perf_counter() - t0
+
+
+def min_of(sample, n: int, warmup: int = 0, settle: float | None = None) -> float:
+    """Min-of-N sampling shared by the floor probes and the DuckDB
+    comparator: ``warmup`` discarded calls of ``sample`` (each returns
+    seconds), then up to ``n`` kept ones, min returned (ms-rounded).
+
+    ``settle`` makes it adaptive (r7): stop as soon as a sample lands within
+    ``settle`` x the PREVIOUS running min. Not the just-updated min (ADVICE
+    r7): that test is trivially true whenever the sample is itself the new
+    minimum, and would stop sampling while times still converge steeply
+    downward."""
+    for _ in range(warmup):
+        sample()
+    best = None
+    for _ in range(n):
+        dt = sample()
+        prev = best
+        best = dt if best is None else min(best, dt)
+        if settle is not None and prev is not None and dt <= prev * settle:
+            break
+    return round(best, 3)
+
+
+# Measured per-query FLOORS (VERDICT r3 task 6): the fixed cost any query
+# pays regardless of data volume, reported so per-query ratios can be graded
+# net-of-floor. floor_sec = an empty batch plan through the same timed path
+# (Catalyst + scheduling + noop sink, ~0 rows); the stream floors = trivial
+# bounded file-stream replays — the micro-batch machinery floor every
+# streaming entry pays before doing any real work, one probe per machinery
+# class (stream_class). All amortize to zero at production scale; at sf0.1
+# they dominate sub-second entries. Untimed warm-ups precede every probe:
+# a floor is the REPEATING fixed cost, and first-probe codegen/JIT inflated
+# the cold start floor 3-4x (VERDICT r8 "What's wrong" #3).
+
+
+def floor_batch(spark) -> float:
+    df = spark.range(1)
+    return min_of(
+        lambda: timed(df.write.format("noop").mode("overwrite").save), 5, warmup=3
+    )
+
+
+def _replay_sample(build, output_mode: str) -> float:
+    """One timed entry-path replay of ``build()``: run_available_now
+    (ephemeral checkpoint, micro-batch execution, sink write, lazy
+    read-back) then the noop-sink scan bench times; the sink reclaim runs
+    outside the timer, like entries."""
+    t0 = time.perf_counter()
+    run_available_now(build(), output_mode=output_mode).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    dt = time.perf_counter() - t0
+    reclaim_replay_sinks()
+    return dt
+
+
+def floor_stream(spark, sf_dir: str) -> float:
+    """Stateless class: passthrough projection through the ENTRY path (r12,
+    VERDICT r11 task 1) — every timed streaming entry goes through
+    run_available_now, so the floor traverses the same machinery including
+    the parquet sink round-trip (~0.15-0.3 s/replay). Two warm-ups: the
+    second catches stragglers JIT'd only after the first replay."""
+    return min_of(
+        lambda: _replay_sample(
+            lambda: stream_events(spark, sf_dir).select("event_id"), "append"
+        ),
+        3,
+        warmup=2,
+    )
+
+
+# Per-CLASS probes (r13, VERDICT r12 task 7) feed only the
+# stream_net_factor_classed twin; the headline stream_net_factor keeps the
+# stateless-floor convention. The r12 machinery ladder (stateless
+# passthrough 0.555 s → +mapInPandas boundary 0.761 →
+# +applyInPandasWithState store 0.956; JVM stateful agg 1.343) showed the
+# stateless probe under-credits stateful entries ~0.4 s of state-store +
+# Python-channel lifecycle that is machinery, not query work.
+
+
+def floor_stream_stateful(spark, sf_dir: str) -> float:
+    """JVM state-store class: one 365-day window key per state partition —
+    state-store lifecycle with ~no aggregation state."""
+
+    def build():
+        return (
+            stream_events(spark, sf_dir)
+            .select("ts")
+            .withWatermark("ts", "2 seconds")
+            .groupBy(F.window("ts", "365 days"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    return min_of(lambda: _replay_sample(build, "complete"), 2, warmup=1)
+
+
+def floor_stream_pystateful(spark, sf_dir: str) -> float:
+    """Python-stateful class: applyInPandasWithState fold over 8 hash
+    buckets, one long of state each — the Python channel + state-store
+    lifecycle."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def _fold(key, pdfs, state):
+        n = state.get[0] if state.exists else 0
+        for pdf in pdfs:
+            n += len(pdf)
+        state.update((n,))
+        yield pd.DataFrame({"b": [int(key[0])], "n": [n]})
+
+    def build():
+        return (
+            stream_events(spark, sf_dir)
+            .select(F.pmod("user_id", F.lit(8)).alias("b"))
+            .groupBy("b")
+            .applyInPandasWithState(
+                _fold,
+                outputStructType="b bigint, n bigint",
+                stateStructType="n bigint",
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
+        )
+
+    return min_of(lambda: _replay_sample(build, "append"), 2, warmup=1)
+
+
+def measure_floors(spark, sf_dir: str) -> dict[str, float]:
+    return {
+        "batch": floor_batch(spark),
+        "stateless": floor_stream(spark, sf_dir),
+        "stateful": floor_stream_stateful(spark, sf_dir),
+        "pystateful": floor_stream_pystateful(spark, sf_dir),
+    }
+
+
+def duckdb_min(con, sql: str) -> float:
+    """Adaptive min-of-N (r7) of one oracle query after one warm-up run
+    (buffer-pool parity): up to 4 samples, stopping once one lands within
+    15% of the previous running min. The comparator denominator swung
+    +-40% across identical sweeps on host noise alone."""
+    return min_of(
+        lambda: timed(lambda: con.execute(sql).fetchall()), 4, warmup=1, settle=1.15
+    )
+
+
+# Pre-warm the JIT/codegen paths the ARTIFACT BUILD PHASE hits (VERDICT
+# r10 task 2): the seven concurrent builders land on a cold JVM and pay
+# interpreter->JIT transitions simultaneously — measured 15.4 s cold
+# vs 5.5 s warm for the identical concurrent build on the same box, a
+# ~10 s wall tax that is one-time JVM bring-up, not indexing work. One
+# small job per builder-hot pattern (fat-string parquet scan + HOF
+# lambdas + md5, explode -> hash-agg exchange -> sort, decimal agg over
+# embeddings, parquet write to scratch), each on a few hundred rows, so
+# the warmup itself stays ~2 s. Runs BEFORE the timed build phase the
+# way any production cluster's first job precedes its indexing jobs;
+# artifact_build_sec still times the full build work.
+def prewarm_builder_paths(spark, sf_dir: str) -> None:
+    scratch = tempfile.mkdtemp(prefix="bench_warm_")
+    try:
+        docs = (
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .limit(256)
+            .select(
+                "doc_id",
+                F.expr(
+                    "transform(sequence(0, greatest(size(split(text,' '))-3,0)),"
+                    " j -> md5(concat_ws(' ', split(text,' ')[j],"
+                    " split(text,' ')[j+1], split(text,' ')[j+2])))"
+                ).alias("hs"),
+            )
+            .select("doc_id", F.explode("hs").alias("h"))
+        )
+        (
+            docs.groupBy("h")
+            .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("d"))
+            .sort("n")
+            .write.mode("overwrite")
+            .parquet(f"{scratch}/w1")
+        )
+        emb = (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .limit(256)
+            .select(
+                "vec_id",
+                F.posexplode(
+                    F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
+                ).alias("dim", "x"),
+            )
+        )
+        (
+            emb.groupBy("dim")
+            .agg(F.sum(F.col("x").cast("decimal(38,12)")).alias("s"))
+            .write.mode("overwrite")
+            .parquet(f"{scratch}/w2")
+        )
+        # window + broadcast-join paths (the prefix/tfidf builders):
+        one = spark.range(1).select(F.lit(1).alias("one"))
+        (
+            docs.withColumn("one", F.lit(1))
+            .join(F.broadcast(one), "one")
+            .withColumn(
+                "rn",
+                F.row_number().over(
+                    Window.partitionBy("doc_id").orderBy("h")
+                ),
+            )
+            .filter(F.col("rn") <= 2)
+            .write.mode("overwrite")
+            .parquet(f"{scratch}/w3")
+        )
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def record_draw(path: str, draw: dict) -> list[dict]:
+    """Append one full-registry draw to the band file and return the last
+    three draws taken at the same core count (this one included)."""
+    with open(path, "a") as f:
+        f.write(json.dumps(draw) + "\n")
+    tail = []
+    with open(path) as f:
+        for x in f.read().splitlines():
+            if not x.strip():
+                continue
+            # per-line parse (ADVICE r11): a corrupt/partial trailing line
+            # from a killed run must not abort bench AFTER the whole sweep
+            # — skip unparseable lines, keep the rest
+            try:
+                parsed = json.loads(x)
+            except ValueError:
+                continue
+            # band = same-core draws only (legacy untagged lines predate
+            # the cpus field; every draw in this file's history ran at 32
+            # cores)
+            if parsed.get("cpus", 32) == draw["cpus"]:
+                tail.append(parsed)
+    return tail[-3:]
 
 
 def main() -> None:
@@ -150,8 +426,10 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     relayout_sec = None
-    os.environ.setdefault("BENCH_RELAYOUT", "rel")
-    if os.environ.get("BENCH_RELAYOUT") != "0":
+    relayout_mode = os.environ.get("BENCH_RELAYOUT", "rel")
+    if relayout_mode not in ("0", "rel"):
+        sys.exit(f"BENCH_RELAYOUT must be 0 or rel, not {relayout_mode!r}")
+    if relayout_mode == "rel":
         sf_dir, relayout_sec = relayout(sf_dir)
     only = os.environ.get("BENCH_QUERIES")
     names = (
@@ -165,26 +443,10 @@ def main() -> None:
     # Pass 1 times every query once — a COMPLETE result exists whatever the
     # caller's time budget; passes 2..N then re-time and take the min only
     # while elapsed < BENCH_BUDGET_S, so a driver timeout can never produce
-    # an empty result. The DuckDB comparator takes min-of-2 warm runs.
+    # an empty result. The DuckDB comparator samples adaptively
+    # (duckdb_min).
     repeat = int(os.environ.get("BENCH_REPEAT", "3"))
     budget_s = float(os.environ.get("BENCH_BUDGET_S", "600"))
-
-    # optional in-memory table cache; OFF by default — full-sweep A/B at
-    # sf0.1 with the TIMESTAMP(MICROS) testdata: batch-oracled total vs the
-    # DuckDB comparator is 2.02x with cold parquet scans vs 2.63x cached.
-    # InMemoryTableScan loses parquet predicate pushdown + dictionary
-    # skipping, which the event-type-filtered Nexmark queries lean on, and
-    # MEMORY_ONLY batches add sweep-wide GC pressure across 80+ queries.
-    # BENCH_CACHE=1 re-enables it for buffer-pool-parity experiments.
-    if os.environ.get("BENCH_CACHE", "0") != "0":
-        os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
-        # measured A/B at sf0.1: caching the fat text bodies of `documents`
-        # LOSES to the parquet scan (dedup_clusters 4.9s cached vs 2.8s
-        # skipped; minhash 1.9 vs 0.9) — wide strings scan worse from
-        # MEMORY_ONLY batches than from dictionary-encoded parquet, and the
-        # shingle/minhash pipelines are compute-bound anyway. Cache the
-        # narrow relational tables + embeddings only ("hot dimensions").
-        os.environ.setdefault("SPARK_GRAFT_CACHE_SKIP", "documents")
 
     # A 97-query sweep in one JVM accumulates broadcast blocks + shuffle
     # metadata; with a small heap the ContextCleaner (GC-triggered) lags and
@@ -197,103 +459,17 @@ def main() -> None:
     if relayout_sec is not None:
         # 1 MB split targets give the relational tables ~10-30 row-group-
         # aligned splits without flooding every trivial query with tiny
-        # tasks (a 128 KB target measured ~3-4 s slower across the sweep);
-        # documents/embeddings get their parallelism from the multi-file
-        # relayout above. At 100 TB the default 128 MB target is right —
-        # this is the per-SF sizing knob the brief prescribes.
+        # tasks (a 128 KB target measured ~3-4 s slower across the sweep).
+        # At 100 TB the default 128 MB target is right — this is the
+        # per-SF sizing knob the brief prescribes.
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
-    # shuffle partitions sized to the SF, not the core count: the largest
-    # shuffle at sf0.1 is ~600 K rows, and 8 partitions ≈ 75 K rows/task —
-    # the "few, large tasks" sizing the brief prescribes. 32 partitions of
-    # ~20 K rows pay 2x in task-launch + fetch overhead on every one of ~90
-    # queries (measured: event_type_stats 0.45 s @32 → 0.19 s @8). AQE skew
-    # splitting still breaks up any hot key. At 100 TB you'd size this UP
-    # from the data volume the same way (bytes-per-task, not cores).
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", os.environ.get("BENCH_SHUFFLE", "8")
-    )
-
+    spark.conf.set("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
     # JVM/codegen + noop-sink warmup so the first timed query isn't penalized
     spark.read.parquet(f"{sf_dir}/region.parquet").write.format("noop").mode(
         "overwrite"
     ).save()
 
-    # Pre-warm the JIT/codegen paths the ARTIFACT BUILD PHASE hits (VERDICT
-    # r10 task 2): the seven concurrent builders land on a cold JVM and pay
-    # interpreter->JIT transitions simultaneously — measured 15.4 s cold
-    # vs 5.5 s warm for the identical concurrent build on the same box, a
-    # ~10 s wall tax that is one-time JVM bring-up, not indexing work. One
-    # small job per builder-hot pattern (fat-string parquet scan + HOF
-    # lambdas + md5, explode -> hash-agg exchange -> sort, decimal agg over
-    # embeddings, parquet write to scratch), each on a few hundred rows, so
-    # the warmup itself stays ~2 s. Runs BEFORE the timed build phase the
-    # way any production cluster's first job precedes its indexing jobs;
-    # artifact_build_sec still times the full build work.
-    from pyspark.sql import functions as F
-
-    def _prewarm_builder_paths() -> None:
-        import shutil
-        import tempfile
-
-        scratch = tempfile.mkdtemp(prefix="bench_warm_")
-        try:
-            docs = (
-                spark.read.parquet(f"{sf_dir}/documents.parquet")
-                .limit(256)
-                .select(
-                    "doc_id",
-                    F.expr(
-                        "transform(sequence(0, greatest(size(split(text,' '))-3,0)),"
-                        " j -> md5(concat_ws(' ', split(text,' ')[j],"
-                        " split(text,' ')[j+1], split(text,' ')[j+2])))"
-                    ).alias("hs"),
-                )
-                .select("doc_id", F.explode("hs").alias("h"))
-            )
-            (
-                docs.groupBy("h")
-                .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("d"))
-                .sort("n")
-                .write.mode("overwrite")
-                .parquet(f"{scratch}/w1")
-            )
-            emb = (
-                spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-                .limit(256)
-                .select(
-                    "vec_id",
-                    F.posexplode(
-                        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-                    ).alias("dim", "x"),
-                )
-            )
-            (
-                emb.groupBy("dim")
-                .agg(F.sum(F.col("x").cast("decimal(38,12)")).alias("s"))
-                .write.mode("overwrite")
-                .parquet(f"{scratch}/w2")
-            )
-            # window + broadcast-join paths (the prefix/tfidf builders):
-            from pyspark.sql import Window as _W
-
-            one = spark.range(1).select(F.lit(1).alias("one"))
-            (
-                docs.withColumn("one", F.lit(1))
-                .join(F.broadcast(one), "one")
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        _W.partitionBy("doc_id").orderBy("h")
-                    ),
-                )
-                .filter(F.col("rn") <= 2)
-                .write.mode("overwrite")
-                .parquet(f"{scratch}/w3")
-            )
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
-
-    _prewarm_builder_paths()
+    prewarm_builder_paths(spark, sf_dir)
 
     # Corpus-index artifacts (VERDICT r8 task 1): the once-per-corpus-state
     # index tables (postings/prefix/tfidf, co-purchase edges, bigram model
@@ -302,16 +478,14 @@ def main() -> None:
     # `artifact_build_sec` + per-artifact `artifact_builds`, so the
     # amortization stays auditable next to the query times (ADVICE r8 low:
     # without this, a pre-materialized /dev/shm artifact makes the ratio
-    # unreadable as same-work-vs-same-work). BENCH_ARTIFACTS=keep reuses
-    # whatever /dev/shm already holds (builds still logged if any happen).
+    # unreadable as same-work-vs-same-work).
     from nexmark_vanilla_flink_spark.operators.artifacts import (  # noqa: E402
         ARTIFACT_BUILDERS,
         pop_build_log,
         purge_artifact_roots,
     )
 
-    if os.environ.get("BENCH_ARTIFACTS", "rebuild") == "rebuild":
-        purge_artifact_roots()
+    purge_artifact_roots()
     # The registered index builds (seven as of r10) are INDEPENDENT jobs
     # (disjoint artifacts, each publishing atomically) — run concurrently
     # on the shared scheduler, exactly as a production cluster runs its
@@ -341,198 +515,9 @@ def main() -> None:
     artifact_builds = pop_build_log()
     artifact_build_serial_sec = round(sum(b["sec"] for b in artifact_builds), 3)
 
-    # Measured per-query FLOORS (VERDICT r3 task 6): the fixed cost any
-    # query pays regardless of data volume, reported so per-query ratios can
-    # be graded net-of-floor. floor_sec = an empty batch plan through the
-    # same timed path (Catalyst + scheduling + noop sink, ~0 rows);
-    # stream_floor_sec = a trivial bounded file-stream replay (passthrough
-    # projection, no state) — the micro-batch machinery floor that every
-    # streaming entry pays before doing any real work. Both amortize to
-    # zero at production scale; at sf0.1 they dominate sub-second entries.
-    def _floor_batch() -> float:
-        df = spark.range(1)
-        # throwaway warm-ups of the SAME probe plan (VERDICT r8 "What's
-        # wrong" #3): the start floor was measured on a cold JVM, so
-        # first-probe codegen/JIT inflated floor_start 3-4x on EVERY sweep
-        # and degraded_box fired on quiet boxes too — the flag could no
-        # longer adjudicate a bad draw. A floor is the REPEATING fixed
-        # cost; warm-up belongs outside it (the stream floor probe already
-        # did this).
-        for _ in range(3):
-            df.write.format("noop").mode("overwrite").save()
-        best = None
-        for _ in range(5):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
-    def _floor_stream() -> float:
-        # ENTRY-PATH probe (r12, closing VERDICT r11 task 1): every timed
-        # streaming entry goes through run_available_now — ephemeral
-        # checkpoint, micro-batch execution, PARQUET sink write, lazy
-        # read-back, and the noop-sink scan bench times — so the floor
-        # must traverse the SAME machinery on a trivial passthrough. The
-        # r5-era hashed-foreachBatch probe measured a consumption path no
-        # timed entry takes and under-counted the repeating per-replay
-        # fixed cost by the sink round-trip (~0.15-0.3 s/replay measured
-        # isolated), which net_factor then mis-attributed to streaming
-        # overhead vs the DuckDB batch denominator (which persists
-        # nothing). The hashed probe stays beside it as
-        # stream_floor_hashed_sec so the series break is auditable.
-        from nexmark_vanilla_flink_spark.streaming.runner import (  # noqa: E402
-            reclaim_replay_sinks,
-            run_available_now,
-        )
-        from nexmark_vanilla_flink_spark.streaming.sources import (  # noqa: E402
-            stream_events,
-        )
-
-        def _once() -> float:
-            t0 = time.perf_counter()
-            run_available_now(
-                stream_events(spark, sf_dir).select("event_id")
-            ).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            reclaim_replay_sinks()  # outside the timer, like entries
-            return dt
-
-        # untimed warmups: the first streaming query in a session pays
-        # one-off planner/state-machinery init that no steady-state replay
-        # repeats — a floor must measure the repeating cost (two rounds:
-        # the second catches stragglers JIT'd only after the first replay)
-        for _ in range(2):
-            _once()
-        best = None
-        for _ in range(3):
-            dt = _once()
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
-    # Per-CLASS stream floor probes (r13, VERDICT r12 task 7) — ADDED
-    # telemetry series only: the headline stream_net_factor keeps the
-    # r12 stateless-floor convention unchanged (task 2: convention
-    # frozen), and stream_net_factor_classed is reported BESIDE it from
-    # the same draw. Rationale: the r12 session-4 machinery ladder
-    # (stateless passthrough 0.555 s → +mapInPandas boundary 0.761 →
-    # +applyInPandasWithState store 0.956; JVM stateful agg 1.343)
-    # showed the stateless probe under-credits stateful entries ~0.4 s
-    # of state-store + Python-channel lifecycle that is machinery, not
-    # query work. Each probe traverses the identical run_available_now
-    # entry path; the class map below assigns each oracled streaming
-    # entry the machinery class its plan actually instantiates, and
-    # multi-lifecycle entries (crash+resume) a cycle count.
-    def _floor_stream_stateful() -> float:
-        # minimal JVM stateful agg: one 365-day window key per state
-        # partition — state-store lifecycle with ~no aggregation state
-        from nexmark_vanilla_flink_spark.streaming.runner import (  # noqa: E402
-            reclaim_replay_sinks,
-            run_available_now,
-        )
-        from nexmark_vanilla_flink_spark.streaming.sources import (  # noqa: E402
-            stream_events,
-        )
-
-        def _once() -> float:
-            t0 = time.perf_counter()
-            agg = (
-                stream_events(spark, sf_dir)
-                .select("ts")
-                .withWatermark("ts", "2 seconds")
-                .groupBy(F.window("ts", "365 days"))
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            run_available_now(agg, output_mode="complete").write.format(
-                "noop"
-            ).mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            reclaim_replay_sinks()
-            return dt
-
-        _once()  # warmup (first stateful plan pays one-off init)
-        best = None
-        for _ in range(2):
-            dt = _once()
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
-    def _floor_stream_pystateful() -> float:
-        # minimal applyInPandasWithState fold: 8 hash buckets, one long
-        # of state each — the Python channel + state-store lifecycle
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        from nexmark_vanilla_flink_spark.streaming.runner import (  # noqa: E402
-            reclaim_replay_sinks,
-            run_available_now,
-        )
-        from nexmark_vanilla_flink_spark.streaming.sources import (  # noqa: E402
-            stream_events,
-        )
-
-        def _fold(key, pdfs, state):
-            n = state.get[0] if state.exists else 0
-            for pdf in pdfs:
-                n += len(pdf)
-            state.update((n,))
-            yield pd.DataFrame({"b": [int(key[0])], "n": [n]})
-
-        def _once() -> float:
-            t0 = time.perf_counter()
-            src = stream_events(spark, sf_dir).select(
-                F.pmod("user_id", F.lit(8)).alias("b")
-            )
-            out = src.groupBy("b").applyInPandasWithState(
-                _fold,
-                outputStructType="b bigint, n bigint",
-                stateStructType="n bigint",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            run_available_now(out, output_mode="append").write.format(
-                "noop"
-            ).mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            reclaim_replay_sinks()
-            return dt
-
-        _once()
-        best = None
-        for _ in range(2):
-            dt = _once()
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
-    def _floor_stream_hashed() -> float:
-        # legacy r5-r11 probe (hash-only foreachBatch consumption), kept
-        # as comparison telemetry for the floor-series break above
-        from nexmark_vanilla_flink_spark.streaming.runner import (  # noqa: E402
-            run_available_now_hashed,
-        )
-        from nexmark_vanilla_flink_spark.streaming.sources import (  # noqa: E402
-            stream_events,
-        )
-
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            run_available_now_hashed(
-                stream_events(spark, sf_dir).select("event_id")
-            )
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
-    floor_start = _floor_batch()
-    stream_floor_start = _floor_stream()
-    stream_floor_hashed_start = _floor_stream_hashed()
-    # new per-class probes run AFTER the legacy ones so every pre-existing
-    # reading keeps its exact position in the start-up sequence
-    stream_floor_stateful_start = _floor_stream_stateful()
-    stream_floor_pystateful_start = _floor_stream_pystateful()
-    floor_sec = floor_start
-    stream_floor_sec = stream_floor_start
+    floors_start = measure_floors(spark, sf_dir)
+    floor_sec = floors_start["batch"]
+    stream_floor_sec = floors_start["stateless"]
 
     # Timed quantity per query: JVM-side work — Catalyst analysis +
     # optimization + scheduling + execution through the noop sink. For
@@ -558,23 +543,16 @@ def main() -> None:
     # the judge reproduced source_dup_matrix at 35 s in-sweep vs 1.2 s
     # isolated with this as the prime suspect. Every query now gets a clean
     # cache slate after its timing; its OWN caches are populated by its
-    # warmup save and live only for its timed save. Skipped in the opt-in
-    # BENCH_CACHE=1 mode, where table caches must survive the sweep.
-    _keep_table_cache = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "0") != "0"
-
+    # warmup save and live only for its timed save.
     def _post_query_cleanup():
-        if not _keep_table_cache:
-            spark.catalog.clearCache()
+        spark.catalog.clearCache()
         # free tmpfs replay-sink scratch between entries (r11: left to
         # process exit, a long sweep accumulates every replay's output in
         # /dev/shm and competes with the heap / the DuckDB comparator)
-        from nexmark_vanilla_flink_spark.streaming.runner import (
-            reclaim_replay_sinks,
-        )
-
         reclaim_replay_sinks()
 
-    _STREAM_ENTRY_TAGS = {"streaming", "sink"}
+    def _is_stream(name) -> bool:
+        return bool({"streaming", "sink"} & set(REGISTRY[name].tags))
 
     def _gc_before_stream_sample(name) -> None:
         """Settle the heap before timing a STREAMING/sink sample (r12).
@@ -598,7 +576,7 @@ def main() -> None:
         subtraction consistent. Batch entries keep the existing
         every-20-queries cadence: their gate (net_ratio 1.2 vs 2.0) has
         margin, and 178x3 nudges would eat the retime budget."""
-        if _STREAM_ENTRY_TAGS & set(REGISTRY[name].tags):
+        if _is_stream(name):
             spark.sparkContext._jvm.System.gc()
 
     def _time_once(name) -> float:
@@ -613,10 +591,7 @@ def main() -> None:
         cache population sat outside the Spark timer but inside the DuckDB
         timer, flattering net_ratio. Now the timed save pays exactly one
         cache-population pass, like each DuckDB run pays one CTE
-        materialization. (Skipped under SPARK_GRAFT_CACHE_TABLES=1, where
-        warm TABLE caches across the sweep are the point of the mode and
-        clearCache cannot distinguish table from plan caches.)
-        EAGER-tagged entries (replays/sinks/iterative) rebuild inside the
+        materialization. EAGER-tagged entries (replays/sinks/iterative) rebuild inside the
         timer — for those the work IS in the build — and their count() in
         pass 1 is the warmup. Because _post_query_cleanup clears caches
         between queries, every sample (pass 1 or retime) pays the same
@@ -628,20 +603,12 @@ def main() -> None:
             return round(time.perf_counter() - t0, 3)
         df = q.spark(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        if not _keep_table_cache:
-            spark.catalog.clearCache()
+        spark.catalog.clearCache()
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         return round(time.perf_counter() - t0, 3)
 
-    # Outlier alarm (VERDICT r6 task 1c): any pass-1 sample above
-    # BENCH_OUTLIER_S is immediately re-taken after a cache clear + GC, up
-    # to 2 retries, min kept — the r6 artifact's 46 s source_dup_matrix was
-    # exactly this failure mode (sweep-accumulated JVM state landing on one
-    # query), and an immediate clean retake reads the real number. Retries
-    # are globally budgeted so a genuinely-slow tail can't double the sweep.
-    outlier_s = float(os.environ.get("BENCH_OUTLIER_S", "5.0"))
-    outlier_budget_s = float(os.environ.get("BENCH_OUTLIER_BUDGET_S", "120"))
+    # outlier alarm: see OUTLIER_S
     outlier_spent = 0.0
     outlier_log: dict[str, list[float]] = {}
 
@@ -668,14 +635,14 @@ def main() -> None:
         # at 177 entries that alone pushed pass 1 past the re-timing budget.
         # Eager entries keep it: it doubles as their only warmup and their
         # rebuild-per-run makes rows genuinely this-run's output.
-        if EAGER_TAGS & set(q.tags) or os.environ.get("BENCH_ROWS", "0") != "0":
+        if EAGER_TAGS & set(q.tags):
             out_rows[name] = q.spark(spark, sf_dir).count()
         else:
             out_rows[name] = -1  # not counted; see CORRECTNESS_r*.json
         _gc_before_stream_sample(name)
         t = _time_once(name)
         retries = 0
-        while t > outlier_s and retries < 2 and outlier_spent < outlier_budget_s:
+        while t > OUTLIER_S and retries < 2 and outlier_spent < OUTLIER_BUDGET_S:
             outlier_log.setdefault(name, [t])
             _post_query_cleanup()
             spark.sparkContext._jvm.System.gc()
@@ -685,7 +652,7 @@ def main() -> None:
             outlier_log[name].append(t2)
             t = min(t, t2)
             retries += 1
-            if t2 <= outlier_s:
+            if t2 <= OUTLIER_S:
                 break
         timings[name] = t
         built = pop_build_log()
@@ -728,43 +695,13 @@ def main() -> None:
     # the separate overhead telemetry), slowest-first within each group —
     # min-of-N matters most where pass-1 noise is largest, and a mid-pass
     # budget cut should land on the cheap tail, not the expensive head.
-    retime_order = sorted(
-        names,
-        key=lambda n: (
-            "streaming" in REGISTRY[n].tags or "sink" in REGISTRY[n].tags,
-            -timings[n],
-        ),
-    )
-    # Guaranteed floor (VERDICT r6 task 1b): even if pass 1 ate the whole
-    # budget — exactly how BENCH_r06 collapsed to timing_passes=1 and
-    # shipped single-sample GC noise as the headline — the slowest
-    # BENCH_MIN_RETIME batch entries are re-timed anyway. Their retime cost
-    # is bounded by the head of the distribution (~tens of seconds), and
-    # they are precisely the entries whose pass-1 noise moves the ratio.
-    # Since r10 the slowest BENCH_MIN_RETIME_STREAM streaming entries get
-    # the same guarantee: stream_net_factor is a gated headline number too,
-    # and with streaming sorted last in retime_order a budget-bound sweep
-    # used to ship SINGLE-sample replay timings (the r10 first full sweep
-    # read net_factor 12.1 off cold pass-1 draws that isolated min-of-3
-    # measured 25-30% lower).
-    # r11: raised 12/8 -> 20/12 after a slow-box draw spent the whole
-    # budget in pass 1 and shipped single-sample timings for 118 entries —
-    # the forced head is the bounded part of the answer (~60-90 s worst
-    # case), and it is exactly the entries the gates read.
-    # r12: stream floor raised to 24 (= the whole oracled streaming
-    # cohort): stream_net_factor divides a ~20-entry sum by a ~3 s
-    # denominator, so even a few single-sample streaming tails move the
-    # gated number by ~1x — a budget-bound draw must still min-of-2 every
-    # entry that feeds it (~30 s bounded cost).
-    min_retime = int(os.environ.get("BENCH_MIN_RETIME", "20"))
-    min_retime_stream = int(os.environ.get("BENCH_MIN_RETIME_STREAM", "24"))
-    streaming_names = [
-        n
-        for n in names
-        if "streaming" in REGISTRY[n].tags or "sink" in REGISTRY[n].tags
-    ]
-    forced = set(retime_order[:min_retime]) | set(
-        sorted(streaming_names, key=lambda n: -timings[n])[:min_retime_stream]
+    retime_order = sorted(names, key=lambda n: (_is_stream(n), -timings[n]))
+    # every entry feeding a headline gets re-timed even past the budget
+    # (MIN_RETIME / MIN_RETIME_STREAM)
+    forced = set(retime_order[:MIN_RETIME]) | set(
+        sorted(filter(_is_stream, names), key=lambda n: -timings[n])[
+            :MIN_RETIME_STREAM
+        ]
     )
     retimed: set[str] = set()
     partial_passes = 0
@@ -785,7 +722,7 @@ def main() -> None:
             break
         if skipped_for_budget:
             # ADVICE r7: a budget-exhausted pass that retimed only the
-            # forced BENCH_MIN_RETIME entries must not count as a full
+            # forced MIN_RETIME entries must not count as a full
             # min-of-N sweep in timing_passes. It is reported separately,
             # and since the budget is monotone-exhausted, no further pass
             # can do more than the forced mop-up this one already did.
@@ -808,26 +745,20 @@ def main() -> None:
     # net-of-floor subtraction and the >3x degraded-box check, so both
     # readings should see the same heap discipline
     spark.sparkContext._jvm.System.gc()
-    floor_end = _floor_batch()
-    stream_floor_end = _floor_stream()
-    stream_floor_hashed_sec = min(
-        stream_floor_hashed_start, _floor_stream_hashed()
-    )
-    stream_floor_stateful_sec = min(
-        stream_floor_stateful_start, _floor_stream_stateful()
-    )
-    stream_floor_pystateful_sec = min(
-        stream_floor_pystateful_start, _floor_stream_pystateful()
-    )
-    floor_sec = min(floor_start, floor_end)
-    stream_floor_sec = min(stream_floor_start, stream_floor_end)
-    hi, lo = max(floor_start, floor_end), max(floor_sec, 1e-9)
-    s_hi = max(stream_floor_start, stream_floor_end)
-    s_lo = max(stream_floor_sec, 1e-9)
+    floors_end = measure_floors(spark, sf_dir)
+    floors = {k: min(floors_start[k], floors_end[k]) for k in floors_start}
+    floor_sec, stream_floor_sec = floors["batch"], floors["stateless"]
+
+    def _start_end(k):
+        return [floors_start[k], floors_end[k]]
+
     # ADVICE r7: the stream floor pair gets the same >3x disagreement check
     # as the batch pair — the r6 failure mode (stream-floor inflation
     # driving an absurd net factor) is exactly a stream-floor anomaly.
-    degraded_box = (hi / lo > 3.0) or (s_hi / s_lo > 3.0)
+    degraded_box = any(
+        max(_start_end(k)) / max(floors[k], 1e-9) > 3.0
+        for k in ("batch", "stateless")
+    )
 
     total = round(sum(timings.values()), 3)
     # input-side throughput: events rows / total nexmark-query time is noisy;
@@ -852,13 +783,11 @@ def main() -> None:
         "artifact_builds_in_sweep": stray_builds,
         "floor_sec": floor_sec,
         "stream_floor_sec": stream_floor_sec,
-        # legacy r5-r11 hash-only probe, for the r12 floor-series break
-        "stream_floor_hashed_sec": stream_floor_hashed_sec,
         # r13 per-class floor probes (ADDED series — see streaming_overhead)
-        "stream_floor_stateful_sec": stream_floor_stateful_sec,
-        "stream_floor_pystateful_sec": stream_floor_pystateful_sec,
-        "floor_start_end": [floor_start, floor_end],
-        "stream_floor_start_end": [stream_floor_start, stream_floor_end],
+        "stream_floor_stateful_sec": floors["stateful"],
+        "stream_floor_pystateful_sec": floors["pystateful"],
+        "floor_start_end": _start_end("batch"),
+        "stream_floor_start_end": _start_end("stateless"),
         "degraded_box": degraded_box,
         "timing_passes": passes,
         "partial_passes": partial_passes,
@@ -875,8 +804,6 @@ def main() -> None:
         # designated baseline (BASELINE.md): run each query's oracle SQL on
         # the identical parquet files and compare wall time against the Spark
         # timings for the same subset.
-        import duckdb
-
         con = duckdb.connect()
         con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
         for t in TABLE_NAMES:
@@ -893,27 +820,7 @@ def main() -> None:
             # the wall-time comparison would be sink-vs-aggregate
             if not q.oracle or "streaming" in q.tags or "sink" in q.tags:
                 continue
-            con.execute(q.oracle).fetchall()  # warmup (buffer-pool parity)
-            # adaptive min-of-N (r7): the comparator denominator swung
-            # +-40% across identical sweeps on host noise alone; keep
-            # sampling (max 4) until a sample lands within 15% of the
-            # running min, so a transient stall can't inflate an oracle
-            # reading the way it inflated the r6-era per-query numbers
-            best = None
-            for i in range(4):
-                t0 = time.perf_counter()
-                con.execute(q.oracle).fetchall()
-                dt = time.perf_counter() - t0
-                prev = best
-                best = dt if best is None else min(best, dt)
-                # ADVICE r7: compare the new sample against the PREVIOUS
-                # running min — comparing against the just-updated min was
-                # trivially true whenever dt was itself the new minimum, so
-                # sampling stopped while times were still converging
-                # steeply downward, inflating the DuckDB denominator.
-                if prev is not None and dt <= prev * 1.15:
-                    break
-            duck[name] = round(best, 3)
+            duck[name] = duckdb_min(con, q.oracle)
         spark_batch = round(sum(timings[n] for n in duck), 3)
         duck_total = round(sum(duck.values()), 3)
         # net-of-floor twin of the raw ratio (same methodology the
@@ -978,25 +885,12 @@ def main() -> None:
             q = REGISTRY[name]
             if not q.oracle or "streaming" not in q.tags:
                 continue
-            con.execute(q.oracle).fetchall()  # warmup (buffer-pool parity)
             # SYMMETRIC adaptive min-of-N (VERDICT r11 task 1a): the Spark
             # numerator is min-of-N across retime passes, but the stream
             # denominator used to be a SINGLE timed run — its same-day swing
             # (2.12-5.54 s across draws) was the whole reason net factors
-            # 6.2-8.5x and 3.13x coexisted for identical code. Same
-            # convention as the batch comparator above: keep sampling (max
-            # 4) until a sample lands within 15% of the previous running
-            # min, take the min.
-            best = None
-            for _ in range(4):
-                t0 = time.perf_counter()
-                con.execute(q.oracle).fetchall()
-                dt = time.perf_counter() - t0
-                prev = best
-                best = dt if best is None else min(best, dt)
-                if prev is not None and dt <= prev * 1.15:
-                    break
-            stream_duck[name] = round(best, 3)
+            # 6.2-8.5x and 3.13x coexisted for identical code.
+            stream_duck[name] = duckdb_min(con, q.oracle)
         if stream_duck:
             s_sum = round(sum(timings[n] for n in stream_duck), 3)
             d_sum = round(sum(stream_duck.values()), 3)
@@ -1007,46 +901,16 @@ def main() -> None:
             # swings +-40% on comparator noise alone
             net = max(s_sum - stream_floor_sec * len(stream_duck), 0.0)
             # Per-CLASS floor accounting (r13, VERDICT r12 task 7 — the
-            # round's ONE disclosed metric ADDITION; the headline
-            # net_factor above keeps the r12 stateless-floor convention
-            # unchanged). Class = the machinery the entry's plan
-            # instantiates (probes above); cycles = full query
-            # lifecycles per timed sample (exactly_once runs crash +
-            # resume). Entries not in the map default to the
-            # least-crediting (stateless, 1).
-            _STREAM_CLASS = {
-                "pii_scrub_stream_replay": ("stateless", 1),
-                "stream_static_enrich": ("stateless", 1),
-                "ann_ivf_topk_stream_replay": ("stateless", 1),
-                "exactly_once_sink_replay": ("stateless", 2),
-                "cm_stream_replay": ("stateful", 1),
-                "q5_hot_items_stream_replay": ("stateful", 1),
-                "q5_sliding_stream_replay": ("stateful", 1),
-                "q7_highest_bid_stream_replay": ("stateful", 1),
-                "q8_join_stream_replay": ("stateful", 1),
-                "qx_interval_join_stream_replay": ("stateful", 1),
-                "sessions_stream_replay": ("stateful", 1),
-                "sessions_dynamic_gap_stream_replay": ("stateful", 1),
-                "stream_dedup_replay": ("stateful", 1),
-                "incremental_dedup_stream_replay": ("stateful", 1),
-                "funnel_conversion_stream_replay": ("pystateful", 1),
-                "scd2_stream_replay": ("pystateful", 1),
-                "skipgram_pairs_stream_replay": ("pystateful", 1),
-                "user_value_ewma_stream_replay": ("pystateful", 1),
-                "q8_union_join_lowlevel": ("pystateful", 1),
-                "qx_allowed_lateness_replay": ("pystateful", 1),
-            }
+            # headline net_factor above keeps the r12 stateless-floor
+            # convention unchanged): each entry is charged its machinery
+            # class's floor once per query lifecycle (stream_class).
             _class_floor = {
                 "stateless": stream_floor_sec,
-                "stateful": stream_floor_stateful_sec,
-                "pystateful": stream_floor_pystateful_sec,
+                "stateful": floors["stateful"],
+                "pystateful": floors["pystateful"],
             }
             classed_floor_total = sum(
-                _class_floor[c] * k
-                for c, k in (
-                    _STREAM_CLASS.get(n, ("stateless", 1))
-                    for n in stream_duck
-                )
+                _class_floor[c] * k for c, k in map(stream_class, stream_duck)
             )
             net_classed = max(s_sum - classed_floor_total, 0.0)
             result["streaming_overhead"] = {
@@ -1184,26 +1048,7 @@ def main() -> None:
                 draw["stream_net_factor_classed"] = result[
                     "streaming_overhead"
                 ].get("net_factor_classed")
-            with open(draws_path, "a") as f:
-                f.write(json.dumps(draw) + "\n")
-            tail = []
-            with open(draws_path) as f:
-                for x in f.read().splitlines():
-                    if not x.strip():
-                        continue
-                    # per-line parse (ADVICE r11): a corrupt/partial trailing
-                    # line from a killed run must not abort bench AFTER the
-                    # whole sweep — skip unparseable lines, keep the rest
-                    try:
-                        parsed = json.loads(x)
-                    except ValueError:
-                        continue
-                    # band = same-core draws only (legacy untagged lines
-                    # predate the cpus field; every draw in this file's
-                    # history ran at 32 cores)
-                    if parsed.get("cpus", 32) == draw["cpus"]:
-                        tail.append(parsed)
-            tail = tail[-3:]
+            tail = record_draw(draws_path, draw)
             result["recent_draws"] = compact["recent_draws"] = tail
             _flush(result)
         except OSError:

@@ -521,7 +521,7 @@ def _corpus_index_dir(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "incremental_dedup_stream_replay",
     oracle=_INCR_ORACLE,
-    tags=("streaming", "dedup", "lsh"),
+    tags=("streaming", "dedup", "lsh", "state-store"),
 )
 def incremental_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production arrival path UNDER STREAMING EXECUTION: newly
@@ -991,8 +991,13 @@ def quality_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows (SUM(q*w) over distinct edges = SUM(q) over rows; SUM(w) =
     # COUNT(*)), so the fixed-point label math is bit-identical.
     # Measured (alternating min-of-2 ×3 rounds, bench parity): 1.91/1.61/
-    # 1.70 s -> 1.64/1.38/1.17 s; plan SortMergeJoin 2 -> 0, Exchange
-    # 44 -> 37; exceptAll-identical both directions; oracle green.
+    # 1.70 s -> 1.64/1.38/1.17 s; exceptAll-identical both directions;
+    # oracle green. Committed explain pair
+    # plans/r13/quality_label_propagation_{before,after}.txt: one
+    # SortMergeJoin node in each (1 -> 1, numbered operators of the
+    # formatted plan); `grep -c Exchange` (lines, tree plus detail
+    # sections) 44 -> 29, numbered Exchange nodes 12 -> 8 plus
+    # BroadcastExchange 5 -> 4.
     #
     # cached: spread() consumes the edge relation twice, and the second
     # iteration's input l1 embeds the first spread, so the banded

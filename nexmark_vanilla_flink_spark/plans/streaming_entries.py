@@ -24,7 +24,7 @@ def _batch_oracle(name: str) -> str:
 @register(
     "q5_hot_items_stream_replay",
     oracle=None,  # assigned below to the batch q5 oracle
-    tags=("streaming", "nexmark", "agg", "window"),
+    tags=("streaming", "nexmark", "agg", "window", "state-store"),
 )
 def q5_hot_items_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 through Structured Streaming [A1 + W1]: file-stream replay,
@@ -45,7 +45,7 @@ def q5_hot_items_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sessions_stream_replay",
     oracle=None,
-    tags=("streaming", "nexmark", "session"),
+    tags=("streaming", "nexmark", "session", "state-store"),
 )
 def sessions_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows through the streaming merge path [A5]."""
@@ -129,7 +129,7 @@ JOIN auctions a
   ON a.seller_id = p.user_id
  AND a.start_ts_ns // 86400000000000 = p.p_ts_ns // 86400000000000
 """,
-    tags=("streaming", "nexmark", "join"),
+    tags=("streaming", "nexmark", "join", "state-store"),
 )
 def q8_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The watermarked stream-stream inner join itself (J2,
@@ -173,7 +173,7 @@ JOIN bids b
  AND b.b_ts_ns >= a.start_ts_ns
  AND b.b_ts_ns < a.end_ts_ns
 """,
-    tags=("streaming", "nexmark", "join", "interval"),
+    tags=("streaming", "nexmark", "join", "interval", "state-store"),
 )
 def qx_interval_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming interval join (J4: time-bounded stream-stream join with
@@ -196,7 +196,7 @@ def qx_interval_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "q5_sliding_stream_replay",
     oracle=None,  # assigned below: shares the batch q5_sliding oracle
-    tags=("streaming", "nexmark", "agg", "sliding"),
+    tags=("streaming", "nexmark", "agg", "sliding", "state-store"),
 )
 def q5_sliding_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows through the streaming engine [§2.6 sliding]: each
@@ -236,7 +236,7 @@ REGISTRY["q5_sliding_stream_replay"].oracle = _batch_oracle("q5_sliding")
 @register(
     "q7_highest_bid_stream_replay",
     oracle=None,  # assigned below: shares the batch nexmark_q7 oracle
-    tags=("streaming", "nexmark", "agg", "argmax"),
+    tags=("streaming", "nexmark", "agg", "argmax", "state-store"),
 )
 def q7_highest_bid_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical q7 through the streaming engine: windowed arg-max
@@ -262,7 +262,7 @@ REGISTRY["q7_highest_bid_stream_replay"].oracle = _batch_oracle(
 @register(
     "cm_stream_replay",
     oracle=None,  # assigned below: shares the batch cm oracle
-    tags=("streaming", "cm", "agg"),
+    tags=("streaming", "cm", "agg", "state-store"),
 )
 def cm_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CM windowed sum [A4] through the streaming engine — complete-mode
@@ -284,7 +284,7 @@ REGISTRY["cm_stream_replay"].oracle = _batch_oracle("cm_load_per_job")
 @register(
     "sessions_dynamic_gap_stream_replay",
     oracle=None,  # assigned below: shares the batch sessions_dynamic_gap oracle
-    tags=("streaming", "nexmark", "session", "dynamic-gap"),
+    tags=("streaming", "nexmark", "session", "dynamic-gap", "state-store"),
 )
 def sessions_dynamic_gap_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-gap session windows through the STREAMING merge path
@@ -334,7 +334,7 @@ REGISTRY["sessions_dynamic_gap_stream_replay"].oracle = _batch_oracle(
 SELECT event_id, user_id, event_type, value
 FROM events
 """,
-    tags=("streaming", "dedup"),
+    tags=("streaming", "dedup", "state-store"),
 )
 def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`dropDuplicatesWithinWatermark` under the driver gate: the event

@@ -61,57 +61,37 @@ NS_PER_SEC = 1_000_000_000
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver parquet table, normalizing nano-timestamp columns.
-
-    For each nano-ts column ``c`` the result carries both ``c`` (TimestampType,
-    microsecond precision — what Spark's window/interval operators need) and
-    ``c_ns`` (the exact epoch-nanos BIGINT — what oracle-checked arithmetic
-    uses).
-    """
-    import os
-
-    mem_cache = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "0") == "1" and (
-        name not in os.environ.get("SPARK_GRAFT_CACHE_SKIP", "").split(",")
+def normalize_ts(df: DataFrame, c: str) -> DataFrame:
+    """Give ``df`` both ``c`` as TimestampType (microsecond precision — what
+    Spark's window/interval operators need) and ``c_ns``, the exact
+    epoch-nanos BIGINT (what oracle-checked arithmetic uses). The
+    testdata has shipped the column both ways; the batch loader and the
+    stream sources share this one normalization."""
+    if dict(df.dtypes)[c] == "bigint":
+        # parquet TIMESTAMP(NANOS) read via nanosAsLong
+        return df.withColumn(f"{c}_ns", F.col(c)).withColumn(
+            c, F.timestamp_micros(F.expr(f"{c}_ns DIV 1000"))
+        )
+    # parquet TIMESTAMP(MICROS) → arrives as TIMESTAMP_NTZ; normalize to
+    # TimestampType (session tz pinned to UTC in session.py, so the cast is
+    # a pure relabel) — NTZ cannot cast to numeric types and would break
+    # every plan that buckets on epoch seconds
+    return df.withColumn(c, F.col(c).cast("timestamp")).withColumn(
+        f"{c}_ns", F.unix_micros(F.col(c)) * F.lit(1000)
     )
-    key = (id(spark), sf_dir, name, mem_cache)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata parquet table, normalizing nano-timestamp columns
+    (``normalize_ts``)."""
+    key = (id(spark), sf_dir, name)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
     configure_runtime(spark)
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
     for c in _TS_COLUMNS.get(name, ()):
-        dtype = dict(df.dtypes)[c]
-        if dtype == "bigint":
-            # parquet TIMESTAMP(NANOS) read via nanosAsLong
-            df = df.withColumn(f"{c}_ns", F.col(c)).withColumn(
-                c, F.timestamp_micros(F.expr(f"{c} DIV 1000"))
-            )
-        else:
-            # parquet TIMESTAMP(MICROS) → arrives as TIMESTAMP_NTZ; normalize
-            # to TimestampType (session tz pinned to UTC in session.py, so the
-            # cast is a pure relabel) — NTZ cannot cast to numeric types and
-            # would break every plan that buckets on epoch seconds
-            df = df.withColumn(c, F.col(c).cast("timestamp")).withColumn(
-                f"{c}_ns", F.unix_micros(F.col(c)) * F.lit(1000)
-            )
-    if mem_cache:
-        # Opt-in in-memory columnar cache (SPARK_GRAFT_CACHE_TABLES=1, set by
-        # bench.py) — the buffer-pool equivalence to the DuckDB comparator.
-        # The driver testdata ships ONE row group per parquet file, capping
-        # every scan at one task no matter how many cores exist; the
-        # repartition spreads the cached columnar batches across the core
-        # budget so repeated queries scan in parallel. NOT enabled for tests
-        # or the correctness driver: with the cache on, filters hit
-        # InMemoryTableScan instead of the parquet reader, and the pushdown
-        # plan assertions (tests/test_plan_quality.py) must keep seeing the
-        # real scans. At 100 TB you would cache hot dimensions only — facts
-        # have thousands of row groups and stream fine from the source.
-        from pyspark.storagelevel import StorageLevel
-
-        df = df.repartition(
-            int(spark.sparkContext.defaultParallelism)
-        ).persist(StorageLevel.MEMORY_ONLY)
+        df = normalize_ts(df, c)
     _TABLE_CACHE[key] = df
     return df
 

@@ -14,6 +14,7 @@ import shutil
 import tempfile
 import time
 import uuid
+import warnings
 import weakref
 
 from pyspark.sql import DataFrame
@@ -147,6 +148,8 @@ def _discard_ephemeral_dir(path: str, spark=None) -> None:
        interleave and the dir survived/reappeared, re-delete. The loop
        exits immediately on the (normal) first success — zero added
        latency on the timed replay path.
+    3. If the dir still survives, warn with its path and leave it
+       registered, so the atexit sweep removes it at process exit.
     """
     if spark is not None:
         try:
@@ -162,6 +165,14 @@ def _discard_ephemeral_dir(path: str, spark=None) -> None:
             break
         time.sleep(0.05)
         shutil.rmtree(path, ignore_errors=True)
+    if os.path.isdir(path):
+        warnings.warn(
+            f"ephemeral checkpoint {path} survived removal; "
+            "left registered for the exit sweep",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return
     try:
         _EPHEMERAL_DIRS.remove(path)
     except ValueError:
@@ -303,72 +314,6 @@ def run_available_now(
             _LIVE_SINK_REFS[out_dir] = weakref.ref(df)
         return df
     return spark.table(qname)
-
-
-def run_available_now_hashed(
-    sdf: DataFrame,
-    timeout_s: int = 300,
-    shuffle_partitions: int | None = None,
-    no_data_batch: bool = True,
-) -> tuple[int, int]:
-    """Bounded replay for HASH-ONLY consumers: run ``sdf`` to completion
-    with Trigger.AvailableNow, folding each micro-batch into a running
-    (hash_sum, row_count) INSIDE foreachBatch — no sink persist, no
-    read-back (VERDICT r5 task 6: the parquet write + lazy re-read is
-    ~0.15-0.25 s a caller that only wants a content hash never needed).
-    The hash is sum(hash(*cols)) over every emitted row — order- and
-    batch-split-insensitive, the same content-hash shape bench.py uses on
-    batch results. Returns (hash_sum mod 2^63 wraparound via Python int,
-    rows).
-
-    This is NOT the driver-contract path: correctness gates need the
-    actual rows and keep ``run_available_now``'s sink + DataFrame return.
-    Use this from bench probes, smoke checks, and throughput loops."""
-    spark = sdf.sparkSession
-    ckpt = _ephemeral_checkpoint_dir("ckpt_hash_")
-    if shuffle_partitions is None:
-        shuffle_partitions = replay_state_partitions(spark)
-    saved_parts = None
-    if shuffle_partitions is not None:
-        saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    _ND_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
-    saved_nd = None
-    if not no_data_batch:
-        saved_nd = spark.conf.get(_ND_CONF, "true")
-        spark.conf.set(_ND_CONF, "false")
-    acc = [0, 0]
-
-    def _fold(df: DataFrame, _epoch: int) -> None:
-        row = df.agg(
-            F.sum(F.hash(*df.columns).cast("long")).alias("h"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        if row["n"]:
-            acc[0] += row["h"]
-            acc[1] += row["n"]
-
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(_fold)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-    finally:
-        if saved_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-        if saved_nd is not None:
-            spark.conf.set(_ND_CONF, saved_nd)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"hashed replay did not finish in {timeout_s}s")
-    if q.exception() is not None:
-        raise q.exception()
-    _discard_ephemeral_dir(ckpt, spark)
-    return acc[0], acc[1]
 
 
 def with_latency_probes(

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import configure_runtime
-from ..sources.tables import NS_PER_SEC
+from ..sources.tables import NS_PER_SEC, normalize_ts
 
 # schema-inference cache for the replay source: the footer read is a real
 # Spark job (~0.15-0.3 s) re-paid on every replay construction otherwise.
@@ -36,19 +36,10 @@ def cached_parquet_schema(spark: SparkSession, path: str):
 
 
 def _normalize_events(sdf: DataFrame) -> DataFrame:
-    """Schema-adaptive normalization shared by every events stream source
-    (same as the batch loader, sources.tables.load_table): driver testdata
-    has shipped ts both as TIMESTAMP(NANOS)-as-long and as
-    TIMESTAMP(MICROS); k is the item key parsed from props."""
-    if dict(sdf.dtypes)["ts"] == "bigint":
-        sdf = sdf.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts_ns DIV 1000"))
-        )
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
-            "ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000)
-        )
-    return sdf.withColumn(
+    """Normalization shared by every events stream source — the batch
+    loader's ts handling (sources.tables.normalize_ts) plus k, the item key
+    parsed from props."""
+    return normalize_ts(sdf, "ts").withColumn(
         "k", F.regexp_extract("props", r":\s*([0-9]+)", 1).cast("long")
     )
 

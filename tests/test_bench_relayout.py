@@ -2,11 +2,15 @@
 rows, same values, same logical column types — only row-group structure
 differs. Runs entirely in DuckDB (no Spark session)."""
 
+import os
+
 import duckdb
 
 from bench import relayout
 
 SF_DIR = "/root/testdata/sf0.001"
+# every sf0.001 table fits one 16 384-row group; sf0.01 lineitem spans four
+SF_SPLIT_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
 def test_relayout_preserves_content():
@@ -54,20 +58,21 @@ def test_relayout_preserves_content():
 
 
 def test_relayout_splits_for_parallel_scans():
-    import glob
-    import os
+    import filecmp
 
     import pyarrow.parquet as pq
 
-    out, _ = relayout(SF_DIR)
-    # documents/embeddings become multi-file directories (one Spark split
-    # per file); relational tables get 16k-row groups (multiple groups
-    # whenever the table is big enough to matter)
-    parts = glob.glob(f"{out}/documents.parquet/*.parquet")
-    assert len(parts) > 1
-    f = pq.ParquetFile(f"{out}/lineitem.parquet")
-    n_rows = f.metadata.num_rows
-    assert f.metadata.num_row_groups == max(1, -(-n_rows // 16384)) or (
-        f.metadata.num_row_groups > 1
-    )
-    assert os.path.isfile(f"{out}/lineitem.parquet")
+    out, _ = relayout(SF_SPLIT_DIR)
+    # documents/embeddings pass through byte-identical; relational tables
+    # get 16 384-row groups
+    for t in ("documents", "embeddings"):
+        assert filecmp.cmp(
+            f"{SF_SPLIT_DIR}/{t}.parquet", f"{out}/{t}.parquet", shallow=False
+        ), t
+    for t in ("lineitem", "orders", "events"):
+        md = pq.ParquetFile(f"{out}/{t}.parquet").metadata
+        assert md.num_row_groups == -(-md.num_rows // 16384), t
+        assert all(
+            md.row_group(i).num_rows == 16384 for i in range(md.num_row_groups - 1)
+        ), t
+    assert pq.ParquetFile(f"{out}/lineitem.parquet").metadata.num_row_groups > 1

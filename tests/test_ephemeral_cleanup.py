@@ -5,8 +5,10 @@ append-mode replay must keep its output directory stable across resumes.
 """
 
 import os
+import re
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from nexmark_vanilla_flink_spark.sources.binary import prune_stale_cache
@@ -98,6 +100,25 @@ def test_ephemeral_cleanup_survives_maintenance_race(spark, tmp_path):
             )
     finally:
         spark.conf.set(conf_key, saved)
+
+
+def test_surviving_checkpoint_warns_and_stays_registered(monkeypatch, tmp_path):
+    """A checkpoint dir that outlives the bounded retry loop must not be
+    silently forgotten: the discard warns with its path and keeps it in
+    _EPHEMERAL_DIRS so the atexit sweep still removes it."""
+    from nexmark_vanilla_flink_spark.streaming import runner
+
+    path = str(tmp_path / "ckpt_residue_")
+    os.makedirs(path)
+    runner.track_ephemeral_dir(path)
+    monkeypatch.setattr(runner.shutil, "rmtree", lambda *a, **k: None)
+    try:
+        with pytest.warns(RuntimeWarning, match=re.escape(path)):
+            runner._discard_ephemeral_dir(path)
+        assert path in _EPHEMERAL_DIRS
+        assert os.path.isdir(path)
+    finally:
+        _EPHEMERAL_DIRS.remove(path)
 
 
 def test_durable_append_resume_keeps_output(spark, tmp_path):

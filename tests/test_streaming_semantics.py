@@ -151,29 +151,3 @@ def test_replay_state_partitions_defaulting(spark, monkeypatch):
         conf = FakeConf()
 
     assert replay_state_partitions(FakeSpark()) is None
-
-
-def test_hashed_replay_matches_sink_replay_content(spark, sf_dir):
-    """run_available_now_hashed (hash-only consumers: bench floor probe,
-    smoke checks) must fold the SAME content hash the sink path yields —
-    sum(hash(*cols)) over all emitted rows, batch-split-insensitive."""
-    from pyspark.sql import functions as F
-
-    from nexmark_vanilla_flink_spark.streaming.runner import (
-        run_available_now,
-        run_available_now_hashed,
-    )
-    from nexmark_vanilla_flink_spark.streaming.sources import stream_events
-
-    sdf = stream_events(spark, sf_dir).select("event_id", "event_type")
-    h, n = run_available_now_hashed(sdf)
-    out = run_available_now(
-        stream_events(spark, sf_dir).select("event_id", "event_type"),
-        output_mode="append",
-    )
-    want = out.agg(
-        F.sum(F.hash(*out.columns).cast("long")).alias("h"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    assert n == want["n"] > 0
-    assert h == want["h"]

@@ -21,8 +21,9 @@ Scheme (replica i of K, replica 0 byte-identical to the original):
     and user_id; documents/embeddings shift doc_id/vec_id. region/nation
     stay fixed (TPC-H scales them with a constant 25/5 too).
   * documents.text: every token gets an `r{i}` prefix (i>0) — the
-    scaling_curve discipline: intra-replica shingle/dup structure is
-    preserved EXACTLY (prefixing is a vocabulary bijection), cross-replica
+    replication discipline of the r3 scaling curve (SCALE_NOTES.md):
+    intra-replica shingle/dup structure is preserved EXACTLY (prefixing
+    is a vocabulary bijection), cross-replica
     token/shingle/digest matches are zero by construction, so dedup and
     similarity candidates must grow linearly in K. n_chars is recomputed to
     keep the n_chars == length(text) invariant.
