@@ -143,7 +143,9 @@ def _discard_ephemeral_dir(path: str, spark=None) -> None:
        Providers for a discarded ephemeral checkpoint are garbage anyway —
        every replay gets a fresh checkpoint path, so no provider is ever
        reused — and the maintenance task restarts lazily on the next
-       stateful query's first StateStore.get().
+       stateful query's first StateStore.get(). The stop is JVM-global, so
+       it runs only when no streaming query is active: it would unload a
+       running query's providers too.
     2. rmtree, then a bounded verify-retry: if an in-flight write won the
        interleave and the dir survived/reappeared, re-delete. The loop
        exits immediately on the (normal) first success — zero added
@@ -153,10 +155,11 @@ def _discard_ephemeral_dir(path: str, spark=None) -> None:
     """
     if spark is not None:
         try:
-            jvm_ss = (
-                spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
-            )
-            jvm_ss.stop()
+            if not spark.streams.active:
+                jvm_ss = (
+                    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+                )
+                jvm_ss.stop()
         except Exception:
             pass  # cleanup is best-effort; atexit still backstops
     shutil.rmtree(path, ignore_errors=True)

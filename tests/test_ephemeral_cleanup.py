@@ -7,6 +7,7 @@ append-mode replay must keep its output directory stable across resumes.
 import os
 import re
 import time
+import types
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,6 +120,36 @@ def test_surviving_checkpoint_warns_and_stays_registered(monkeypatch, tmp_path):
         assert os.path.isdir(path)
     finally:
         _EPHEMERAL_DIRS.remove(path)
+
+
+class _RecordingJvm:
+    """Stands in for ``spark._jvm``: any package path resolves to itself,
+    so ``...state.StateStore.stop()`` lands in ``stop`` below."""
+
+    def __init__(self):
+        self.stops = 0
+
+    def __getattr__(self, name):
+        return self
+
+    def stop(self):
+        self.stops += 1
+
+
+@pytest.mark.parametrize("active, stops", [([], 1), (["other-query"], 0)])
+def test_state_store_stop_skipped_while_a_query_runs(tmp_path, active, stops):
+    """StateStore.stop() is JVM-global: discarding one replay's checkpoint
+    must not unload the providers of another query that is still running."""
+    from nexmark_vanilla_flink_spark.streaming import runner
+
+    jvm = _RecordingJvm()
+    streams = types.SimpleNamespace(active=active)
+    spark = types.SimpleNamespace(streams=streams, _jvm=jvm)
+    path = str(tmp_path / "ckpt_stub_")
+    os.makedirs(path)
+    runner._discard_ephemeral_dir(path, spark)
+    assert jvm.stops == stops
+    assert not os.path.isdir(path)
 
 
 def test_durable_append_resume_keeps_output(spark, tmp_path):

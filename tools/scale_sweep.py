@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nexmark_vanilla_flink_spark.plans import REGISTRY  # noqa: E402
 from nexmark_vanilla_flink_spark.plans.registry import EAGER_TAGS  # noqa: E402
+from nexmark_vanilla_flink_spark.session import get_session  # noqa: E402
 
 GROWTH_FLAG = float(os.environ.get("SCALE_GROWTH_FLAG", "15"))
 # Entries whose DuckDB oracle is infeasible at the BIG SF (e.g. the
@@ -58,19 +59,10 @@ def main() -> None:
             "scaling_r10.json",
         ),
     )
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("scale_sweep")
-        .getOrCreate()
+    spark = get_session(
+        "scale_sweep",
+        shuffle_partitions=8,
+        extra_confs={"spark.driver.memory": "48g"},
     )
     from nexmark_vanilla_flink_spark.operators.artifacts import (
         ARTIFACT_BUILDERS,
