@@ -9,7 +9,9 @@ round 7 on the dedup corpus index (plans/curation.py); this module is the
 single generalized implementation (VERDICT r8 task 1), used by
 
   * the BPE merge table                     (plans/training.py)
+  * the MinHash signatures                  (plans/pipeline.py)
   * the MinHash dedup corpus index          (plans/curation.py)
+  * the near-dup cluster map                (plans/pipeline.py)
   * the shingle postings + prefix index     (plans/similarity3.py)
   * the co-purchase edge relation           (plans/graph_algos.py)
   * the bigram LM / PMI model tables        (plans/corpus_stats.py)
@@ -34,6 +36,15 @@ Key properties (each fixing a reviewed defect):
     publishes as `artifact_build_sec`, so the one-time index cost stays
     visible next to the steady-state query times (VERDICT r8 "What's
     wrong" #5 / ADVICE r8 low).
+  * **Single flight**: one in-process lock per (name, tag), with `_DONE`
+    re-checked under it, so concurrent requests for the same artifact
+    (bench.py builds every registered artifact at once, and several of
+    them read the MinHash signature artifact) run one build and share its
+    directory instead of racing to publish.
+  * **Dependencies**: an artifact built from another one names it in
+    `requires`; those resolve before the dependent's timer starts, so a
+    dependency's build is logged once, under its own name, and never
+    inside the dependent's seconds.
 """
 
 from __future__ import annotations
@@ -41,9 +52,10 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 import time
 import uuid
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import SparkSession
 
@@ -59,6 +71,10 @@ _BUILD_LOG: list[dict] = []
 # deterministic `artifact_build_sec` regardless of /dev/shm state (the
 # amortization-visibility requirement, VERDICT r8 "What's wrong" #5).
 ARTIFACT_BUILDERS: "dict[str, Callable[[SparkSession, str], str]]" = {}
+
+# (name, tag) -> the lock its builders take, so one build runs per key.
+_BUILD_LOCKS: "dict[tuple[str, str], threading.Lock]" = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
 
 
 def register_artifact(name: str):
@@ -161,6 +177,7 @@ def artifact_dir(
     version: str,
     source_table: str,
     build: Callable[[str], None],
+    requires: "Sequence[Callable[[SparkSession, str], str]]" = (),
 ) -> str:
     """Return the directory of the `name` artifact for the corpus state of
     `source_table` under `sf_dir`, building it (once) if absent.
@@ -168,7 +185,9 @@ def artifact_dir(
     `build(stage_dir)` must write the artifact's parquet table(s) under
     `stage_dir`; publication (the `_DONE` marker + atomic rename) is this
     helper's job. `version` is the builder-logic version — bump it whenever
-    `build`'s semantics change, or a warm host serves stale results."""
+    `build`'s semantics change, or a warm host serves stale results.
+    `requires` lists the dir-functions of artifacts `build` reads; they
+    resolve (building if absent) before this build's timer starts."""
     root = artifact_root(name)
     # version BEFORE the content fingerprint would break prune_stale_cache's
     # `{sf_basename}-` prefix match, so it suffixes: stale-version dirs for
@@ -179,23 +198,32 @@ def artifact_dir(
     out = os.path.join(root, tag)
     if os.path.exists(os.path.join(out, "_DONE")):
         return out
-    stage = os.path.join(root, f".stage_{uuid.uuid4().hex[:8]}")
-    os.makedirs(stage, exist_ok=True)
-    t0 = time.perf_counter()
-    build(stage)
-    open(os.path.join(stage, "_DONE"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)
-        # the intended case is losing a publish race (out is complete);
-        # anything else must raise here, not as an unrelated-looking
-        # read error downstream (ADVICE r8 medium)
-        if not os.path.exists(os.path.join(out, "_DONE")):
-            raise
-    _BUILD_LOG.append(
-        {"name": name, "tag": tag, "sec": round(time.perf_counter() - t0, 3)}
-    )
+    with _BUILD_LOCKS_GUARD:
+        lock = _BUILD_LOCKS.setdefault((name, tag), threading.Lock())
+    with lock:
+        # a concurrent caller may have published while this one waited
+        if os.path.exists(os.path.join(out, "_DONE")):
+            return out
+        for dep in requires:
+            dep(spark, sf_dir)
+        stage = os.path.join(root, f".stage_{uuid.uuid4().hex[:8]}")
+        os.makedirs(stage, exist_ok=True)
+        t0 = time.perf_counter()
+        build(stage)
+        open(os.path.join(stage, "_DONE"), "w").close()
+        try:
+            os.rename(stage, out)
+        except OSError:
+            shutil.rmtree(stage, ignore_errors=True)
+            # the intended case is losing a publish race to another
+            # process (out is complete); anything else must raise here,
+            # not as an unrelated-looking read error downstream (ADVICE r8
+            # medium)
+            if not os.path.exists(os.path.join(out, "_DONE")):
+                raise
+        _BUILD_LOG.append(
+            {"name": name, "tag": tag, "sec": round(time.perf_counter() - t0, 3)}
+        )
     # A purge + rebuild republishes under the SAME content-keyed path with
     # new part-file names; Spark's session FileStatusCache can still hold
     # the previous build's listing and fail reads with FILE_NOT_EXIST

@@ -745,9 +745,10 @@ def _bpe_learn_loop(spark: SparkSession, sf_dir: str):
             words = [
                 (wd, rep.replace(pat, rep_to), cnt) for wd, rep, cnt in words
             ]
-        merged = spark.createDataFrame(
-            words, schema="wd string, rep string, cnt bigint"
-        )
+        from ..operators.vectorized import local_frame
+
+        # through Arrow, not createDataFrame(list): no PythonRDD round trip
+        merged = local_frame(spark, words, "wd string, rep string, cnt bigint")
         return merged, base
     for _ in range(_BPEL_ITERS):
         pairs = (

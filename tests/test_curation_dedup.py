@@ -5,6 +5,8 @@ rule). The oracle-parity suite already locks cross-engine equality; these
 tests pin the *semantics* so a future rewrite can't drift while staying
 self-consistent with its own oracle."""
 
+import re
+
 from nexmark_vanilla_flink_spark.plans import REGISTRY
 
 
@@ -106,3 +108,50 @@ def test_lsh_candidate_pairs_match_full_plan(spark, sf_dir):
     }
     assert len(cand) > 0
     assert cand == full
+
+
+# the shingle projection of the MinHash chain as it prints in an optimized
+# plan: concat_ws over the tokens array indexed by the lambda position
+_SHINGLE = re.compile(r"concat_ws\( , ws#\d+\[lambda j")
+
+_BATCH_MINHASH_CONSUMERS = (
+    "minhash_lsh_pairs",
+    "dedup_clusters",
+    "corpus_curation",
+    "source_dup_matrix",
+    "curation_funnel",
+    "minhash_estimate_error",
+    "incremental_dedup",
+    "quality_label_propagation",
+)
+
+
+def test_batch_minhash_consumers_share_one_derivation(spark, sf_dir):
+    """Every batch MinHash consumer reads the per-corpus signature
+    artifact: from purged roots, running all of them (and the dedup index
+    build) derives the signatures exactly once, and no consumer's plan
+    carries the shingle projection of the chain."""
+    from nexmark_vanilla_flink_spark.operators.artifacts import (
+        pop_build_log,
+        purge_artifact_roots,
+    )
+    from nexmark_vanilla_flink_spark.plans.curation import _corpus_index_dir
+    from nexmark_vanilla_flink_spark.plans.pipeline import _minhash_derive
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    # the pattern does find the chain where it still runs
+    assert _SHINGLE.search(optimized(_minhash_derive(spark, sf_dir)))
+    purge_artifact_roots()
+    pop_build_log()
+    carriers = []
+    for name in _BATCH_MINHASH_CONSUMERS:
+        df = REGISTRY[name].spark(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        if _SHINGLE.search(optimized(df)):
+            carriers.append(name)
+    _corpus_index_dir(spark, sf_dir)
+    builds = [r["name"] for r in pop_build_log()]
+    assert builds.count("minhash_signatures") == 1, builds
+    assert not carriers, carriers

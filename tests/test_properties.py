@@ -217,6 +217,30 @@ def test_connected_components_paths_agree_on_foreign_endpoints(spark):
     assert dist == want
 
 
+def test_connected_components_fast_path_ships_labels_through_arrow(spark):
+    """The driver fast path's union-find label map reaches the plan as a
+    LocalRelation: a createDataFrame(list) relation would show up as a
+    LogicalRDD backed by a PythonRDD, which starts the Python worker
+    daemon just to move the labels."""
+    from nexmark_vanilla_flink_spark.operators.graph import (
+        connected_components,
+    )
+
+    vertices = spark.range(1, 6)
+    edges = spark.range(1).selectExpr(
+        "inline(array(named_struct('src', 2L, 'dst', 99L), "
+        "named_struct('src', 99L, 'dst', 4L), named_struct('src', 1L, 'dst', 3L)))"
+    )
+    out = connected_components(vertices, edges)
+    qe = out._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert "PythonRDD" not in qe.toRdd().toDebugString()
+    assert {(r.id, r.cluster_id) for r in out.collect()} == {
+        (1, 1), (3, 1), (2, 2), (4, 2), (5, 5)
+    }
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.integers(min_value=0, max_value=2**63 - 1))
 def test_murmur3_python_matches_independent_transliteration(key):
