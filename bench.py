@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from nexmark_vanilla_flink_spark.operators.shingles import word_ngrams  # noqa: E402
 from nexmark_vanilla_flink_spark.plans import REGISTRY  # noqa: E402
 from nexmark_vanilla_flink_spark.plans.registry import EAGER_TAGS  # noqa: E402
 from nexmark_vanilla_flink_spark.session import get_session  # noqa: E402
@@ -344,14 +345,8 @@ def prewarm_builder_paths(spark, sf_dir: str) -> None:
         docs = (
             spark.read.parquet(f"{sf_dir}/documents.parquet")
             .limit(256)
-            .select(
-                "doc_id",
-                F.expr(
-                    "transform(sequence(0, greatest(size(split(text,' '))-3,0)),"
-                    " j -> md5(concat_ws(' ', split(text,' ')[j],"
-                    " split(text,' ')[j+1], split(text,' ')[j+2])))"
-                ).alias("hs"),
-            )
+            .select("doc_id", F.split("text", " ").alias("ws"))
+            .select("doc_id", word_ngrams("ws", 3, digest=True).alias("hs"))
             .select("doc_id", F.explode("hs").alias("h"))
         )
         (

@@ -18,7 +18,3 @@ from . import training  # noqa: F401,E402
 from . import graph_algos  # noqa: F401,E402
 from . import similarity3  # noqa: F401,E402
 from . import layout  # noqa: F401,E402
-
-# cross-module oracle wiring that depends on LATER imports: the pii stream
-# twin (streaming_entries) shares the batch oracle registered by curation
-REGISTRY["pii_scrub_stream_replay"].oracle = REGISTRY["pii_scrub"].oracle

@@ -27,6 +27,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.parallelism import ensure_parallelism
+from ..operators.shingles import (
+    _BAND_ROWS,
+    _N_HASHES,
+    band_array,
+    row_signatures,
+    word_ngrams,
+)
 from ..sources.tables import load_table
 from ..operators.artifacts import register_artifact
 from .registry import register
@@ -91,14 +98,7 @@ def eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = ws.select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(ws) >= {_DECON_N} THEN "
-                    f"transform(sequence(0, size(ws) - {_DECON_N}), "
-                    "j -> md5(concat_ws(' ', ws[j], ws[j+1], ws[j+2], ws[j+3]))) "
-                    "ELSE CAST(array() AS ARRAY<STRING>) END"
-                )
-            )
+            F.array_distinct(word_ngrams("ws", _DECON_N, digest=True))
         ).alias("h"),
     )
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
@@ -313,14 +313,7 @@ def doc_bigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ws.select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.expr(
-                    "CASE WHEN size(ws) >= 2 THEN "
-                    "transform(sequence(0, size(ws) - 2), "
-                    "j -> md5(concat_ws(' ', ws[j], ws[j+1]))) "
-                    "ELSE CAST(array() AS ARRAY<STRING>) END"
-                )
-            )
+            F.array_distinct(word_ngrams("ws", 2, digest=True))
         ).alias("h"),
     )
     whf = Window.partitionBy("h").rowsBetween(
@@ -475,12 +468,7 @@ def _corpus_index_dir(spark: SparkSession, sf_dir: str) -> str:
     spec (_N_HASHES/_BAND_ROWS/_NEW_MOD) so a spec change can never serve
     a stale index from a warm host."""
     from ..operators.artifacts import artifact_dir, write_artifact_table
-    from .pipeline import (
-        _BAND_ROWS,
-        _N_HASHES,
-        _minhash_bands,
-        _minhash_signatures_dir,
-    )
+    from .pipeline import _minhash_bands, _minhash_signatures_dir
 
     def _build(stage: str) -> None:
         is_new = F.col("doc_id") % _NEW_MOD == _NEW_MOD - 1
@@ -532,9 +520,10 @@ def incremental_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFra
 
     Streaming-plan notes: the per-doc MinHash signature needs NO
     aggregation on the stream — a document is one row, so each of the 12
-    rotation-mins folds inside the row (array_min over HOF transforms),
-    producing bit-identical signatures to the batch MinHash chain (min
-    over the same string set). Arriving documents are by design not in
+    rotation-mins folds inside the row (``operators.shingles.row_signatures``:
+    array_min over HOF transforms), producing bit-identical signatures to
+    the batch MinHash chain (min over the same string set;
+    tests/test_curation_dedup.py checks it). Arriving documents are by design not in
     the index, so their signatures are computed here per row rather than
     read from the corpus signature artifact. Exact/near hits and a
     self-row per doc union into ONE streaming aggregation (complete mode):
@@ -542,7 +531,6 @@ def incremental_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFra
     needs exactly one."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from .pipeline import _BAND_ROWS, _N_HASHES
     from ..streaming.runner import run_available_now
 
     is_new = F.col("doc_id") % _NEW_MOD == _NEW_MOD - 1
@@ -578,56 +566,9 @@ def incremental_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFra
         # files/Kafka partitions and this shuffle of raw arrival rows is
         # noise next to the signature compute it parallelizes.
         .repartition(8)
-        # split once per ROW: the split(text) used to sit inside the shingle
-        # lambda, re-tokenizing the whole document for every shingle position
-        # (O(tokens²) work per doc on the interpreted HOF path). Projecting
-        # ws/hh in their own stages keeps them materialized — CollapseProject
-        # leaves a projection alone when its output feeds multiple non-cheap
-        # consumer references, so the optimizer cannot inline the split back
-        # into the lambdas. Values are bit-identical (pure CSE): same
-        # shingles, same md5s, same rotations.
-        .withColumn("ws", F.split("text", " "))
-        .withColumn(
-            "hs",
-            F.expr(
-                "CASE WHEN size(ws) >= 3 THEN "
-                "transform(sequence(0, size(ws) - 3), "
-                "j -> md5(concat_ws(' ', ws[j], ws[j+1], ws[j+2]))) "
-                "ELSE CAST(array() AS ARRAY<STRING>) END"
-            ),
-        )
-        # doubled digest once per SHINGLE (was once per shingle x 12 rotations)
-        .withColumn("hh", F.expr("transform(hs, h -> concat(h, h))"))
     )
-    # all 12 rotation-mins in ONE projection (a 12-step withColumn chain costs
-    # 12 analyzer passes per replay construction; same values either way)
-    new = new.select(
-        "doc_id",
-        "text",
-        *[
-            F.expr(f"array_min(transform(hh, h -> substr(h, {s * 2 + 1}, 16)))").alias(
-                f"mh{s}"
-            )
-            for s in range(_N_HASHES)
-        ],
-    )
-    sig_cols = [
-        F.md5(
-            F.array_join(
-                F.array_sort(
-                    F.array(
-                        *[
-                            F.concat(F.lit(f"{s}:"), F.col(f"mh{s}"))
-                            for s in range(b * _BAND_ROWS, (b + 1) * _BAND_ROWS)
-                        ]
-                    )
-                ),
-                "|",
-            )
-        ).alias(f"sig{b}")
-        for b in range(_N_HASHES // _BAND_ROWS)
-    ]
-    new = new.select("doc_id", F.md5("text").alias("dg"), *sig_cols)
+    # signed per ROW by the shared row-local chain (operators/shingles.py)
+    new = row_signatures(new, F.md5("text").alias("dg"))
 
     exact_hits = (
         new.select("doc_id", "dg")
@@ -637,9 +578,7 @@ def incremental_dedup_stream_replay(spark: SparkSession, sf_dir: str) -> DataFra
     near_hits = (
         new.select(
             "doc_id",
-            F.posexplode(
-                F.array(*[F.col(f"sig{b}") for b in range(_N_HASHES // _BAND_ROWS)])
-            ).alias("band", "sig"),
+            F.posexplode(band_array()).alias("band", "sig"),
         )
         .join(corpus_bands, ["band", "sig"])
         .select("doc_id", "c_id", F.lit("near").alias("tag"))

@@ -27,6 +27,14 @@ from pyspark.sql.functions import broadcast
 
 from ..operators.artifacts import read_artifact_table, register_artifact
 from ..operators.parallelism import ensure_parallelism
+from ..operators.shingles import (
+    _BAND_ROWS,
+    _N_HASHES,
+    band_array,
+    band_signatures,
+    rotation,
+    word_ngrams,
+)
 from ..sources.tables import load_table
 from .registry import register
 
@@ -61,9 +69,6 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-duplicate detection
 # ---------------------------------------------------------------------------
-
-_N_HASHES = 12
-_BAND_ROWS = 3  # → 4 bands
 
 _MINHASH_CTES = f"""
 WITH w AS (
@@ -110,48 +115,19 @@ def _minhash_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     through ``_minhash_wide``."""
     docs = load_table(spark, sf_dir, "documents")
     ws = ensure_parallelism(docs).select("doc_id", F.split("text", " ").alias("ws"))
-    g = ws.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(ws) >= 3 THEN "
-                "transform(sequence(0, size(ws) - 3), "
-                "j -> concat_ws(' ', ws[j], ws[j+1], ws[j+2])) "
-                "ELSE CAST(array() AS ARRAY<STRING>) END"
-            )
-        ).alias("g"),
-    )
+    g = ws.select("doc_id", F.explode(word_ngrams("ws", 3)).alias("g"))
     h = g.select("doc_id", F.md5("g").alias("h"))
     rots = h.select(
         "doc_id",
-        *[
-            F.expr(f"substr(concat(h, h), {s * 2 + 1}, 16)").alias(f"r{s}")
-            for s in range(_N_HASHES)
-        ],
+        *[F.expr(rotation("concat(h, h)", s)).alias(f"r{s}") for s in range(_N_HASHES)],
     )
     mins = rots.groupBy("doc_id").agg(
         *[F.min(f"r{s}").alias(f"mh{s}") for s in range(_N_HASHES)]
     )
-    band_sigs = [
-        F.md5(
-            F.array_join(
-                F.array_sort(
-                    F.array(
-                        *[
-                            F.concat(F.lit(f"{s}:"), F.col(f"mh{s}"))
-                            for s in range(b * _BAND_ROWS, (b + 1) * _BAND_ROWS)
-                        ]
-                    )
-                ),
-                "|",
-            )
-        ).alias(f"sig{b}")
-        for b in range(_N_HASHES // _BAND_ROWS)
-    ]
     return mins.select(
         "doc_id",
         F.array(*[F.col(f"mh{s}") for s in range(_N_HASHES)]).alias("arr"),
-        *band_sigs,
+        *band_signatures(),
     )
 
 
@@ -195,9 +171,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key every banded-LSH join matches on."""
     return _minhash_wide(spark, sf_dir).select(
         "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"sig{b}") for b in range(_N_HASHES // _BAND_ROWS)])
-        ).alias("band", "sig"),
+        F.posexplode(band_array()).alias("band", "sig"),
     )
 
 
@@ -362,7 +336,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_BLOCK_CAP = int(os.environ.get("EMB_BLOCK_CAP", "48"))
+# labels above this many vectors sub-cluster one IVF level deeper; both the
+# Spark plan and its oracle SQL read it
+_EMB_BLOCK_CAP = 48
 
 # CTE prefix shared between embedding_neardup_pairs and semdedup_prune (the
 # latter appends centroid-similarity CTEs and a keep/drop verdict on top of
@@ -434,7 +410,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oversized-block guard (VERDICT r4 task 5 — within-block pairing is
     quadratic in the largest block, and a skewed label holding 10% of a
-    100 TB corpus explodes): blocks over EMB_BLOCK_CAP vectors are
+    100 TB corpus explodes): blocks over _EMB_BLOCK_CAP vectors are
     deterministically sub-clustered one IVF level deeper — S =
     ceil(bsize/cap) seed vectors (the S lowest vec_ids, so both engines
     pick identical seeds), every vector assigned to its nearest seed by
@@ -805,6 +781,10 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash16(spark, sf_dir)
 
 
+# buckets above this many docs take the re-banded path (simhash_neardup_pairs)
+_SIMHASH_BUCKET_CAP = 256
+
+
 @register(
     "simhash_neardup_pairs",
     oracle="""
@@ -863,7 +843,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oversized-bucket guard (candidate pairs grow as Σ bucket², and a
     hard-clustering corpus can put most docs in one bucket — measured
     10.5 K → 4.0 M candidates at 64× data before this guard): buckets over
-    SIMHASH_BUCKET_CAP docs are RE-BANDED on the fingerprint bits the band
+    _SIMHASH_BUCKET_CAP docs are RE-BANDED on the fingerprint bits the band
     does NOT cover. Recall stays exact by the same pigeonhole: a pair in the
     bucket already agrees on the band's bits, so its ≤2 differing bits all
     lie in the remaining 21-22 bits — split those into 3 sub-bands and at
@@ -909,16 +889,15 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ELSE (simhash32 >> 22) & 1023 END"
         ),
     )
-    cap = int(os.environ.get("SIMHASH_BUCKET_CAP", "256"))
     banded = banded.withColumn(
         "bsize",
         F.count(F.lit(1)).over(Window.partitionBy("band", "band_val")),
     )
-    small = banded.filter(F.col("bsize") <= cap)
+    small = banded.filter(F.col("bsize") <= _SIMHASH_BUCKET_CAP)
     # the band's complement bits, packed contiguously (21-22 bits), then
     # split 7/7/rest — any in-bucket pair's ≤2 differing bits hit ≥1 sub-band
     big = (
-        banded.filter(F.col("bsize") > cap)
+        banded.filter(F.col("bsize") > _SIMHASH_BUCKET_CAP)
         .withColumn(
             "rem",
             F.expr(
@@ -1051,14 +1030,8 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = staged.select(
         "doc_id",
         F.size("ws").alias("n_tokens"),
-        F.expr(
-            "CASE WHEN size(ws) >= 2 THEN transform(sequence(0, size(ws)-2), "
-            "i -> ws[i] || ' ' || ws[i+1]) ELSE array() END"
-        ).alias("g2"),
-        F.expr(
-            "CASE WHEN size(ws) >= 3 THEN transform(sequence(0, size(ws)-3), "
-            "i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) ELSE array() END"
-        ).alias("g3"),
+        word_ngrams("ws", 2).alias("g2"),
+        word_ngrams("ws", 3).alias("g3"),
     )
     return grams.select(
         "doc_id",
@@ -1220,14 +1193,7 @@ def _winnow_sel(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = ws.select(
         "doc_id",
         F.expr("greatest(size(ws) - 2, 0)").alias("n"),
-        F.posexplode(
-            F.expr(
-                "CASE WHEN size(ws) >= 3 THEN "
-                "transform(sequence(0, size(ws) - 3), "
-                "j -> concat_ws(' ', ws[j], ws[j+1], ws[j+2])) "
-                "ELSE CAST(array() AS ARRAY<STRING>) END"
-            )
-        ).alias("j", "g"),
+        F.posexplode(word_ngrams("ws", 3)).alias("j", "g"),
     )
     o = g.select(
         "doc_id",

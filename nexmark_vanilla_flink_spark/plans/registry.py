@@ -152,13 +152,30 @@ def _ordered_names() -> list[str]:
     return head + [n for n in REGISTRY if n not in in_head]
 
 
+# entries registered with ``oracle_of`` whose source entry has not
+# registered yet, keyed by the source's name
+_WAITING_FOR_ORACLE: dict[str, list[str]] = {}
+
+
 def register(
-    name: str, oracle: str | None = None, tags: tuple[str, ...] = ()
+    name: str,
+    oracle: str | None = None,
+    tags: tuple[str, ...] = (),
+    oracle_of: str | None = None,
 ) -> Callable[[SparkQuery], SparkQuery]:
+    """Register a query. ``oracle_of`` names the entry whose oracle this one
+    shares (a streaming twin of a batch entry); the source may register
+    before or after it."""
+
     def deco(fn: SparkQuery) -> SparkQuery:
-        REGISTRY[name] = Query(
-            name=name, spark=fn, oracle=oracle, tags=tags, doc=(fn.__doc__ or "")
-        )
+        q = Query(name=name, spark=fn, oracle=oracle, tags=tags, doc=(fn.__doc__ or ""))
+        if oracle_of in REGISTRY:
+            q.oracle = REGISTRY[oracle_of].oracle
+        elif oracle_of is not None:
+            _WAITING_FOR_ORACLE.setdefault(oracle_of, []).append(name)
+        REGISTRY[name] = q
+        for twin in _WAITING_FOR_ORACLE.pop(name, ()):
+            REGISTRY[twin].oracle = q.oracle
         return fn
 
     return deco

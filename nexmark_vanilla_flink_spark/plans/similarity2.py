@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..operators.parallelism import ensure_parallelism
+from ..operators.shingles import _N_HASHES, word_ngrams
 from ..sources.tables import load_table
 from .registry import register
 
@@ -1194,7 +1195,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_error_oracle() -> str:
-    from .pipeline import _MINHASH_CTES, _N_HASHES
+    from .pipeline import _MINHASH_CTES
 
     return _MINHASH_CTES + f"""
 , hd AS (SELECT DISTINCT doc_id, h FROM h),
@@ -1266,24 +1267,17 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", "jaccard_est"
     )
 
-    def _sh(col: str) -> str:
-        return (
-            f"array_distinct(CASE WHEN size(split({col}, ' ')) >= 3 THEN "
-            f"transform(sequence(0, size(split({col}, ' ')) - 3), "
-            f"j -> md5(concat_ws(' ', element_at(split({col}, ' '), j + 1), "
-            f"element_at(split({col}, ' '), j + 2), "
-            f"element_at(split({col}, ' '), j + 3)))) "
-            f"ELSE CAST(array() AS ARRAY<STRING>) END)"
-        )
-
     txt = ensure_parallelism(docs).select("doc_id", "text")
     a = txt.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     b = txt.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     joined = (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
-        .withColumn("ha", F.expr(_sh("text_a")))
-        .withColumn("hb", F.expr(_sh("text_b")))
+        # tokens staged once per side, not re-split per shingle position
+        .withColumn("ws_a", F.split("text_a", " "))
+        .withColumn("ws_b", F.split("text_b", " "))
+        .withColumn("ha", F.array_distinct(word_ngrams("ws_a", 3, digest=True)))
+        .withColumn("hb", F.array_distinct(word_ngrams("ws_b", 3, digest=True)))
         .withColumn("co", F.size(F.array_intersect("ha", "hb")))
     )
     exact = joined.select(

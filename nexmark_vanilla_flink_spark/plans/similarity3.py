@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from ..operators.artifacts import read_artifact_table, register_artifact
+from ..operators.shingles import word_ngrams
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -114,14 +115,7 @@ def _postings_index_dir(spark: SparkSession, sf_dir: str) -> str:
         tf_expr = (
             ws.select(
                 "doc_id",
-                F.explode(
-                    F.expr(
-                        "CASE WHEN size(ws) >= 3 THEN "
-                        "transform(sequence(0, size(ws) - 3), "
-                        "j -> concat_ws(' ', ws[j], ws[j+1], ws[j+2])) "
-                        "ELSE CAST(array() AS ARRAY<STRING>) END"
-                    )
-                ).alias("tok"),
+                F.explode(word_ngrams("ws", 3)).alias("tok"),
             )
             .groupBy("doc_id", "tok")
             .agg(F.count(F.lit(1)).alias("tf"))

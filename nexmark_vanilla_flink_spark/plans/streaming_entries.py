@@ -15,15 +15,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import EV_CTE, PERSONS_CTE, AUCTIONS_CTE, BIDS_CTE, with_ctes
-from .registry import REGISTRY, register
-
-def _batch_oracle(name: str) -> str:
-    return REGISTRY[name].oracle
+from .registry import register
 
 
 @register(
     "q5_hot_items_stream_replay",
-    oracle=None,  # assigned below to the batch q5 oracle
+    oracle_of="q5_hot_items",
     tags=("streaming", "nexmark", "agg", "window", "state-store"),
 )
 def q5_hot_items_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,7 +41,7 @@ def q5_hot_items_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sessions_stream_replay",
-    oracle=None,
+    oracle_of="sessions_by_bidder",
     tags=("streaming", "nexmark", "session", "state-store"),
 )
 def sessions_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,10 +107,6 @@ def q8_union_join_lowlevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# wire the shared oracles once the batch plans are registered
-REGISTRY["q5_hot_items_stream_replay"].oracle = _batch_oracle("q5_hot_items")
-REGISTRY["sessions_stream_replay"].oracle = _batch_oracle("sessions_by_bidder")
-
 
 @register(
     "q8_join_stream_replay",
@@ -151,9 +144,7 @@ def q8_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # alternating A/B reads 1.48 s @4 vs 1.77 s @8 min (whole
         # distribution shifted) — the r11 4->8 default flip was this
         # entry's in-sweep regression (docs/adjudication_r12.json)
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", "4")
-        ),
+        shuffle_partitions=4,
     )
     # raw nanos differ across engines (DuckDB reads nano-parquet at µs
     # precision); µs is the exact shared precision
@@ -195,7 +186,7 @@ def qx_interval_join_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "q5_sliding_stream_replay",
-    oracle=None,  # assigned below: shares the batch q5_sliding oracle
+    oracle_of="q5_sliding",
     tags=("streaming", "nexmark", "agg", "sliding", "state-store"),
 )
 def q5_sliding_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,12 +221,10 @@ def q5_sliding_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["q5_sliding_stream_replay"].oracle = _batch_oracle("q5_sliding")
-
 
 @register(
     "q7_highest_bid_stream_replay",
-    oracle=None,  # assigned below: shares the batch nexmark_q7 oracle
+    oracle_of="nexmark_q7_highest_bid",
     tags=("streaming", "nexmark", "agg", "argmax", "state-store"),
 )
 def q7_highest_bid_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,14 +243,10 @@ def q7_highest_bid_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["q7_highest_bid_stream_replay"].oracle = _batch_oracle(
-    "nexmark_q7_highest_bid"
-)
-
 
 @register(
     "cm_stream_replay",
-    oracle=None,  # assigned below: shares the batch cm oracle
+    oracle_of="cm_load_per_job",
     tags=("streaming", "cm", "agg", "state-store"),
 )
 def cm_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,12 +263,10 @@ def cm_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["cm_stream_replay"].oracle = _batch_oracle("cm_load_per_job")
-
 
 @register(
     "sessions_dynamic_gap_stream_replay",
-    oracle=None,  # assigned below: shares the batch sessions_dynamic_gap oracle
+    oracle_of="sessions_dynamic_gap",
     tags=("streaming", "nexmark", "session", "dynamic-gap", "state-store"),
 )
 def sessions_dynamic_gap_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,10 +305,6 @@ def sessions_dynamic_gap_stream_replay(spark: SparkSession, sf_dir: str) -> Data
         no_data_batch=False,  # complete mode: full state re-emitted per batch
     )
 
-
-REGISTRY["sessions_dynamic_gap_stream_replay"].oracle = _batch_oracle(
-    "sessions_dynamic_gap"
-)
 
 
 @register(
@@ -505,6 +484,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_topk_stream_replay",
+    oracle_of="ann_ivf_topk",
     tags=("streaming", "similarity", "ann"),
 )
 def ann_ivf_topk_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -612,11 +592,10 @@ def ann_ivf_topk_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rn", F.row_number().over(w_q)).filter(F.col("rn") <= 5)
 
 
-REGISTRY["ann_ivf_topk_stream_replay"].oracle = _batch_oracle("ann_ivf_topk")
-
 
 @register(
     "pii_scrub_stream_replay",
+    oracle_of="pii_scrub",
     tags=("streaming", "text", "curation"),
 )
 def pii_scrub_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -102,17 +102,29 @@ def load_tables(
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-def events_with_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unified event stream + the derived item key ``k`` from props JSON."""
-    ev = load_table(spark, sf_dir, "events")
+def with_item_key(ev: DataFrame) -> DataFrame:
+    """The events frame plus ``k``, the item key parsed from props JSON.
+    Batch and stream sources both derive it here."""
     return ev.withColumn(
         "k", F.regexp_extract("props", r":\s*([0-9]+)", 1).cast("long")
     )
 
 
+def events_with_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unified event stream + the derived item key ``k`` from props JSON."""
+    return with_item_key(load_table(spark, sf_dir, "events"))
+
+
 def nexmark_streams(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Derive the persons / auctions / bids streams (plus the raw unified
-    stream) from the driver's ``events`` table.
+    stream) from the driver's ``events`` table (``nexmark_frames``)."""
+    return nexmark_frames(events_with_key(spark, sf_dir))
+
+
+def nexmark_frames(ev: DataFrame) -> dict[str, DataFrame]:
+    """Persons / auctions / bids (plus ``ev`` itself) from an events frame
+    that carries ``k`` — batch or streaming, the one derivation both
+    ``nexmark_streams`` and ``streaming.sources.stream_nexmark`` use.
 
     Mirrors of the reference beans (field-for-field where the generic data
     can express them):
@@ -124,8 +136,6 @@ def nexmark_streams(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     (end = ts + fixed duration); we use 3 days to match the testdata's
     month-long event horizon.
     """
-    ev = events_with_key(spark, sf_dir)
-
     persons = ev.filter(F.col("event_type") == "signup").select(
         F.col("event_id").alias("person_id"),
         F.col("user_id"),

@@ -40,14 +40,10 @@ def replay_state_partitions(spark) -> int | None:
     stateful replicas always pinned. At 100 TB the same bytes-per-task
     rule points the OTHER way: size the count UP from state volume
     (state_bytes / ~100-200 MB per store), and the checkpoint bakes the
-    choice in per query. So: honor SPARK_GRAFT_REPLAY_STATE_PARTITIONS if
-    set, default to 8 under a local[*] master, and return None (= keep
+    choice in per query. So: 8 under a local[*] master, and None (= keep
     the session's tuned value) on a real cluster where the session owner
     sized it to the data.
     """
-    env = os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTITIONS")
-    if env:
-        return int(env)
     master = spark.conf.get("spark.master", "")
     if master.startswith("local"):
         return 8
@@ -258,12 +254,8 @@ def run_available_now(
         # drift-cancelled min-of-3 over the six complete-mode replays:
         # 5.34 s @4 vs 5.77 s @8 — 5 of 6 entries faster), while
         # append-mode stateful replays keep 8 (Arrow-batch worker
-        # parallelism, same sweep). Env override still wins above.
-        if (
-            output_mode == "complete"
-            and shuffle_partitions == 8
-            and not os.environ.get("SPARK_GRAFT_REPLAY_STATE_PARTITIONS")
-        ):
+        # parallelism, same sweep).
+        if output_mode == "complete" and shuffle_partitions == 8:
             shuffle_partitions = 4
     saved_parts = None
     if shuffle_partitions is not None:

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import configure_runtime
-from ..sources.tables import NS_PER_SEC, normalize_ts
+from ..sources.tables import nexmark_frames, normalize_ts, with_item_key
 
 # schema-inference cache for the replay source: the footer read is a real
 # Spark job (~0.15-0.3 s) re-paid on every replay construction otherwise.
@@ -39,9 +39,7 @@ def _normalize_events(sdf: DataFrame) -> DataFrame:
     """Normalization shared by every events stream source — the batch
     loader's ts handling (sources.tables.normalize_ts) plus k, the item key
     parsed from props."""
-    return normalize_ts(sdf, "ts").withColumn(
-        "k", F.regexp_extract("props", r":\s*([0-9]+)", 1).cast("long")
-    )
+    return with_item_key(normalize_ts(sdf, "ts"))
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,34 +68,9 @@ def stream_events_dir(spark: SparkSession, dir_path: str, schema) -> DataFrame:
 
 
 def stream_nexmark(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Streaming persons/auctions/bids — same derivation as
-    sources.tables.nexmark_streams but over the file stream."""
-    ev = stream_events(spark, sf_dir)
-    persons = ev.filter(F.col("event_type") == "signup").select(
-        F.col("event_id").alias("person_id"),
-        F.col("user_id"),
-        F.col("ts").alias("p_ts"),
-        F.col("ts_ns").alias("p_ts_ns"),
-    )
-    auctions = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("auction_id"),
-        F.col("user_id").alias("seller_id"),
-        F.col("k").alias("category_id"),
-        F.col("value").alias("initial_price"),
-        F.col("ts").alias("start_ts"),
-        F.col("ts_ns").alias("start_ts_ns"),
-        F.expr("ts + INTERVAL 3 DAYS").alias("end_ts"),
-        (F.col("ts_ns") + F.lit(3 * 86400 * NS_PER_SEC)).alias("end_ts_ns"),
-    )
-    bids = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("bid_id"),
-        F.col("k").alias("item_id"),
-        F.col("user_id").alias("bidder_id"),
-        F.col("value").alias("bid"),
-        F.col("ts").alias("b_ts"),
-        F.col("ts_ns").alias("b_ts_ns"),
-    )
-    return {"events": ev, "persons": persons, "auctions": auctions, "bids": bids}
+    """Streaming persons/auctions/bids — sources.tables.nexmark_frames over
+    the file stream."""
+    return nexmark_frames(stream_events(spark, sf_dir))
 
 
 def _kafka_raw_stream(

@@ -155,3 +155,28 @@ def test_batch_minhash_consumers_share_one_derivation(spark, sf_dir):
     builds = [r["name"] for r in pop_build_log()]
     assert builds.count("minhash_signatures") == 1, builds
     assert not carriers, carriers
+
+
+def test_row_local_signatures_match_the_batch_chain(spark, sf_dir):
+    """The row-local chain that signs streamed arrivals
+    (``operators.shingles.row_signatures``, which
+    ``incremental_dedup_stream_replay`` runs) gives every document the band
+    signatures the batch chain wrote to the ``minhash_signatures``
+    artifact: array_min inside the row and a groupBy min over exploded
+    shingles take the minimum of the same digest rotations."""
+    from pyspark.sql import functions as F
+
+    from nexmark_vanilla_flink_spark.operators.shingles import row_signatures
+    from nexmark_vanilla_flink_spark.plans.pipeline import _minhash_wide
+    from nexmark_vanilla_flink_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # a doc with < 3 tokens has no shingles: no batch row, null row minimums
+    assert docs.filter(F.size(F.split("text", " ")) < 3).count() == 0
+    cols = ["doc_id", "sig0", "sig1", "sig2", "sig3"]
+    row = row_signatures(docs)
+    batch = _minhash_wide(spark, sf_dir).select(*cols)
+    assert row.columns == cols
+    assert row.count() == batch.count() == docs.count() > 0
+    assert row.exceptAll(batch).count() == 0
+    assert batch.exceptAll(row).count() == 0

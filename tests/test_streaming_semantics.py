@@ -129,17 +129,14 @@ def test_configure_runtime_preserves_session_tuning(spark):
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
-def test_replay_state_partitions_defaulting(spark, monkeypatch):
-    """Bounded-replay state sizing: env override wins; local master defaults
-    to 8 (the measured local optimum); a non-local master returns None so
-    the session owner's tuning stands."""
+def test_replay_state_partitions_defaulting(spark):
+    """Bounded-replay state sizing: local master defaults to 8 (the
+    measured local optimum); a non-local master returns None so the
+    session owner's tuning stands."""
     from nexmark_vanilla_flink_spark.streaming.runner import (
         replay_state_partitions,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_REPLAY_STATE_PARTITIONS", "12")
-    assert replay_state_partitions(spark) == 12
-    monkeypatch.delenv("SPARK_GRAFT_REPLAY_STATE_PARTITIONS")
     assert spark.conf.get("spark.master").startswith("local")
     assert replay_state_partitions(spark) == 8
 

@@ -5,8 +5,11 @@
         --suffix after --sf /root/testdata/sf0.1 name1 name2 ...
 
 Used for the per-round before/after plan evidence (`plans/r12/<q>_before.txt`
-/ `_after.txt`): run once with --repo pointed at a worktree of the previous
-round's snapshot (before) and once at HEAD (after). Streaming/sink entries
+/ `_after.txt`): run once with --repo pointed at a checkout of the previous
+round's snapshot (before) and once at HEAD (after). Volatile ids are scrubbed
+with `tools/gen_explains.py`'s `_clean` and the header does not name the
+suffix, so an unchanged plan gives byte-identical files: `diff` the pair.
+Streaming/sink entries
 execute their replay at construction time and return the sink read-back
 DataFrame; for those the captured plan is the read-back scan and the header
 says so — the optimization evidence for replays is runtime config + timings,
@@ -19,6 +22,8 @@ import argparse
 import os
 import sys
 import traceback
+
+from gen_explains import _clean
 
 
 def main() -> None:
@@ -63,7 +68,7 @@ def main() -> None:
             )
             eager = set(q.tags) & {"streaming", "sink", "iterative", "eager"}
             hdr = [
-                f"# {name} ({args.suffix}) — explain('formatted') at "
+                f"# {name} — explain('formatted') at "
                 f"{args.sf}, shuffle.partitions=8",
                 f"# tags: {','.join(q.tags) or '-'}",
             ]
@@ -75,7 +80,7 @@ def main() -> None:
                     "evidence lives in bench timings, not this plan shape."
                 )
             with open(path, "w") as f:
-                f.write("\n".join(hdr) + "\n\n" + txt)
+                f.write("\n".join(hdr) + "\n\n" + _clean(txt))
             print(f"wrote {path}", flush=True)
         except Exception as ex:  # noqa: BLE001
             with open(path, "w") as f:

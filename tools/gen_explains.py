@@ -12,10 +12,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from nexmark_vanilla_flink_spark.plans import REGISTRY  # noqa: E402
-from nexmark_vanilla_flink_spark.session import get_session  # noqa: E402
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 FLAGSHIPS = {
     "q5_hot_items": "one hash-partition shuffle on (item, window); partial "
@@ -193,6 +190,12 @@ def _clean(plan: str) -> str:
 
 
 def main() -> None:
+    # imported here, so tools/explain_snap.py can import _clean without
+    # loading this checkout's package in place of the one it snapshots
+    sys.path.insert(0, REPO)
+    from nexmark_vanilla_flink_spark.plans import REGISTRY
+    from nexmark_vanilla_flink_spark.session import get_session
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_session("gen-explains", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
