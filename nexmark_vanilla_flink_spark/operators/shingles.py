@@ -40,6 +40,20 @@ def word_ngrams(ws: str, n: int, digest: bool = False) -> Column:
     )
 
 
+def word_chunks(ws: str, w: int, digest: bool = False) -> Column:
+    """The tokens of the array column ``ws`` cut into consecutive
+    non-overlapping runs of ``w`` (the last one holds the remainder), each
+    joined by single spaces (or its md5 with ``digest``), in position
+    order."""
+    chunk = f"concat_ws(' ', slice({ws}, j * {w} + 1, {w}))"
+    if digest:
+        chunk = f"md5({chunk})"
+    return F.expr(
+        f"transform(sequence(0, CAST(ceil(size({ws}) / {w}.0) AS INT) - 1), "
+        f"j -> {chunk})"
+    )
+
+
 def rotation(doubled: str, s: int) -> str:
     """SQL text of rotation ``s``: the 16 hex chars (8 bytes) at byte
     offset ``s`` of the doubled 32-char digest ``doubled``."""

@@ -32,6 +32,7 @@ from ..operators.shingles import (
     _N_HASHES,
     band_array,
     row_signatures,
+    word_chunks,
     word_ngrams,
 )
 from ..sources.tables import load_table
@@ -168,12 +169,7 @@ def chunk_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = ws.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, CAST(ceil(size(ws) / {_CHUNK_W}.0) AS INT) - 1), "
-                f"j -> md5(concat_ws(' ', slice(ws, j * {_CHUNK_W} + 1, {_CHUNK_W}))))"
-            )
-        ).alias("h"),
+        F.explode(word_chunks("ws", _CHUNK_W, digest=True)).alias("h"),
     )
     # distinct-doc count per digest via one sorted window pass: dense_rank
     # over doc_id hits its max (= the distinct count) on the last row, read
@@ -671,12 +667,7 @@ def chunk_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = ws.select(
         "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, CAST(ceil(size(ws) / {_CHUNK_W}.0) AS INT) - 1), "
-                f"j -> concat_ws(' ', slice(ws, j * {_CHUNK_W} + 1, {_CHUNK_W})))"
-            )
-        ).alias("j", "chunk"),
+        F.posexplode(word_chunks("ws", _CHUNK_W)).alias("j", "chunk"),
     )
     w_occ = Window.partitionBy(F.md5("chunk")).orderBy("doc_id", "j")
     ranked = c.select(

@@ -1460,6 +1460,10 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-style approximate nearest neighbor (the similarity-search scale path)
 # ---------------------------------------------------------------------------
 
+# codebook rows up to which the coarse assignment scores against a
+# driver-side numpy codebook (else the distributed interpreted fold)
+_IVF_DRIVER_CODEBOOK_CAP = 200_000
+
 _IVF_ORACLE = """
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -1597,10 +1601,9 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
         # identical on BOTH the score table and the final assignment;
         # isolated min-of-2 x2 alternating: 0.76/0.67 -> 0.44/0.34 s.
         # The distributed interpreted-fold branch is kept for codebooks
-        # past the driver cap (env-overridable; forced-branch parity in
+        # past _IVF_DRIVER_CODEBOOK_CAP (forced-branch parity in
         # tests/test_strategy_switches.py).
-        cap = int(os.environ.get("SPARK_GRAFT_IVF_DRIVER_CODEBOOK_CAP", "200000"))
-        if c.count() <= cap:
+        if c.count() <= _IVF_DRIVER_CODEBOOK_CAP:
             import numpy as np
 
             crows = sorted(c.collect(), key=lambda r: r["c_id"])

@@ -21,8 +21,6 @@ identical aliases in both engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -592,6 +590,9 @@ def temporal_holdout_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPEL_ITERS = 6
 _BPEL_MIN_FREQ = 25
+# vocab rows up to which the merges run in the driver loop (else the
+# distributed per-merge loop)
+_BPE_DRIVER_VOCAB_CAP = 2_000_000
 
 # Symbol sequences travel as "(s1)(s2)...(sn)" strings: each symbol is
 # individually delimited, so applying merge (a, b) is a plain non-regex
@@ -712,23 +713,22 @@ def _bpe_learn_loop(spark: SparkSession, sf_dir: str):
     # iterates over the distinct-WORD frequency table, not the corpus — the
     # standard tokenizer-trainer shape (sentencepiece/HF BPE collapse the
     # corpus to word counts distributed, then train the merges single-node
-    # over that bounded table). When the vocab fits the driver (cap
-    # overridable via SPARK_GRAFT_BPE_DRIVER_VOCAB_CAP; even a web-scale
-    # corpus's lowercase-alpha vocab is tens of millions of rows), the six
-    # greedy merges run in pure Python: pair sums are exact ints, the
-    # argmax tie-break (s DESC, a ASC, b ASC) is the same tuple order, and
+    # over that bounded table). When the vocab fits the driver
+    # (_BPE_DRIVER_VOCAB_CAP; even a web-scale corpus's lowercase-alpha
+    # vocab is tens of millions of rows), the six greedy merges run in
+    # pure Python: pair sums are exact ints, the argmax tie-break (s DESC,
+    # a ASC, b ASC) is the same tuple order, and
     # str.replace substitutes non-overlapping left-to-right exactly like
     # Spark/DuckDB replace — bit-identical merges without six
     # pair-explode + argmax job barriers per build. The distributed
     # per-merge loop below remains the over-cap branch.
-    cap = int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB_CAP", "2000000"))
     # branch decision by count(), NOT by collecting cap+1 rows (VERDICT r12
     # task 5: the old limit(cap+1).collect() probe shipped up to 2M rows to
     # the driver even when the answer was "take the distributed branch" —
     # a pointless ~100 MB driver transfer at scale). count() materializes
     # the cache and moves one long; rows are collected only on the branch
     # that actually needs them.
-    if cur.count() <= cap:
+    if cur.count() <= _BPE_DRIVER_VOCAB_CAP:
         words = [(r["wd"], r["rep"], r["cnt"]) for r in cur.collect()]
         for _ in range(_BPEL_ITERS):
             pc: dict[tuple[str, str], int] = {}

@@ -133,15 +133,21 @@ def _discard_ephemeral_dir(path: str, spark=None) -> None:
     into the checkpoint's state/ tree, silently recreating the dir we
     just deleted (the tests_ok=false flake in VERIFY_r12). Fix, in order:
 
-    1. ``StateStore.stop()`` (the hook Spark's own StreamTest suite uses
-       between tests): synchronously unloads every provider and stops the
-       maintenance task, so nothing can write into the dir afterwards.
-       Providers for a discarded ephemeral checkpoint are garbage anyway —
-       every replay gets a fresh checkpoint path, so no provider is ever
-       reused — and the maintenance task restarts lazily on the next
-       stateful query's first StateStore.get(). The stop is JVM-global, so
-       it runs only when no streaming query is active: it would unload a
-       running query's providers too.
+    1. Unload every state-store provider and stop the maintenance task
+       (``StateStore.unloadAll()`` then
+       ``stopMaintenanceTaskWithoutLock()``), so nothing can write into
+       the dir afterwards. Providers for a discarded ephemeral checkpoint
+       are garbage anyway — every replay gets a fresh checkpoint path, so
+       no provider is ever reused — and the maintenance task restarts
+       lazily on the next stateful query's first StateStore.get(). Not
+       ``StateStore.stop()``: it holds the ``loadedProviders`` monitor
+       while it awaits the maintenance pool, whose threads block on that
+       same monitor, so every stop waited out
+       ``stateStore.maintenanceShutdownTimeout``. The two calls here
+       release the monitor before the pool is awaited. Both are
+       JVM-global, so they run only when no streaming query is active:
+       they would unload a running query's providers too. A failure warns
+       (the atexit sweep still backstops the dir).
     2. rmtree, then a bounded verify-retry: if an in-flight write won the
        interleave and the dir survived/reappeared, re-delete. The loop
        exits immediately on the (normal) first success — zero added
@@ -152,12 +158,18 @@ def _discard_ephemeral_dir(path: str, spark=None) -> None:
     if spark is not None:
         try:
             if not spark.streams.active:
-                jvm_ss = (
-                    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
-                )
-                jvm_ss.stop()
-        except Exception:
-            pass  # cleanup is best-effort; atexit still backstops
+                # neither method has a static forwarder on StateStore: call
+                # them on the Scala object itself
+                pkg = spark._jvm.org.apache.spark.sql.execution.streaming.state
+                store = getattr(getattr(pkg, "StateStore$"), "MODULE$")
+                store.unloadAll()
+                store.stopMaintenanceTaskWithoutLock()
+        except Exception as exc:
+            warnings.warn(
+                f"state-store unload before removing {path} failed: {exc!r}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     shutil.rmtree(path, ignore_errors=True)
     for _ in range(20):
         if not os.path.isdir(path):

@@ -123,23 +123,28 @@ def test_surviving_checkpoint_warns_and_stays_registered(monkeypatch, tmp_path):
 
 
 class _RecordingJvm:
-    """Stands in for ``spark._jvm``: any package path resolves to itself,
-    so ``...state.StateStore.stop()`` lands in ``stop`` below."""
+    """Stands in for ``spark._jvm``: any package path, class or field
+    resolves to itself, so ``...state.StateStore$.MODULE$.unloadAll()``
+    lands in ``unloadAll`` below."""
 
     def __init__(self):
-        self.stops = 0
+        self.calls = []
 
     def __getattr__(self, name):
         return self
 
-    def stop(self):
-        self.stops += 1
+    def unloadAll(self):
+        self.calls.append("unloadAll")
+
+    def stopMaintenanceTaskWithoutLock(self):
+        self.calls.append("stopMaintenanceTaskWithoutLock")
 
 
 @pytest.mark.parametrize("active, stops", [([], 1), (["other-query"], 0)])
 def test_state_store_stop_skipped_while_a_query_runs(tmp_path, active, stops):
-    """StateStore.stop() is JVM-global: discarding one replay's checkpoint
-    must not unload the providers of another query that is still running."""
+    """Unloading the state store is JVM-global: discarding one replay's
+    checkpoint must not unload the providers of another query that is
+    still running."""
     from nexmark_vanilla_flink_spark.streaming import runner
 
     jvm = _RecordingJvm()
@@ -148,7 +153,7 @@ def test_state_store_stop_skipped_while_a_query_runs(tmp_path, active, stops):
     path = str(tmp_path / "ckpt_stub_")
     os.makedirs(path)
     runner._discard_ephemeral_dir(path, spark)
-    assert jvm.stops == stops
+    assert jvm.calls == ["unloadAll", "stopMaintenanceTaskWithoutLock"] * stops
     assert not os.path.isdir(path)
 
 

@@ -41,37 +41,37 @@ def test_kcore_distributed_branch_matches_local_peel(spark, sf_dir, monkeypatch)
 
 
 def test_bpe_distributed_branch_matches_driver_loop(spark, sf_dir, monkeypatch):
-    """bpe_vocab: cap=0 forces the distributed per-merge loop; the
-    resulting merge table must be row-identical to the driver-loop build
+    """bpe_vocab: a zero vocab cap forces the distributed per-merge loop;
+    the resulting merge table must be row-identical to the driver-loop build
     (same greedy argmax, same tie-break, same replace semantics)."""
     from nexmark_vanilla_flink_spark.operators.artifacts import (
         purge_artifact_roots,
         read_artifact_table,
     )
+    from nexmark_vanilla_flink_spark.plans import training
     from nexmark_vanilla_flink_spark.plans.training import _bpe_vocab_dir
 
-    monkeypatch.delenv("SPARK_GRAFT_BPE_DRIVER_VOCAB_CAP", raising=False)
     purge_artifact_roots()
     driver_rows = _rows(
         read_artifact_table(spark, _bpe_vocab_dir(spark, sf_dir), "vocab")
     )
     assert driver_rows  # the trainer produced a non-empty merge table
 
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_VOCAB_CAP", "0")
+    monkeypatch.setattr(training, "_BPE_DRIVER_VOCAB_CAP", 0)
     purge_artifact_roots()
     dist_rows = _rows(
         read_artifact_table(spark, _bpe_vocab_dir(spark, sf_dir), "vocab")
     )
     # leave a valid artifact behind for any later test in the session
-    monkeypatch.delenv("SPARK_GRAFT_BPE_DRIVER_VOCAB_CAP", raising=False)
+    monkeypatch.undo()
     purge_artifact_roots()
 
     assert dist_rows == driver_rows
 
 
 def test_ivf_distributed_branch_matches_arrow_assign(spark, sf_dir, monkeypatch):
-    """ivf_index (r13): cap=0 forces the distributed interpreted-fold
-    coarse assignment; the assign table must be row-identical to the
+    """ivf_index (r13): a zero codebook cap forces the distributed
+    interpreted-fold coarse assignment; the assign table must be row-identical to the
     Arrow-vectorized driver-codebook branch (ascending-dimension numpy
     accumulation == the sequential fold; round + struct-argmin shared
     JVM-side)."""
@@ -79,21 +79,21 @@ def test_ivf_distributed_branch_matches_arrow_assign(spark, sf_dir, monkeypatch)
         purge_artifact_roots,
         read_artifact_table,
     )
+    from nexmark_vanilla_flink_spark.plans import pipeline
     from nexmark_vanilla_flink_spark.plans.pipeline import _ivf_index_dir
 
-    monkeypatch.delenv("SPARK_GRAFT_IVF_DRIVER_CODEBOOK_CAP", raising=False)
     purge_artifact_roots()
     arrow_rows = _rows(
         read_artifact_table(spark, _ivf_index_dir(spark, sf_dir), "assign")
     )
     assert arrow_rows  # non-empty assignment at this SF
 
-    monkeypatch.setenv("SPARK_GRAFT_IVF_DRIVER_CODEBOOK_CAP", "0")
+    monkeypatch.setattr(pipeline, "_IVF_DRIVER_CODEBOOK_CAP", 0)
     purge_artifact_roots()
     dist_rows = _rows(
         read_artifact_table(spark, _ivf_index_dir(spark, sf_dir), "assign")
     )
-    monkeypatch.delenv("SPARK_GRAFT_IVF_DRIVER_CODEBOOK_CAP", raising=False)
+    monkeypatch.undo()
     purge_artifact_roots()
 
     assert dist_rows == arrow_rows

@@ -16,10 +16,10 @@ Output JSON (SCALE_SWEEP_OUT, default docs/scaling_r9.json):
   the measured per-query floor — sub-second entries are floor-dominated
   and a 10x data growth inside one task shows up as ~1x wall).
 
-Timing discipline mirrors bench.py: lazy entries time the save with
-construction outside; one untimed warmup save; min-of-2 timed saves.
-Hash compare runs ONCE per (query, sf) — the sweep is a correctness
-gate first, a wall table second.
+Timing is bench.py's: its floor_batch for the per-query floor, its
+time_entry per sample (min of 2 for lazy entries, one for eager ones) and
+its after_entry between entries. Hash compare runs ONCE per (query, sf) —
+the sweep is a correctness gate first, a wall table second.
 """
 
 from __future__ import annotations
@@ -31,11 +31,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import after_entry, floor_batch, time_entry  # noqa: E402
 from nexmark_vanilla_flink_spark.plans import REGISTRY  # noqa: E402
 from nexmark_vanilla_flink_spark.plans.registry import EAGER_TAGS  # noqa: E402
 from nexmark_vanilla_flink_spark.session import get_session  # noqa: E402
 
-GROWTH_FLAG = float(os.environ.get("SCALE_GROWTH_FLAG", "15"))
+# 10x data on 32 local cores: perfectly linear work with fixed overheads
+# lands well under 10x wall; 15x flags genuinely superlinear growth.
+GROWTH_FLAG = 15.0
 # Entries whose DuckDB oracle is infeasible at the BIG SF (e.g. the
 # triangle-count oracle's wedge join spills more temp than the disk holds
 # at 10x): record Spark rows only, with an explicit note. The exemption
@@ -45,8 +48,6 @@ GROWTH_FLAG = float(os.environ.get("SCALE_GROWTH_FLAG", "15"))
 ROWS_ONLY = set(
     filter(None, os.environ.get("SCALE_ROWS_ONLY", "").split(","))
 )
-# 10x data on 32 local cores: perfectly linear work with fixed overheads
-# lands well under 10x wall; 15x flags genuinely superlinear growth.
 
 
 def main() -> None:
@@ -101,26 +102,13 @@ def main() -> None:
         for r in done.values():
             r.setdefault("floor_s", prior_sweep.get("floor_s"))
             r["resumed"] = True
-        # floor: the fixed per-query cost at this session state — min-of-5
-        # after warmups, re-measured at phase END with the min kept
-        # (bench.py's r7 lesson, learned here the hard way in r10: ONE
-        # start-of-phase sample landed on transient host contention at
-        # 0.832 s vs the ~0.09 s typical, clamping every sub-second
-        # entry's net to the 0.05 denominator and flagging 53 entries as
-        # "superlinear")
-        def _floor() -> float:
-            fl = spark.range(1)
-            for _ in range(3):
-                fl.write.format("noop").mode("overwrite").save()
-            best = None
-            for _ in range(5):
-                t0 = time.perf_counter()
-                fl.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            return best
-
-        floor_s = _floor()
+        # floor: the fixed per-query cost at this session state, re-measured
+        # at phase END with the min kept (bench.py's r7 lesson, learned here
+        # the hard way in r10: ONE start-of-phase sample landed on transient
+        # host contention at 0.832 s vs the ~0.09 s typical, clamping every
+        # sub-second entry's net to the 0.05 denominator and flagging 53
+        # entries as "superlinear")
+        floor_s = floor_batch(spark)
 
         for fn in ARTIFACT_BUILDERS.values():
             fn(spark, sf_dir)
@@ -139,24 +127,11 @@ def main() -> None:
             q = REGISTRY[name]
             rec: dict = {}
             try:
-                eager = bool(EAGER_TAGS & set(q.tags))
-                if eager:
-                    t0 = time.perf_counter()
-                    df = q.spark(spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    spark_s = time.perf_counter() - t0
-                else:
-                    df = q.spark(spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    spark.catalog.clearCache()
-                    spark_s = None
-                    for _ in range(2):
-                        t0 = time.perf_counter()
-                        df.write.format("noop").mode("overwrite").save()
-                        dt = time.perf_counter() - t0
-                        spark_s = dt if spark_s is None else min(spark_s, dt)
-                        spark.catalog.clearCache()
-                rec["spark_s"] = round(spark_s, 3)
+                samples = 1 if EAGER_TAGS & set(q.tags) else 2
+                spark_s = min(
+                    time_entry(spark, sf_dir, name) for _ in range(samples)
+                )
+                rec["spark_s"] = spark_s
                 rec["floor_s"] = round(floor_s, 3)
                 if q.oracle and name in ROWS_ONLY and sf_dir == sf_dirs[-1]:
                     # UNVERIFIED at this SF: match=None keeps it out of the
@@ -189,15 +164,9 @@ def main() -> None:
                 rec["error"] = f"{type(exc).__name__}: {exc}"[:400]
                 rec["match"] = False
             sweep["queries"][name] = rec
-            spark.catalog.clearCache()
-            # free tmpfs replay-sink scratch between entries (r11: the 10x
-            # phase filled /dev/shm by entry #146 and every later DuckDB
-            # compare OOM'd — one root cause, 33 cascade rows)
-            from nexmark_vanilla_flink_spark.streaming.runner import (
-                reclaim_replay_sinks,
-            )
-
-            reclaim_replay_sinks()
+            # r11: without the replay-sink reclaim the 10x phase filled
+            # /dev/shm by entry #146 and every later DuckDB compare OOM'd
+            after_entry(spark)
             stray = pop_build_log()
             if stray:
                 rec["artifact_builds_in_query"] = stray
@@ -211,7 +180,7 @@ def main() -> None:
         # end-of-phase floor re-measure, min kept; every record timed by
         # THIS session gets the corrected value (resumed records keep the
         # floor of the session that timed them)
-        floor_start, floor_end = floor_s, _floor()
+        floor_start, floor_end = floor_s, floor_batch(spark)
         sweep["floor_start_end"] = [round(floor_start, 3), round(floor_end, 3)]
         if floor_end < floor_start:
             # back-patch ONLY records this session timed (ADVICE r10 low:
