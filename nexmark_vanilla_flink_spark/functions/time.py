@@ -15,6 +15,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 NS_PER_SEC = 1_000_000_000
+HOUR_S = 3600
+DAY_S = 86400
+HOUR_NS = HOUR_S * NS_PER_SEC
+DAY_NS = DAY_S * NS_PER_SEC
 
 
 def bucket_start_s(ns_col: str, width_s: int) -> Column:

@@ -3,7 +3,6 @@ from .registry import REGISTRY, Query, register, all_queries, all_oracles  # noq
 # importing the plan modules populates the registry
 from . import nexmark  # noqa: F401,E402
 from . import nexmark_suite  # noqa: F401,E402
-from . import nexmark_suite2  # noqa: F401,E402
 from . import tpch  # noqa: F401,E402
 from . import pipeline  # noqa: F401,E402
 from . import analytics  # noqa: F401,E402

@@ -9,10 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import sum_dbl
+from ..functions.time import DAY_NS
 from ..sources.tables import load_table, load_tables
 from .registry import register
-
-_DEC = "decimal(18,4)"
 
 
 @register(
@@ -33,7 +33,7 @@ def orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast(_DEC)).cast("decimal(38,4)").cast("double").alias("sum_total"),
+        sum_dbl("o_totalprice", "sum_total"),
     )
 
 
@@ -85,10 +85,7 @@ def hot_items_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(bids, dim, on="item_id", salt=16)
     return joined.groupBy("item_id", "item_tier").agg(
         FF.count(FF.lit(1)).alias("n_bids"),
-        FF.sum(FF.col("bid").cast("decimal(18,4)"))
-        .cast("decimal(38,4)")
-        .cast("double")
-        .alias("sum_bid"),
+        sum_dbl("bid", "sum_bid"),
     )
 
 
@@ -113,14 +110,11 @@ def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     wants. dow is pure integer arithmetic (epoch day 0 = Thursday → +4)."""
     ev = load_table(spark, sf_dir, "events")
     return (
-        ev.withColumn("dow", F.expr("(ts_ns DIV 86400000000000 + 4) % 7"))
+        ev.withColumn("dow", F.expr(f"(ts_ns DIV {DAY_NS} + 4) % 7"))
         .cube("event_type", "dow")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("decimal(38,4)")
-            .cast("double")
-            .alias("sum_value"),
+            sum_dbl("value", "sum_value"),
         )
     )
 
@@ -178,7 +172,7 @@ def nation_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.countDistinct("c_mktsegment").alias("n_segments"),
             F.count(F.lit(1)).alias("n_customers"),
-            F.sum(F.col("c_acctbal").cast(_DEC)).cast("decimal(38,4)").cast("double").alias("sum_acctbal"),
+            sum_dbl("c_acctbal", "sum_acctbal"),
         )
     )
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..functions.exact import dec
 from ..operators.parallelism import ensure_parallelism
 from ..sources.tables import load_table
 from ..operators.artifacts import read_artifact_table, register_artifact
@@ -268,7 +269,7 @@ def value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/variance, which is also the numerically honest one (a single
     Welford pass isn't expressible declaratively AND exactly)."""
     ev = ensure_parallelism(load_table(spark, sf_dir, "events"))
-    vd = F.col("value").cast("decimal(18,4)")
+    vd = dec("value")
     m = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(vd).cast("double").alias("s"),
@@ -619,7 +620,7 @@ def user_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     wr = w.rowsBetween(-4, 0)
-    vd = F.col("value").cast("decimal(18,4)")
+    vd = dec("value")
     return e.select(
         "user_id",
         "event_id",

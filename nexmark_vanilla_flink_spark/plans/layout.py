@@ -30,9 +30,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum, sum_dbl
+from ..functions.time import DAY_NS
 from ..operators.bucketing import write_bucketed
 from ..sources.tables import load_table
 from .registry import register
+from .tpch import disc_price
 
 # ---------------------------------------------------------------------------
 # bucketed_colocated_join — pay the shuffle at write time, join exchange-free
@@ -131,13 +134,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,4)")
-                * (F.lit(1) - F.col("l_discount")).cast("decimal(18,4)")
-            )
-            .cast("decimal(38,4)")
-            .cast("double")
-            .alias("revenue"),
+            exact_sum(disc_price()).cast("double").alias("revenue"),
         )
     )
 
@@ -271,12 +268,9 @@ def partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         part.filter(F.col("event_type") == "purchase")
         # integer DIV, not `/`: double division loses exactness above 2^53
         # and epoch-nanos live there
-        .groupBy(F.expr("ts_ns DIV 86400000000000").alias("day"))
+        .groupBy(F.expr(f"ts_ns DIV {DAY_NS}").alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("decimal(38,4)")
-            .cast("double")
-            .alias("total_value"),
+            sum_dbl("value", "total_value"),
         )
     )

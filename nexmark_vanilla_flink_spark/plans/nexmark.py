@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.time import NS_PER_SEC, bucket_start_s, epoch_s
+from ..functions.exact import avg_dbl, sum_dbl
+from ..functions.time import DAY_NS, DAY_S, HOUR_S, NS_PER_SEC, bucket_start_s, epoch_s
 from ..sources.tables import (
     AUCTIONS_CTE,
     BIDS_CTE,
@@ -32,23 +33,6 @@ from ..sources.tables import (
     with_ctes,
 )
 from .registry import register
-
-HOUR_S = 3600
-DAY_S = 86400
-
-_DEC = "decimal(18,4)"
-
-
-def _sum_dbl(col: str, alias: str) -> F.Column:
-    # exact associative sum: DOUBLE → DECIMAL(18,4) → SUM → DOUBLE
-    return F.sum(F.col(col).cast(_DEC)).cast("decimal(38,4)").cast("double").alias(alias)
-
-
-def _avg_dbl(col: str, alias: str) -> F.Column:
-    return (
-        F.sum(F.col(col).cast(_DEC)).cast("decimal(38,4)").cast("double") / F.count(F.lit(1))
-    ).alias(alias)
-
 
 # ---------------------------------------------------------------------------
 # Q5 — hot items: per-item windowed max(bid) + count
@@ -212,6 +196,35 @@ def q11_user_bids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def auction_bids(s: dict[str, DataFrame]) -> DataFrame:
+    """Every (auction, bid) pair whose bid lands in the auction's
+    [start, end) lifetime on the item key — the interval join under qx,
+    q4/q6 and q9, each of which keeps only its own ``max_by``.
+
+    Bucketed range join: the raw item key has only ~100 distinct values —
+    a skew disaster at scale. Exploding each auction into the day buckets
+    its [start, end) lifetime covers turns the join into an equi-join on
+    (item, day): ~31× the key cardinality, and candidate bids are
+    time-pruned to ±1 bucket instead of the whole month. Each (auction,
+    bid) pair matches in exactly one bucket (the bid's own), so no dedup
+    is needed."""
+    a = s["auctions"].withColumn(
+        "day_bucket",
+        F.explode(
+            F.expr(f"sequence(start_ts_ns DIV {DAY_NS}, (end_ts_ns - 1) DIV {DAY_NS})")
+        ),
+    )
+    b = s["bids"].withColumn("day_bucket", F.expr(f"b_ts_ns DIV {DAY_NS}"))
+    return a.join(
+        b,
+        (b.item_id == a.category_id)
+        & (a.day_bucket == b.day_bucket)
+        & (b.b_ts_ns >= a.start_ts_ns)
+        & (b.b_ts_ns < a.end_ts_ns),
+        "inner",
+    )
+
+
 @register(
     "qx_winning_bids",
     oracle=with_ctes(EV_CTE, AUCTIONS_CTE, BIDS_CTE)
@@ -242,33 +255,7 @@ def qx_winning_bids(spark: SparkSession, sf_dir: str) -> DataFrame:
     [start, end) lifetime on the item key; winner = latest bid (ties broken by
     bid_id). Implemented as hash equi-join (item key) with range residual +
     single-pass max_by aggregation — no global sort, scales linearly."""
-    s = nexmark_streams(spark, sf_dir)
-    b = s["bids"]
-    # Bucketed range join: the raw item key has only ~100 distinct values —
-    # a skew disaster at scale. Exploding each auction into the day buckets
-    # its [start, end) lifetime covers turns the join into an equi-join on
-    # (item, day): ~31× the key cardinality, and candidate bids are
-    # time-pruned to ±1 bucket instead of the whole month. Each (auction,
-    # bid) pair matches in exactly one bucket (the bid's own), so no dedup
-    # is needed.
-    a = s["auctions"].withColumn(
-        "day_bucket",
-        F.explode(
-            F.expr(
-                f"sequence(start_ts_ns DIV {DAY_S * NS_PER_SEC}, "
-                f"(end_ts_ns - 1) DIV {DAY_S * NS_PER_SEC})"
-            )
-        ),
-    )
-    b = b.withColumn("day_bucket", F.expr(f"b_ts_ns DIV {DAY_S * NS_PER_SEC}"))
-    joined = a.join(
-        b,
-        (b.item_id == a.category_id)
-        & (a.day_bucket == b.day_bucket)
-        & (b.b_ts_ns >= a.start_ts_ns)
-        & (b.b_ts_ns < a.end_ts_ns),
-        "inner",
-    )
+    joined = auction_bids(nexmark_streams(spark, sf_dir))
     win = F.max_by(
         F.struct("bid_id", "bid", "b_ts_ns"),
         F.struct(F.col("b_ts_ns"), F.col("bid_id")),
@@ -377,7 +364,7 @@ def cm_load_per_job(spark: SparkSession, sf_dir: str) -> DataFrame:
             bucket_start_s("ts_ns", 600).alias("w_start_s"),
         )
         .agg(
-            _sum_dbl("value", "total_cpu"),
+            sum_dbl("value", "total_cpu"),
             F.count(F.lit(1)).alias("n_records"),
         )
     )
@@ -459,8 +446,8 @@ def event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_with_key(spark, sf_dir)
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        _sum_dbl("value", "sum_value"),
-        _avg_dbl("value", "avg_value"),
+        sum_dbl("value", "sum_value"),
+        avg_dbl("value", "avg_value"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
     )

@@ -1463,6 +1463,9 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # codebook rows up to which the coarse assignment scores against a
 # driver-side numpy codebook (else the distributed interpreted fold)
 _IVF_DRIVER_CODEBOOK_CAP = 200_000
+# bytes of the float64 (rows x centroids) score block the Arrow scorer holds
+# at once: each pandas batch is scored in row slices that fit it
+_IVF_SCORE_BLOCK_BYTES = 32 << 20
 
 _IVF_ORACLE = """
 WITH e AS (
@@ -1611,30 +1614,31 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
             CN = np.array([r["cnrm"] for r in crows])
             CID = np.array([r["c_id"] for r in crows], dtype=np.int64)
             S = len(CID)
+            block_rows = max(1, _IVF_SCORE_BLOCK_BYTES // (8 * S))
 
             def _scores(it):
                 import pandas as pd
 
                 for pdf in it:
-                    n_ = len(pdf)
-                    if not n_:
-                        continue
-                    V = np.vstack(pdf["v"].to_numpy())
-                    dot = np.zeros((n_, S))
-                    for i in range(V.shape[1]):  # ascending dims == fold order
-                        dot = dot + V[:, i][:, None] * C[:, i][None, :]
-                    cs_raw = dot / (
-                        pdf["nrm"].to_numpy()[:, None] * CN[None, :]
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(
-                                pdf["vec_id"].to_numpy(), S
-                            ).astype("int64"),
-                            "c_id": np.tile(CID, n_),
-                            "cs_raw": cs_raw.reshape(-1),
-                        }
-                    )
+                    for lo in range(0, len(pdf), block_rows):
+                        blk = pdf.iloc[lo : lo + block_rows]
+                        n_ = len(blk)
+                        V = np.vstack(blk["v"].to_numpy())
+                        dot = np.zeros((n_, S))
+                        term = np.empty((n_, S))
+                        for i in range(V.shape[1]):  # ascending dims == fold order
+                            np.multiply(V[:, i][:, None], C[:, i][None, :], out=term)
+                            np.add(dot, term, out=dot)
+                        cs_raw = dot / (blk["nrm"].to_numpy()[:, None] * CN[None, :])
+                        yield pd.DataFrame(
+                            {
+                                "vec_id": np.repeat(
+                                    blk["vec_id"].to_numpy(), S
+                                ).astype("int64"),
+                                "c_id": np.tile(CID, n_),
+                                "cs_raw": cs_raw.reshape(-1),
+                            }
+                        )
 
             ac = n.select("vec_id", "v", "nrm").mapInPandas(
                 _scores, "vec_id long, c_id long, cs_raw double"

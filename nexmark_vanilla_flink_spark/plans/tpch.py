@@ -10,14 +10,19 @@ scan, AQE-coalesced shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..functions.exact import dec, exact_sum, sum_dbl
 from ..sources.tables import load_tables
 from .registry import register
 
-_DEC = "decimal(18,4)"
+
+def disc_price() -> Column:
+    """l_extendedprice * (1 - l_discount), decimal-exact — TPC-H's
+    discounted price, the revenue every volume query sums."""
+    return dec("l_extendedprice") * dec(F.lit(1) - F.col("l_discount"))
 
 
 @register(
@@ -47,16 +52,9 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= cutoff)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(F.col("l_quantity").cast(_DEC)).cast("decimal(38,4)").cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast(_DEC))
-            .cast("decimal(38,4)").cast("double")
-            .alias("sum_base_price"),
-            F.sum(
-                F.col("l_extendedprice").cast(_DEC)
-                * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-            )
-            .cast("decimal(38,4)").cast("double")
-            .alias("sum_disc_price"),
+            sum_dbl("l_quantity", "sum_qty"),
+            sum_dbl("l_extendedprice", "sum_base_price"),
+            exact_sum(disc_price()).cast("double").alias("sum_disc_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -92,14 +90,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("o_orderdate_ns DIV 1000000000").alias("o_orderdate_s"),
             "o_orderpriority",
         )
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast(_DEC)
-                * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-            )
-            .cast("decimal(38,4)").cast("double")
-            .alias("revenue")
-        )
+        .agg(exact_sum(disc_price()).cast("double").alias("revenue"))
         .select("o_orderkey", "revenue", "o_orderdate_s", "o_orderpriority")
     )
 
@@ -137,12 +128,7 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name", "r_name")
         .agg(
-            F.sum(
-                F.col("l_extendedprice").cast(_DEC)
-                * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-            )
-            .cast("decimal(38,4)").cast("double")
-            .alias("revenue"),
+            exact_sum(disc_price()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -169,8 +155,8 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(F.col("l_extendedprice").cast(_DEC) * F.col("l_discount").cast(_DEC))
-            .cast("decimal(38,4)").cast("double")
+            exact_sum(dec("l_extendedprice") * dec("l_discount"))
+            .cast("double")
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
@@ -250,18 +236,16 @@ def tpch_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promo revenue share — broadcast part, decimal-exact
     numerator/denominator, one ratio at the end."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
-    rev = F.col("l_extendedprice").cast(_DEC) * (
-        F.lit(1) - F.col("l_discount")
-    ).cast(_DEC)
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(_DEC))
+    rev = disc_price()
+    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(dec(F.lit(0)))
     return (
         t["lineitem"]
         .join(broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             F.round(
                 F.lit(100.0)
-                * F.sum(promo).cast("decimal(38,4)").cast("double")
-                / F.sum(rev).cast("decimal(38,4)").cast("double"),
+                * exact_sum(promo).cast("double")
+                / exact_sum(rev).cast("double"),
                 4,
             ).alias("promo_revenue_pct"),
             F.count(F.lit(1)).alias("n_items"),
@@ -328,14 +312,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
         .join(broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast(_DEC)
-                * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-            )
-            .cast("decimal(38,4)").cast("double")
-            .alias("revenue")
-        )
+        .agg(exact_sum(disc_price()).cast("double").alias("revenue"))
     )
 
 
@@ -374,12 +351,7 @@ def tpch_q18_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
         .join(broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_custkey", "c_name", "o_orderkey")
-        .agg(
-            F.sum(F.col("l_quantity").cast(_DEC))
-            .cast("decimal(38,4)")
-            .cast("double")
-            .alias("total_qty")
-        )
+        .agg(sum_dbl("l_quantity", "total_qty"))
     )
 
 
@@ -420,13 +392,13 @@ def tpch_q22_global_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bal = (
         cust.filter(F.col("c_acctbal") > 0)
         .agg(
-            F.sum(F.col("c_acctbal").cast(_DEC)).cast("decimal(38,4)").alias("s"),
+            exact_sum(dec("c_acctbal")).alias("s"),
             F.count(F.lit(1)).alias("c"),
         )
     )
     return (
         cust.crossJoin(broadcast(bal))
-        .filter(F.col("c_acctbal").cast(_DEC) * F.col("c") > F.col("s"))
+        .filter(dec("c_acctbal") * F.col("c") > F.col("s"))
         .join(
             t["orders"]
             .filter(F.col("o_orderstatus") == "P")
@@ -438,10 +410,7 @@ def tpch_q22_global_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n_custs"),
-            F.sum(F.col("c_acctbal").cast(_DEC))
-            .cast("decimal(38,4)")
-            .cast("double")
-            .alias("total_bal"),
+            sum_dbl("c_acctbal", "total_bal"),
         )
     )
 
@@ -572,12 +541,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("long").alias("l_year"),
         )
         .agg(
-            F.sum(
-                F.col("l_extendedprice").cast(_DEC)
-                * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-            )
-            .cast("decimal(38,4)").cast("double")
-            .alias("revenue"),
+            exact_sum(disc_price()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -626,13 +590,10 @@ def tpch_q8_national_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ns = t["nation"].select(
         F.col("n_nationkey").alias("ns_key"), F.col("n_name").alias("supp_nation")
     )
-    vol = (
-        F.col("l_extendedprice").cast(_DEC)
-        * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-    )
+    vol = disc_price()
     nation_vol = F.when(
         F.col("supp_nation") == "NATION_3", vol
-    ).otherwise(F.lit(0).cast(_DEC))
+    ).otherwise(dec(F.lit(0)))
     out = (
         t["lineitem"]
         .join(broadcast(t["part"].filter(F.col("p_type") == "PROMO")),
@@ -646,8 +607,8 @@ def tpch_q8_national_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(ns), F.col("s_nationkey") == F.col("ns_key"))
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
-            F.sum(nation_vol).cast("decimal(38,4)").cast("double").alias("nation_volume"),
-            F.sum(vol).cast("decimal(38,4)").cast("double").alias("total_volume"),
+            exact_sum(nation_vol).cast("double").alias("nation_volume"),
+            exact_sum(vol).cast("double").alias("total_volume"),
         )
     )
     return out.select(
@@ -685,11 +646,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(
         spark, sf_dir, ("lineitem", "orders", "supplier", "nation", "part")
     )
-    profit = (
-        F.col("l_extendedprice").cast(_DEC)
-        * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-        - F.col("p_retailprice").cast(_DEC) * F.col("l_quantity").cast(_DEC)
-    )
+    profit = disc_price() - dec("p_retailprice") * dec("l_quantity")
     return (
         t["lineitem"]
         .join(broadcast(t["part"].filter(F.col("p_name").like("%widget%"))),
@@ -701,7 +658,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
-        .agg(F.sum(profit).cast("decimal(38,4)").cast("double").alias("sum_profit"))
+        .agg(exact_sum(profit).cast("double").alias("sum_profit"))
     )
 
 
@@ -751,14 +708,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lineitem shuffle is shared via ReusedExchange (one scan, not two)
         .filter(F.col("l_suppkey").isNotNull())
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast(_DEC)
-                * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-            )
-            .cast("decimal(38,4)")
-            .alias("rev_dec")
-        )
+        .agg(exact_sum(disc_price()).alias("rev_dec"))
     )
     mx = revenue.agg(F.max("rev_dec").alias("max_rev"))
     return (
@@ -806,7 +756,7 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_avg = (
         li.groupBy(F.col("l_partkey").alias("a_partkey"))
         .agg(
-            F.sum(F.col("l_quantity").cast(_DEC)).cast("decimal(38,4)").alias("qty_sum"),
+            exact_sum(dec("l_quantity")).alias("qty_sum"),
             F.count(F.lit(1)).alias("qty_cnt"),
         )
     )
@@ -815,13 +765,11 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("p_partkey") == F.col("l_partkey"))
         .join(part_avg, F.col("a_partkey") == F.col("l_partkey"))
         .filter(
-            F.col("l_quantity").cast(_DEC) * F.lit(5) * F.col("qty_cnt")
+            dec("l_quantity") * F.lit(5) * F.col("qty_cnt")
             < F.col("qty_sum")
         )
         .agg(
-            F.sum(F.col("l_extendedprice").cast(_DEC))
-            .cast("decimal(38,4)").cast("double")
-            .alias("total_revenue"),
+            sum_dbl("l_extendedprice", "total_revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -865,7 +813,7 @@ def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("p_partkey") == F.col("l_partkey"))
         .filter(F.year("l_shipdate") == 1996)
         .groupBy("l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast(_DEC)).cast("decimal(38,4)").alias("qty"))
+        .agg(exact_sum(dec("l_quantity")).alias("qty"))
         .filter(F.col("qty") > 300)
         .select("l_suppkey")
     )
@@ -1024,12 +972,7 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
         .filter(branch)
         .agg(
-            F.sum(
-                F.col("l_extendedprice").cast(_DEC)
-                * (F.lit(1) - F.col("l_discount")).cast(_DEC)
-            )
-            .cast("decimal(38,4)").cast("double")
-            .alias("revenue"),
+            exact_sum(disc_price()).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )

@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.exact import sum_dbl
+
 # CmRecord.java:5-21 field order
 CM_FIELDS = [
     ("ts_ms", LongType()),
@@ -73,7 +75,7 @@ def cm_windowed_load(cm: DataFrame, window_s: int = 2) -> DataFrame:
             ).alias("w_start_s"),
         )
         .agg(
-            F.sum(F.col("cpu").cast("decimal(18,4)")).cast("double").alias("total_cpu"),
+            sum_dbl("cpu", "total_cpu"),
             F.count(F.lit(1)).alias("n_records"),
         )
     )

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import avg_dbl, sum_dbl
+
 WATERMARK = "2 seconds"
 
 
@@ -49,7 +51,7 @@ def q5_hot_items_stream(bids: DataFrame, window: str = "1 hour") -> DataFrame:
 def q7_highest_bid_stream(bids: DataFrame, window: str = "1 day") -> DataFrame:
     """Streaming canonical q7 [highest bid per tumbling window]: windowed
     arg-max emitting the full winning bid row. Same max_by partial/final
-    aggregate as the batch plan (plans/nexmark_suite2.py) under a streaming
+    aggregate as the batch plan (plans/nexmark_suite.py) under a streaming
     state store — one candidate row of state per open window, the Beam
     NexmarkQuery7 Max.withFanout shape without the fanout (the combiner
     already runs map-side)."""
@@ -161,11 +163,10 @@ def event_type_stats_stream(events: DataFrame) -> DataFrame:
     sum keeps the avg order-insensitive exactly as the batch plan does
     (ADVICE r4: the CLI previously ran the q7 windowed arg-max under this
     name — a different query entirely)."""
-    sum_dec = F.sum(F.col("value").cast("decimal(18,4)")).cast("decimal(38,4)")
     return events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        sum_dec.cast("double").alias("sum_value"),
-        (sum_dec.cast("double") / F.count(F.lit(1))).alias("avg_value"),
+        sum_dbl("value", "sum_value"),
+        avg_dbl("value", "avg_value"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
     )
@@ -177,7 +178,7 @@ def cm_stream(events: DataFrame, window: str = "10 minutes") -> DataFrame:
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", window).alias("w"), F.col("user_id").alias("job_id"))
         .agg(
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total_cpu"),
+            sum_dbl("value", "total_cpu"),
             F.count(F.lit(1)).alias("n_records"),
         )
         .select(

@@ -295,22 +295,18 @@ def run_available_now(
             .start()
         )
         # restore only after completion: micro-batch PLANNING (which reads
-        # the conf) happens asynchronously after .start()
-        q.awaitTermination(timeout_s)
+        # the conf) happens asynchronously after .start(); the scratch
+        # checkpoint is freed on success (the returned DataFrame reads only
+        # out_dir, never the checkpoint)
+        _finish_bounded(
+            q, spark, f"streaming query {qname}", timeout_s,
+            ckpt if checkpoint_dir is None else None,
+        )
     finally:
         if saved_parts is not None:
             spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         if saved_nd is not None:
             spark.conf.set(_ND_CONF, saved_nd)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"streaming query {qname} did not finish in {timeout_s}s")
-    if q.exception() is not None:
-        raise q.exception()
-    if checkpoint_dir is None:
-        # scratch checkpoint served its purpose — free the tmpfs bytes now
-        # (the returned DataFrame reads only out_dir, never the checkpoint)
-        _discard_ephemeral_dir(ckpt, spark)
     if out_dir is not None:
         # explicit schema: a 0-row replay leaves only _spark_metadata, where
         # schema inference would fail; the sink wrote exactly sdf.schema
@@ -481,19 +477,16 @@ def run_foreach_batch(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"foreachBatch sink did not finish in {timeout_s}s")
-    if q.exception() is not None:
-        raise q.exception()
-    if checkpoint_dir is None:
-        _discard_ephemeral_dir(ckpt, sdf.sparkSession)
+    _finish_bounded(
+        q, sdf.sparkSession, "foreachBatch sink", timeout_s,
+        ckpt if checkpoint_dir is None else None,
+    )
     return q
 
 
 def run_noop(sdf: DataFrame, timeout_s: int = 300):
-    """Discard sink (K3 — NexmarkQuery8.java:723-728, cm/CM.java:304-312)."""
+    """Discard sink (K3 — NexmarkQuery8.java:723-728, cm/CM.java:304-312):
+    run to completion, writing nothing."""
     ckpt = _ephemeral_checkpoint_dir("ckpt_noop_")
     q = (
         sdf.writeStream.format("noop")
@@ -501,7 +494,22 @@ def run_noop(sdf: DataFrame, timeout_s: int = 300):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    if not q.isActive:
-        _discard_ephemeral_dir(ckpt, sdf.sparkSession)
+    _finish_bounded(q, sdf.sparkSession, "noop sink", timeout_s, ckpt)
     return q
+
+
+def _finish_bounded(
+    q, spark, what: str, timeout_s: int, ephemeral_ckpt: str | None
+) -> None:
+    """The shared tail of the bounded (availableNow) runners: wait for the
+    query, stop it and raise ``TimeoutError`` if it outlives ``timeout_s``,
+    re-raise its failure, then discard ``ephemeral_ckpt`` (None for a
+    caller-owned checkpoint, which is kept for resume)."""
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"{what} did not finish in {timeout_s}s")
+    if q.exception() is not None:
+        raise q.exception()
+    if ephemeral_ckpt is not None:
+        _discard_ephemeral_dir(ephemeral_ckpt, spark)

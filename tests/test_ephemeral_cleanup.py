@@ -16,6 +16,7 @@ from nexmark_vanilla_flink_spark.sources.binary import prune_stale_cache
 from nexmark_vanilla_flink_spark.streaming.runner import (
     _EPHEMERAL_DIRS,
     run_available_now,
+    run_noop,
 )
 
 
@@ -66,6 +67,32 @@ def test_ephemeral_checkpoint_removed_eagerly(spark, tmp_path):
     created = [d for d in _EPHEMERAL_DIRS if d not in before_tracked]
     assert len(created) == 1 and os.path.isdir(created[0])
     assert os.path.basename(created[0]).startswith("out_")
+
+
+def test_run_noop_finishes_and_discards_checkpoint(spark, tmp_path):
+    """The discard sink shares the bounded runners' tail: it returns only
+    once the replay has consumed every input row, and its scratch
+    checkpoint is gone by then; a replay that outlives its timeout is
+    stopped and raises instead of being handed back still running."""
+    scratch_base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+
+    def _ckpts():
+        return {
+            d
+            for d in os.listdir(scratch_base)
+            if d.startswith("ckpt_noop_")
+            and os.path.isdir(os.path.join(scratch_base, d))
+        }
+
+    pre_existing = _ckpts()
+    q = run_noop(_toy_stream(spark, tmp_path, n=20))
+    assert not q.isActive and q.exception() is None
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 20
+    assert _ckpts() - pre_existing == set()
+
+    with pytest.raises(TimeoutError):
+        run_noop(_toy_stream(spark, tmp_path, n=20, subdir="slow"), timeout_s=0.001)
+    assert not spark.streams.active
 
 
 def test_ephemeral_cleanup_survives_maintenance_race(spark, tmp_path):

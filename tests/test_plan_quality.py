@@ -4,6 +4,8 @@ pair-producing queries must not silently return nothing, and hot aggregates
 must use hash aggregation with partial (map-side) combine rather than sorts.
 """
 
+import re
+
 import pytest
 
 from nexmark_vanilla_flink_spark.plans import REGISTRY
@@ -501,6 +503,32 @@ def test_interval_overlap_join_is_bucketed_not_nested_loop(spark, sf_dir):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or (
         "BroadcastHashJoin" in plan
     )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "qx_winning_bids",
+        "nexmark_q4_category_avg",
+        "nexmark_q6_seller_avg",
+        "nexmark_q9_winning_bid_rows",
+    ],
+)
+def test_auction_bid_interval_join_is_bucketed(spark, sf_dir, name):
+    """Every consumer of the shared auction⋈bid interval join
+    (plans/nexmark.py::auction_bids) keeps its plan: the auctions side
+    explodes each lifetime into day buckets, and the join is a hash
+    equi-join on (item, day) with the time range as a residual — never a
+    nested loop over the ~100 raw item keys."""
+    plan = _plan(spark, sf_dir, name)
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Cartesian" not in plan
+    assert "Generate explode(sequence((start_ts_ns" in plan
+    assert re.search(
+        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) "
+        r"\[category_id#\d+L?, day_bucket#\d+L?\]",
+        plan,
+    ), plan
 
 
 def test_skipgram_pairs_single_sequence_shuffle(spark, sf_dir):

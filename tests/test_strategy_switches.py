@@ -97,3 +97,32 @@ def test_ivf_distributed_branch_matches_arrow_assign(spark, sf_dir, monkeypatch)
     purge_artifact_roots()
 
     assert dist_rows == arrow_rows
+
+
+def test_ivf_score_block_cap_keeps_assign(spark, sf_dir, monkeypatch):
+    """ivf_index: a byte cap below one score row slices every Arrow batch
+    into single-row score blocks; the per-element accumulation order is
+    unchanged, so the assign table must be exceptAll-identical to the
+    uncapped build."""
+    from nexmark_vanilla_flink_spark.operators.artifacts import (
+        purge_artifact_roots,
+        read_artifact_table,
+    )
+    from nexmark_vanilla_flink_spark.plans import pipeline
+    from nexmark_vanilla_flink_spark.plans.pipeline import _ivf_index_dir
+
+    purge_artifact_roots()
+    whole = read_artifact_table(spark, _ivf_index_dir(spark, sf_dir), "assign")
+    whole = spark.createDataFrame(whole.collect(), whole.schema)
+    assert whole.count()
+
+    monkeypatch.setattr(pipeline, "_IVF_SCORE_BLOCK_BYTES", 1)
+    purge_artifact_roots()
+    sliced = read_artifact_table(spark, _ivf_index_dir(spark, sf_dir), "assign")
+    sliced = spark.createDataFrame(sliced.collect(), sliced.schema)
+    monkeypatch.undo()
+    purge_artifact_roots()
+
+    assert whole.exceptAll(sliced).count() == 0
+    assert sliced.exceptAll(whole).count() == 0
+
