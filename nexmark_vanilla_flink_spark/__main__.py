@@ -177,21 +177,7 @@ def _run_q5b_demo(sf_dir: str, show: int) -> int:
     spark = get_session("nexmark-q5b-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
-    captured = {}
-
-    class _Grab:
-        def withColumn(self, *a, **k):
-            return self
-
-        def groupBy(self, *a, **k):
-            return self
-
-        def applyInPandasWithState(self, fn, **k):
-            captured["fn"] = fn
-            return self
-
-    stateful.q5b_proc_time_flush(_Grab(), flush_interval_ms=10_000)
-    fn = captured["fn"]
+    fn = stateful.q5b_flush_fn(10_000)
 
     class _State:
         def __init__(self):

@@ -784,22 +784,22 @@ def user_value_ewma_stream_replay(
     """The quantized EWMA feature UNDER STREAMING EXECUTION — the
     continuously-maintained feature-store shape: the fixed-point
     recursion advances per user as each event is watermark-finalized
-    (streaming/stateful.py::ewma_stateful), instead of a nightly batch
+    (streaming/stateful.py::EWMA_SPEC), instead of a nightly batch
     re-fold of full history. Keyed state is three BIGINTs plus the
     watermark-lag pending buffer; the end-of-input sentinel triggers the
     final fold-and-emit in the data batch (bucketed_stateful's r11 fast
     path), so the replay shares the batch oracle verbatim."""
 
     from ..streaming.runner import run_available_now
-    from ..streaming.stateful import ewma_stateful_bucketed
+    from ..streaming.stateful import EWMA_SPEC, bucketed_stateful
     from .linkage import _sentinel_event_stream
 
     stream, flush_ms = _sentinel_event_stream(spark, sf_dir, with_value=True)
     return run_available_now(
-        # bucketed state (r9): same fold, same flush-only emission —
-        # per-key parity pinned by tests/test_bucketed_stateful.py; the
-        # per-key replica `ewma_stateful` remains the reference form
-        ewma_stateful_bucketed(stream, flush_ms),
+        # bucketed state (r9): flush-only emission — parity with the
+        # per-key form (n_buckets=None) pinned by
+        # tests/test_bucketed_stateful.py
+        bucketed_stateful(stream, flush_ms, EWMA_SPEC),
         output_mode="append",
         # sentinel end-of-input fast path: flush in the data batch, skip
         # the trailing no-data batch (streaming/stateful.py, r11)

@@ -835,18 +835,18 @@ def funnel_conversion_stream_replay(
 ) -> DataFrame:
     """The funnel pattern matcher UNDER STREAMING EXECUTION — the CEP
     deployment shape (match `view ->> click ->> purchase within 7d` as
-    events arrive). This bounded-replay entry runs the BUCKETED twin
-    (streaming/stateful.py::funnel_stateful_bucketed, r9): the identical
-    ``funnel_fold`` over watermark-finalized prefixes, state coarsened
-    into hash buckets of user_id, one row per matched user at the flush
-    horizon — emission timing is unobservable under the batch oracle, and
-    the per-key Python group-call machinery was the replay's dominant
-    cost. The PER-KEY-TIMER replica (funnel_stateful(per_key_timers=True)
-    — the reference's timer-per-auction pattern, NexmarkQueryX.java:465:
-    each key emits and frees its state the moment the watermark proves
-    its row immutable) remains the continuous deployment form, with its
-    incremental pre-horizon emission pinned live by
-    tests/test_continuous_cep.py and its row-set parity with this twin
+    events arrive). This bounded-replay entry runs
+    ``funnel_spec(window_us)`` on the bucketed watermark-fold driver
+    (streaming/stateful.py::bucketed_stateful): ``funnel_fold`` over
+    watermark-finalized prefixes, state coarsened into hash buckets of
+    user_id, one row per matched user at the flush horizon — emission
+    timing is unobservable under the batch oracle, and the per-key Python
+    group-call machinery was the replay's dominant cost. The PER-KEY-TIMER
+    form (``funnel_stateful`` — the reference's timer-per-auction pattern,
+    NexmarkQueryX.java:465: each key emits and frees its state the moment
+    the watermark proves its row immutable) is the continuous deployment
+    form, with its incremental pre-horizon emission pinned live by
+    tests/test_continuous_cep.py and its row-set parity with this replay
     pinned by tests/test_bucketed_stateful.py. The one-row flush sentinel
     (ts = max event time + 8 days, the bounded-replay analog of Flink's
     end-of-input watermark) settles the open-ended keys, which is what
@@ -859,7 +859,7 @@ def funnel_conversion_stream_replay(
     key to a global flush."""
 
     from ..streaming.runner import run_available_now
-    from ..streaming.stateful import funnel_stateful_bucketed
+    from ..streaming.stateful import bucketed_stateful, funnel_spec
 
     stream, flush_ms = _sentinel_event_stream(spark, sf_dir)
     # JVM-side pre-filter (r10): the funnel fold only reads
@@ -872,12 +872,9 @@ def funnel_conversion_stream_replay(
         | F.col("event_type").isin("view", "click", "purchase")
     )
     out = run_available_now(
-        # bucketed state (r9): identical funnel_fold, one row per matched
-        # user at the flush horizon — per-key parity pinned by
-        # tests/test_bucketed_stateful.py. The per-key-timer replica
-        # (funnel_stateful(per_key_timers=True)) remains the continuous
-        # deployment form, exercised live by tests/test_continuous_cep.py.
-        funnel_stateful_bucketed(stream, flush_ms, _FUNNEL_WINDOW_US),
+        # bucketed state: one row per matched user at the flush horizon —
+        # per-key parity pinned by tests/test_bucketed_stateful.py
+        bucketed_stateful(stream, flush_ms, funnel_spec(_FUNNEL_WINDOW_US)),
         output_mode="append",
         # the sentinel end-of-input fast path flushes in the data batch
         # (streaming/stateful.py::bucketed_stateful, r11) — no timers
@@ -912,20 +909,20 @@ def scd2_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: durable state is one (state, from, version) triple per key
     plus the watermark-lag-bounded pending buffer, coarsened into hash
-    buckets (streaming/stateful.py::bucketed_stateful, r9: the per-key
-    Python replica paid ~2 s of per-key group-call machinery at sf0.1;
-    per-key parity pinned by tests/test_bucketed_stateful.py, and the
-    per-key replica `scd2_stateful` remains the reference form);
+    buckets (streaming/stateful.py::bucketed_stateful with ``SCD2_SPEC``,
+    r9: per-key state paid ~2 s of group-call machinery at sf0.1; parity
+    with the per-key form, ``n_buckets=None``, pinned by
+    tests/test_bucketed_stateful.py);
     everything keys on user_id. The flush sentinel is the bounded-replay
     analog of Flink's end-of-input watermark (shared helper with the
     funnel twin)."""
 
     from ..streaming.runner import run_available_now
-    from ..streaming.stateful import scd2_stateful_bucketed
+    from ..streaming.stateful import SCD2_SPEC, bucketed_stateful
 
     stream, flush_ms = _sentinel_event_stream(spark, sf_dir)
     out = run_available_now(
-        scd2_stateful_bucketed(stream, flush_ms),
+        bucketed_stateful(stream, flush_ms, SCD2_SPEC),
         output_mode="append",
         # sentinel end-of-input fast path: flush in the data batch, skip
         # the trailing no-data batch (streaming/stateful.py, r11)

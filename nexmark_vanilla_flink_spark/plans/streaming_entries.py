@@ -72,16 +72,16 @@ def q8_union_join_lowlevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     person, ValueState/ListState symmetric emission —
     NexmarkQuery8.java:570-662) on applyInPandasWithState, replayed bounded.
     Emission order differs from batch; the row SET is deterministic and the
-    oracle checks it. This bounded entry runs the BUCKETED twin (r11 —
-    identical per-user symmetric emission, state coarsened into hash
-    buckets; the per-key replica ``union_join_stateful`` remains the
-    reference form, under the batch-join gate via tests/test_stateful.py
-    and set-parity-pinned by tests/test_bucketed_stateful.py)."""
+    oracle checks it. This bounded entry runs ``union_join_stateful``
+    with state coarsened into hash buckets (r11); its per-key form
+    (``n_buckets=None``) sits under the batch-join gate via
+    tests/test_stateful.py, and tests/test_bucketed_stateful.py pins the
+    bucketed row set to it."""
     from pyspark.sql import functions as F
 
     from ..streaming.runner import run_available_now
     from ..streaming.sources import stream_events
-    from ..streaming.stateful import union_join_stateful_bucketed
+    from ..streaming.stateful import union_join_stateful
 
     # ONE source scan (r11): persons and auctions are event-type slices of
     # the same events file — the pre-split form ran two file-stream sources
@@ -98,7 +98,7 @@ def q8_union_join_lowlevel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts"),
     )
     return run_available_now(
-        union_join_stateful_bucketed(tagged),
+        union_join_stateful(tagged),
         output_mode="append",
         no_data_batch=False,  # NoTimeout stateful fn: emits on arrival only
         # state partitions: replay_state_partitions() default (8 local

@@ -487,18 +487,18 @@ def skipgram_pairs_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming path shares the batch oracle verbatim (caller-side
     count reduction, the qx_winning_bids_stream contract)."""
     from ..streaming.runner import run_available_now
-    from ..streaming.stateful import skipgram_stateful_counted
+    from ..streaming.stateful import SKIPGRAM_COUNTED_SPEC, bucketed_stateful
     from .linkage import _sentinel_event_stream
 
     stream, flush_ms = _sentinel_event_stream(spark, sf_dir)
     out = run_available_now(
-        # counted bucketed twin (r11): same fold, pairs pre-counted at
-        # the operator boundary (the event-type vocabulary collapses
-        # ~400 K raw pairs to <=25 distinct rows per bucket — map-side
-        # combine where the data is); count parity with the raw bucketed
-        # twin AND the per-key replica `skipgram_stateful` pinned by
+        # the skip-gram fold with pairs pre-counted at the operator
+        # boundary (r11: the event-type vocabulary collapses ~400 K raw
+        # pairs to <=25 distinct rows per bucket — map-side combine where
+        # the data is); count parity with the raw ``SKIPGRAM_SPEC`` pairs,
+        # and their parity with the per-key form, pinned by
         # tests/test_bucketed_stateful.py
-        skipgram_stateful_counted(stream, flush_ms),
+        bucketed_stateful(stream, flush_ms, SKIPGRAM_COUNTED_SPEC),
         output_mode="append",
         # the sentinel end-of-input fast path flushes in the data batch
         # (streaming/stateful.py::bucketed_stateful, r11) — no timers

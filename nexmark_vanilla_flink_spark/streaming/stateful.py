@@ -11,20 +11,40 @@ queries.py); these replicas exist for exact-behavior parity:
     per-key accumulator {max, count, last ts} with an event-time timer that
     fires when the watermark passes the window end, emits, and clears —
     reference's registerEventTimeTimer(:240) + onTimer(:246-250).
+  * q5b_proc_time_flush — Q5b's processing-time timer flush
+    (NexmarkQuery5b.java:204, now + 10 s): ProcessingTimeTimeout variant,
+    over the same accumulator.
   * union_join_stateful — Q8/Q11's JoinUDF (NexmarkQuery8.java:602-662):
     tagged-union stream keyed by personId, ValueState<person> +
     ListState<auction> (never evicted — reference behavior, :634), emitting
     matches incrementally from both sides (a symmetric hash join by hand).
-  * q5b_proc_time_flush — Q5b's processing-time timer flush
-    (NexmarkQuery5b.java:204, now + 10 s): ProcessingTimeTimeout variant.
+  * allowed_lateness_stateful — Flink's ``allowedLateness`` pane re-fire
+    (NexmarkQueryX.java:279-281).
+  * bucketed_stateful — the one watermark-fold driver: buffer arriving
+    rows, fold the watermark-finalized prefix per user, flush at the
+    end-of-input sentinel or timer. Each operator is one ``FoldSpec``:
+    ``EWMA_SPEC``, ``SCD2_SPEC``, ``SKIPGRAM_SPEC``,
+    ``SKIPGRAM_COUNTED_SPEC`` and ``funnel_spec(window_us)``.
+  * funnel_stateful — the continuous per-key-timer form of the funnel
+    (CEP) matcher: each key emits and frees its state the moment the
+    watermark proves its row immutable.
+
+The keyed operators take ``n_buckets``: the default coarsens state into
+hash buckets of the key (fewer Python group calls for the same per-key
+semantics); ``n_buckets=None`` keys state per user — the per-key
+reference form the tests compare the bucketed runs against.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+import pickle
+from collections import Counter
+from itertools import groupby
+from typing import Any, Callable, Iterator, NamedTuple, Optional, Tuple
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -38,6 +58,25 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+# State of every bucketed operator: one pickled blob per group. Pickle is
+# INTERNAL state representation — emitted rows, the oracle-gated surface,
+# never pass through it.
+_BUCKETED_STATE = StructType([StructField("blob", BinaryType())])
+
+
+def _bucket_col(key: str, n_buckets: int) -> Column:
+    """The ``bkt`` grouping column: a row takes the hash bucket of ``key``;
+    the one-row end-of-input sentinel (``key`` < 0) explodes to EVERY
+    bucket so each group can flush in the data batch (one extra row per
+    bucket, JVM-side)."""
+    return F.explode(
+        F.when(
+            F.col(key) >= 0,
+            F.array(F.pmod(F.col(key), F.lit(n_buckets)).cast("int")),
+        ).otherwise(F.sequence(F.lit(0), F.lit(n_buckets - 1)))
+    ).alias("bkt")
+
 
 HOT_ITEMS_OUTPUT = StructType(
     [
@@ -59,6 +98,38 @@ _HOT_ITEMS_STATE = StructType(
 )
 
 
+def _hot_items_acc(state: GroupState, pdfs: Iterator[pd.DataFrame]) -> tuple:
+    """Fold a batch of bids into the key's {max, count, last ts}
+    accumulator (the reference Aggregator's add, NexmarkQuery5.java:220)."""
+    max_bid, bid_count, last_ts_ns = (
+        state.get[:3] if state.exists else (float("-inf"), 0, 0)
+    )
+    for pdf in pdfs:
+        if len(pdf):
+            max_bid = max(max_bid, float(pdf["bid"].max()))
+            bid_count += int(len(pdf))
+            last_ts_ns = max(last_ts_ns, int(pdf["b_ts_ns"].max()))
+    return max_bid, bid_count, last_ts_ns
+
+
+def _hot_items_flush(
+    state: GroupState, auction_id: int, w_start_s: int
+) -> pd.DataFrame:
+    """The timer fired: emit the key's accumulator as one row and clear
+    its state (reference onTimer, NexmarkQuery5.java:246-250)."""
+    max_bid, bid_count, last_ts_ns, _ = state.get
+    state.remove()
+    return pd.DataFrame(
+        {
+            "auction_id": [auction_id],
+            "w_start_s": [w_start_s],
+            "max_bid": [max_bid],
+            "bid_count": [bid_count],
+            "last_bid_ts_s": [last_ts_ns // 1_000_000_000],
+        }
+    )
+
+
 def hot_items_stateful(bids: DataFrame, window_s: int = 3600) -> DataFrame:
     """Q5 exact replica: keyed accumulator + event-time timer emission.
 
@@ -74,36 +145,15 @@ def hot_items_stateful(bids: DataFrame, window_s: int = 3600) -> DataFrame:
     ) -> Iterator[pd.DataFrame]:
         auction_id, w_start_s = (int(v) for v in key)
         if state.hasTimedOut:
-            max_bid, bid_count, last_ts_ns, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "auction_id": [auction_id],
-                    "w_start_s": [w_start_s],
-                    "max_bid": [max_bid],
-                    "bid_count": [bid_count],
-                    "last_bid_ts_s": [last_ts_ns // 1_000_000_000],
-                }
-            )
+            yield _hot_items_flush(state, auction_id, w_start_s)
             return
-        max_bid, bid_count, last_ts_ns = float("-inf"), 0, 0
-        if state.exists:
-            max_bid, bid_count, last_ts_ns, _ = state.get
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            max_bid = max(max_bid, float(pdf["bid"].max()))
-            bid_count += int(len(pdf))
-            last_ts_ns = max(last_ts_ns, int(pdf["b_ts_ns"].max()))
         w_end_ms = (w_start_s + window_s) * 1000
-        state.update((max_bid, bid_count, last_ts_ns, w_end_ms))
+        state.update((*_hot_items_acc(state, pdfs), w_end_ms))
         # the reference's registerEventTimeTimer: fire when watermark ≥ window
         # end (clamped above the current watermark — historical replay can
         # have windows that already expired, like the reference's
         # absolute-timer quirk at NexmarkQuery5.java:240)
         state.setTimeoutTimestamp(max(w_end_ms, state.getCurrentWatermarkMs() + 1))
-        return
-        yield  # pragma: no cover — generator form
 
     keyed = (
         bids.withColumn("auction_id", F.col("item_id"))
@@ -125,18 +175,48 @@ def hot_items_stateful(bids: DataFrame, window_s: int = 3600) -> DataFrame:
     )
 
 
+def q5b_flush_fn(flush_interval_ms: int = 10_000) -> Callable:
+    """The Q5b group function: accumulate per item key and re-arm a
+    processing-time timer ``flush_interval_ms`` out; when it fires, emit
+    and clear. Exposed so a virtual clock can drive it
+    (tests/test_q5b_deterministic.py, the ``--q5b`` CLI demo)."""
+
+    def fn(
+        key: Tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            yield _hot_items_flush(state, int(key[0]), 0)
+            return
+        state.update((*_hot_items_acc(state, pdfs), 0))
+        state.setTimeoutDuration(flush_interval_ms)
+
+    return fn
+
+
+def q5b_proc_time_flush(bids: DataFrame, flush_interval_ms: int = 10_000) -> DataFrame:
+    """Q5b replica: accumulate per item key, flush on a *processing-time*
+    timer (reference: now + 10 s, NexmarkQuery5b.java:204). Inherently
+    nondeterministic — soak-tested, never oracle-gated (SURVEY.md §7)."""
+    return (
+        bids.withColumn("auction_id", F.col("item_id"))
+        .groupBy("auction_id")
+        .applyInPandasWithState(
+            q5b_flush_fn(flush_interval_ms),
+            outputStructType=HOT_ITEMS_OUTPUT,
+            stateStructType=_HOT_ITEMS_STATE,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        )
+    )
+
+
 UNION_JOIN_OUTPUT = StructType(
     [
         StructField("user_id", LongType()),
         StructField("person_id", LongType()),
         StructField("auction_id", LongType()),
-    ]
-)
-
-_UNION_JOIN_STATE = StructType(
-    [
-        StructField("person_ids", ArrayType(LongType())),
-        StructField("auction_ids", ArrayType(LongType())),
     ]
 )
 
@@ -159,112 +239,31 @@ def tagged_union(persons: DataFrame, auctions: DataFrame) -> DataFrame:
     return p.unionByName(a)
 
 
-def union_join_stateful(persons: DataFrame, auctions: DataFrame) -> DataFrame:
-    """Q8/Q11 JoinUDF replica on two pre-split streams — convenience form
-    of ``union_join_stateful_tagged`` (the API twin of the reference's
-    two-input wiring, NexmarkQuery8.java:570)."""
-    return union_join_stateful_tagged(tagged_union(persons, auctions))
-
-
-def union_join_stateful_tagged(tagged: DataFrame) -> DataFrame:
-    """Q8/Q11 JoinUDF replica: symmetric hash join by hand on the tagged
-    union. Arriving persons join all buffered auctions; arriving auctions
-    join all buffered persons. State is never evicted — faithfully mirroring
-    the reference's never-cleared ListState (NexmarkQuery8.java:634); the
-    production path (streaming/queries.py) bounds state with watermarks
-    instead. Takes the tagged stream directly (side 1 = person,
-    2 = auction — JoinHelper.java:24-40) so a caller that derives both
-    sides from ONE physical source can feed a single scan instead of two
-    (the replay entry: persons and auctions are event-type slices of the
-    same events file, and two separate file-stream sources each re-scan
-    it)."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        user_id = int(key[0])
-        persons_buf: list[int] = []
-        auctions_buf: list[int] = []
-        if state.exists:
-            p0, a0 = state.get
-            persons_buf = list(p0)
-            auctions_buf = list(a0)
-        chunks = []
-        for pdf in pdfs:
-            side = pdf["side"].to_numpy()
-            rid = pdf["row_id"].to_numpy()
-            new_p, new_a = rid[side == 1], rid[side == 2]
-            old_p = np.asarray(persons_buf, dtype=np.int64)
-            old_a = np.asarray(auctions_buf, dtype=np.int64)
-            # each (p, a) pair is emitted exactly once, when its later side
-            # arrives: new persons pair with all auctions seen so far (old +
-            # this batch), old persons pair with this batch's new auctions
-            all_a = np.concatenate([old_a, new_a])
-            if len(new_p) and len(all_a):
-                chunks.append(
-                    (np.repeat(new_p, len(all_a)), np.tile(all_a, len(new_p)))
-                )
-            if len(old_p) and len(new_a):
-                chunks.append(
-                    (np.repeat(old_p, len(new_a)), np.tile(new_a, len(old_p)))
-                )
-            persons_buf.extend(int(x) for x in new_p)
-            auctions_buf.extend(int(x) for x in new_a)
-        state.update((persons_buf, auctions_buf))
-        if chunks:
-            out_p = np.concatenate([c[0] for c in chunks])
-            out_a = np.concatenate([c[1] for c in chunks])
-            yield pd.DataFrame(
-                {
-                    "user_id": np.full(len(out_p), user_id, dtype=np.int64),
-                    "person_id": out_p,
-                    "auction_id": out_a,
-                }
-            )
-
-    return (
-        tagged.groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=UNION_JOIN_OUTPUT,
-            stateStructType=_UNION_JOIN_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def union_join_stateful_bucketed(
-    tagged: DataFrame, n_buckets: int = 16
+def union_join_stateful(
+    tagged: DataFrame, n_buckets: Optional[int] = 16
 ) -> DataFrame:
-    """Bucketed twin of ``union_join_stateful_tagged`` — the identical
-    symmetric-hash-join-by-hand emission per user (each (person, auction)
-    pair exactly once, when its later side arrives; buffers never evicted,
-    mirroring the reference's never-cleared ListState,
-    NexmarkQuery8.java:634), with state coarsened into hash buckets of
-    user_id — the same per-key-machinery amortization the other bucketed
-    twins use (r11: the per-key replica pays ~0.7 ms of Arrow group-call
-    protocol per key per batch — a measured ~1.2 s of pure machinery for
-    1500 keys at sf0.1 with a trivial fn). Row-SET parity with the
-    per-key replica (the reference form, which sits under the batch-join
-    gate via tests/test_stateful.py) is pinned by
-    tests/test_bucketed_stateful.py::test_union_join_bucketed_parity."""
-    import pickle
+    """Q8/Q11 JoinUDF replica: symmetric hash join by hand on the tagged
+    union (side 1 = person, 2 = auction — ``tagged_union``). Per user,
+    arriving persons join all buffered auctions and arriving auctions join
+    all buffered persons, so each (person, auction) pair is emitted exactly
+    once, when its later side arrives. Buffers are never evicted —
+    faithfully mirroring the reference's never-cleared ListState
+    (NexmarkQuery8.java:634); the production path (streaming/queries.py)
+    bounds state with watermarks instead. Emission is on arrival, with no
+    watermark gating and no timers.
+
+    State is coarsened into ``n_buckets`` hash buckets of user_id (the
+    per-key group-call protocol costs ~0.7 ms per key per batch — ~1.2 s
+    of pure machinery for 1500 keys at sf0.1 with a trivial fn);
+    ``n_buckets=None`` keys it per user, the reference form that
+    tests/test_stateful.py holds to the batch join."""
 
     def fn(
         key: Tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        bufs: dict = {}
-        if state.exists:
-            bufs = pickle.loads(state.get[0])
+        bufs: dict = pickle.loads(state.get[0]) if state.exists else {}
         chunks = []
         for pdf in pdfs:
             if not len(pdf):
@@ -286,6 +285,8 @@ def union_join_stateful_bucketed(
                 new_p, new_a = r_g[s_g == 1], r_g[s_g == 2]
                 old_p = np.asarray(p_buf, dtype=np.int64)
                 old_a = np.asarray(a_buf, dtype=np.int64)
+                # new persons pair with all auctions seen so far (old +
+                # this batch), old persons with this batch's new auctions
                 all_a = np.concatenate([old_a, new_a])
                 if len(new_p) and len(all_a):
                     chunks.append(
@@ -317,18 +318,19 @@ def union_join_stateful_bucketed(
                 {"user_id": out_u, "person_id": out_p, "auction_id": out_a}
             )
 
-    return (
-        tagged.select(
+    keyed = (
+        tagged.groupBy("user_id")
+        if n_buckets is None
+        else tagged.select(
             "*", F.pmod(F.col("user_id"), F.lit(n_buckets)).cast("int").alias("bkt")
-        )
-        .groupBy("bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=UNION_JOIN_OUTPUT,
-            stateStructType=_BUCKETED_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ).groupBy("bkt")
+    )
+    return keyed.applyInPandasWithState(
+        fn,
+        outputStructType=UNION_JOIN_OUTPUT,
+        stateStructType=_BUCKETED_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -376,9 +378,6 @@ def allowed_lateness_stateful(
     every re-fired pane is visible to the oracle — the batch SQL models
     the first-batch watermark (max on-time event ms − delay) and
     enumerates exactly these rows."""
-    import pickle
-
-    from itertools import groupby
 
     def fn(
         key: Tuple[Any, ...],
@@ -456,15 +455,12 @@ def allowed_lateness_stateful(
                 ],
             )
 
-    bkt = F.explode(
-        F.when(
-            F.col("auction_id") >= 0,
-            F.array(F.pmod(F.col("auction_id"), F.lit(n_buckets)).cast("int")),
-        ).otherwise(F.sequence(F.lit(0), F.lit(n_buckets - 1)))
-    ).alias("bkt")
     return (
         bids.withWatermark("ts", "2 seconds")
-        .select("auction_id", "w_start_s", "us", "bid", "ts", bkt)
+        .select(
+            "auction_id", "w_start_s", "us", "bid", "ts",
+            _bucket_col("auction_id", n_buckets),
+        )
         .groupBy("bkt")
         .applyInPandasWithState(
             fn,
@@ -476,52 +472,163 @@ def allowed_lateness_stateful(
     )
 
 
-def q5b_proc_time_flush(bids: DataFrame, flush_interval_ms: int = 10_000) -> DataFrame:
-    """Q5b replica: accumulate per item key, flush on a *processing-time*
-    timer (reference: now + 10 s, NexmarkQuery5b.java:204). Inherently
-    nondeterministic — soak-tested, never oracle-gated (SURVEY.md §7)."""
+# ---------------------------------------------------------------------------
+# The watermark-fold driver and its operator specs
+# ---------------------------------------------------------------------------
 
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        auction_id = int(key[0])
-        if state.hasTimedOut:
-            max_bid, bid_count, last_ts_ns, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "auction_id": [auction_id],
-                    "w_start_s": [0],
-                    "max_bid": [max_bid],
-                    "bid_count": [bid_count],
-                    "last_bid_ts_s": [last_ts_ns // 1_000_000_000],
-                }
-            )
-            return
-        max_bid, bid_count, last_ts_ns = float("-inf"), 0, 0
-        if state.exists:
-            max_bid, bid_count, last_ts_ns, _ = state.get
-        for pdf in pdfs:
-            if len(pdf):
-                max_bid = max(max_bid, float(pdf["bid"].max()))
-                bid_count += int(len(pdf))
-                last_ts_ns = max(last_ts_ns, int(pdf["b_ts_ns"].max()))
-        state.update((max_bid, bid_count, last_ts_ns, 0))
-        state.setTimeoutDuration(flush_interval_ms)
 
-    return (
-        bids.withColumn("auction_id", F.col("item_id"))
-        .groupBy("auction_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=HOT_ITEMS_OUTPUT,
-            stateStructType=_HOT_ITEMS_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
+class FoldSpec(NamedTuple):
+    """One watermark-gated per-user operator for ``bucketed_stateful``.
+
+    ``fold(uid, ustate_or_None, rows) -> (ustate', out_rows)`` folds one
+    user's watermark-finalized rows, in (event time, event_id) order;
+    each row is ``(user_id, us, event_id, *value_cols)``.
+    ``final(uid, ustate) -> out_rows`` emits at end of input.
+    ``batch_reduce(out_rows) -> out_rows`` (optional) collapses a group's
+    emission batch before it crosses Arrow."""
+
+    value_cols: tuple
+    fold: Callable
+    final: Callable
+    out_schema: StructType
+    watermark: str
+    batch_reduce: Optional[Callable] = None
+
+
+def _no_final(uid, ustate) -> list:
+    return []
+
+
+EWMA_OUTPUT = StructType(
+    [
+        StructField("user_id", LongType()),
+        StructField("n_events", IntegerType()),
+        StructField("ewma_fp", LongType()),
+        StructField("last_v_fp", LongType()),
+    ]
+)
+
+
+def _ewma_fold(uid, ustate, rows):
+    acc, n, last_v = ustate or (0, 0, 0)
+    for r in rows:
+        x = int(r[3])
+        acc = (acc + x) // 2
+        last_v = x
+        n += 1
+    return (acc, n, last_v), []
+
+
+def _ewma_final(uid, ustate):
+    acc, n, last_v = ustate
+    return [(uid, int(n), int(acc), int(last_v))] if n > 0 else []
+
+
+# Continuously-maintained quantized EWMA feature — the streaming form of
+# the batch ``user_value_ewma`` fold: per user, the fixed-point recursion
+# acc = (acc + v_fp) DIV 2 advances as each event is watermark-FINALIZED
+# (an EWMA folded out of order is a different number — the order gate IS
+# the correctness condition). State is three BIGINTs per user; the row is
+# emitted only at end of input, when the full-history EWMA is final.
+EWMA_SPEC = FoldSpec(("v_fp",), _ewma_fold, _ewma_final, EWMA_OUTPUT, "30 seconds")
+
+
+SCD2_OUTPUT = StructType(
+    [
+        StructField("user_id", LongType()),
+        StructField("valid_from_us", LongType()),
+        StructField("valid_to_us", LongType()),
+        StructField("state_value", StringType()),
+        StructField("version", IntegerType()),
+        StructField("is_current", BooleanType()),
+    ]
+)
+
+
+def _scd2_fold(uid, ustate, rows):
+    cur_state, cur_from, ver = ustate or ("", -1, 0)
+    closed = []
+    for r in rows:
+        e = r[3]
+        if ver == 0 or e != cur_state:
+            if ver > 0:
+                closed.append(
+                    (uid, int(cur_from), int(r[1]), cur_state, int(ver), False)
+                )
+            cur_state, cur_from, ver = e, int(r[1]), ver + 1
+    return (cur_state, cur_from, ver), closed
+
+
+def _scd2_final(uid, ustate):
+    cur_state, cur_from, ver = ustate
+    if ver > 0:
+        return [(uid, int(cur_from), None, cur_state, int(ver), True)]
+    return []
+
+
+# Streaming CDC merge — the continuous form of the batch
+# ``scd2_user_state``: per user, no-op updates compress, each closed
+# validity interval emits the moment its successor's event time is
+# watermark-finalized (immutable on emit, so append-mode-sound), and the
+# still-open interval emits at end of input with is_current = true.
+SCD2_SPEC = FoldSpec(
+    ("event_type",), _scd2_fold, _scd2_final, SCD2_OUTPUT, "2 seconds"
+)
+
+
+SKIPGRAM_OUTPUT = StructType(
+    [
+        StructField("center", StringType()),
+        StructField("context", StringType()),
+    ]
+)
+
+SKIPGRAM_COUNT_OUTPUT = StructType(
+    [
+        StructField("center", StringType()),
+        StructField("context", StringType()),
+        StructField("cnt", LongType()),
+    ]
+)
+
+
+def _skipgram_fold(uid, ustate, rows):
+    p1, p2 = ustate or (None, None)
+    out = []
+    for r in rows:
+        e = r[3]
+        if p1 is not None:
+            out.append((p1, e))
+            out.append((e, p1))
+        if p2 is not None:
+            out.append((p2, e))
+            out.append((e, p2))
+        p2, p1 = p1, e
+    return (p1, p2), out
+
+
+def _count_pairs(out):
+    return [(c, x, n) for (c, x), n in sorted(Counter(out).items())]
+
+
+# Streaming training-example generation — word2vec-style (center, context)
+# skip-gram pairs (window ±2, symmetric) from per-user event sequences as
+# they arrive, the online counterpart of the batch ``skipgram_pairs``:
+# each finalized event e emits (p1,e),(e,p1),(p2,e),(e,p2) against its two
+# predecessors — exactly the batch lead(1)/lead(2) pairs — then shifts
+# p2←p1, p1←e. State is two strings per user.
+SKIPGRAM_SPEC = FoldSpec(
+    ("event_type",), _skipgram_fold, _no_final, SKIPGRAM_OUTPUT, "2 seconds"
+)
+# The same fold with the map-side combine at the operator boundary: the
+# event-type vocabulary is tiny, so a group's raw pairs collapse to <=25
+# distinct (center, context, cnt) rows before crossing Arrow — the partial
+# aggregate the consumer's global pair count would force anyway. Counts
+# are batch-additive, so the multi-batch timer path stays correct under
+# the consumer's SUM.
+SKIPGRAM_COUNTED_SPEC = SKIPGRAM_SPEC._replace(
+    out_schema=SKIPGRAM_COUNT_OUTPUT, batch_reduce=_count_pairs
+)
 
 
 FUNNEL_OUTPUT = StructType(
@@ -531,16 +638,6 @@ FUNNEL_OUTPUT = StructType(
         StructField("click_us", LongType()),
         StructField("purchase_us", LongType()),
         StructField("funnel_stage", IntegerType()),
-    ]
-)
-
-_FUNNEL_STATE = StructType(
-    [
-        StructField("v_us", LongType()),
-        StructField("c_us", LongType()),
-        StructField("p_us", LongType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_et", ArrayType(IntegerType())),
     ]
 )
 
@@ -570,678 +667,89 @@ def funnel_fold(v, c, p, us, et, window_us):
     return v, c, p
 
 
-def funnel_stateful(
-    events: DataFrame,
-    flush_ms: int,
-    window_us: int,
-    per_key_timers: bool = False,
-) -> DataFrame:
+def _funnel_row(uid, v, c, p) -> tuple:
+    """One ``FUNNEL_OUTPUT`` row; unmatched (-1) stages become NULL."""
+    return (
+        uid,
+        int(v),
+        int(c) if c >= 0 else None,
+        int(p) if p >= 0 else None,
+        1 + int(c >= 0) + int(p >= 0),
+    )
+
+
+def funnel_spec(window_us: int) -> FoldSpec:
     """Streaming sequential pattern matcher — the CEP class (Flink's
-    `CEP.pattern(A.followedBy(B).followedBy(C).within(T))`, which the
+    ``CEP.pattern(A.followedBy(B).followedBy(C).within(T))``, which the
     reference's DataStream engine would express with a keyed
-    ProcessFunction exactly like its Q8/QX state machines,
-    `NexmarkQuery8.java:433-504`): per user, match the earliest `view`,
-    the earliest `click` at-or-after it, and the earliest `purchase`
-    at-or-after that click within `window_us` of the view.
+    ProcessFunction like its Q8/QX state machines,
+    ``NexmarkQuery8.java:433-504``): per user, the earliest ``view``, the
+    earliest ``click`` at-or-after it, and the earliest ``purchase``
+    at-or-after that click within ``window_us`` of the view. The fold is
+    ``funnel_fold`` over watermark-finalized prefixes (exact regardless of
+    arrival order within a prefix — Flink CEP's sort buffer); one row per
+    user with a matched view at end of input. ``funnel_stateful`` is the
+    continuous form that emits each row as soon as it is immutable."""
 
-    Watermark-correct under micro-batch disorder, the Flink-CEP
-    discipline: arriving events are BUFFERED in state; each batch folds
-    only the buffered prefix whose event time is at-or-below the current
-    watermark (a finalized, complete prefix — so the stage-wise masked-min
-    fold is exact regardless of arrival order within it), and keeps the
-    rest pending. Matched state is the three timestamps (-1 = unmatched);
-    the pending buffer is bounded by the watermark lag times the per-key
-    rate, exactly Flink CEP's sort buffer. Emission is timer-driven:
-    every key registers an event-time timeout at `flush_ms` (a horizon
-    past the bounded input, the analog of Flink's end-of-input watermark
-    flush); when the watermark crosses it, the key folds its remaining
-    buffer, emits its final funnel row once, and drops its state.
+    def fold(uid, ustate, rows):
+        v, c, p = ustate or (-1, -1, -1)
+        hits = [(r[1], _FUNNEL_ET[r[3]]) for r in rows if r[3] in _FUNNEL_ET]
+        if hits:
+            us, et = np.asarray(hits, dtype=np.int64).T
+            v, c, p = funnel_fold(v, c, p, us, et, window_us)
+        return (v, c, p), []
 
-    ``per_key_timers=True`` is the CONTINUOUS deployment shape — the
-    reference's timer-per-auction pattern (NexmarkQueryX.java:465): a key
-    with a matched view arms its timer at ``view + window`` instead of
-    the global horizon. When it fires, the key's row is emitted and its
-    state dropped iff the row is provably immutable under the batch
-    semantics: view and click are watermark-finalized minima, and no
-    future purchase can land inside ``[click, view + window]`` once the
-    watermark passed ``view + window``. Because the batch semantics put
-    NO upper bound on the click, a clickless key can still upgrade
-    (stage 1 → 2) at any future time — those keys re-arm at ``flush_ms``
-    and only settle at end-of-input (Flink CEP would bound them with the
-    pattern's within(T); the batch oracle does not, so neither do we).
-    Because Spark only delivers hasTimedOut to keys with NO data in the
-    batch, the immutability check also runs on the data path — a
-    steady-traffic key emits the moment the watermark proves its row,
-    timer or not. After emission the state shrinks to a three-int
-    tombstone (v = -2) that swallows later traffic — the batch oracle
-    says one row per user, so a later view must NOT start a fresh match
-    (Flink CEP's SKIP_PAST_LAST_EVENT would; a production deployment
-    choosing that semantics just drops the tombstone). Tombstones are
-    removed at the end-of-input horizon. Incremental emission before
-    end-of-input is pinned by tests/test_continuous_cep.py."""
+    def final(uid, ustate):
+        v, c, p = ustate
+        return [_funnel_row(uid, v, c, p)] if v >= 0 else []
 
-    def _fold(v, c, p, us, et):
-        return funnel_fold(v, c, p, us, et, window_us)
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        uid = int(key[0])
-
-        def _emit_row(v, c, p):
-            stage = 1 + int(c >= 0) + int(p >= 0)
-            return pd.DataFrame(
-                {
-                    "user_id": [uid],
-                    "view_us": [v],
-                    "click_us": [c if c >= 0 else None],
-                    "purchase_us": [p if p >= 0 else None],
-                    "funnel_stage": [stage],
-                }
-            )
-
-        if state.hasTimedOut:
-            v, c, p, buf_us, buf_et = state.get
-            if v == -2:  # emitted tombstone: nothing left to say
-                state.remove()
-                return
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            if per_key_timers and wm_us < flush_ms * 1000:
-                # per-key horizon fired (watermark passed view + window,
-                # but NOT end-of-input): fold the newly-finalized prefix,
-                # then emit-and-drop iff the row can no longer change
-                pend_us, pend_et = [], []
-                if len(buf_us):
-                    us = np.asarray(buf_us, dtype=np.int64)
-                    et = np.asarray(buf_et, dtype=np.int64)
-                    ready = us <= wm_us
-                    v, c, p = _fold(v, c, p, us[ready], et[ready])
-                    pend_us = us[~ready].tolist()
-                    pend_et = et[~ready].tolist()
-                if v >= 0 and c >= 0:
-                    # view/click are finalized minima; wm > view + window
-                    # rules out any future purchase match — immutable.
-                    # Leave a tombstone so later events can't restart the
-                    # match (keeps output ≡ the batch oracle's one row
-                    # per user); it shrinks state to three ints and is
-                    # removed at the end-of-input horizon
-                    state.update((-2, -1, -1, [], []))
-                    state.setTimeoutTimestamp(
-                        max(flush_ms, state.getCurrentWatermarkMs() + 1)
-                    )
-                    yield _emit_row(v, c, p)
-                else:
-                    # clickless: stage may still upgrade (the batch
-                    # semantics leave the click unbounded) — hold to the
-                    # end-of-input horizon
-                    state.update((v, c, p, pend_us, pend_et))
-                    state.setTimeoutTimestamp(
-                        max(flush_ms, state.getCurrentWatermarkMs() + 1)
-                    )
-                return
-            state.remove()
-            if len(buf_us):  # end-of-input: every pending event is final
-                v, c, p = _fold(
-                    v,
-                    c,
-                    p,
-                    np.asarray(buf_us, dtype=np.int64),
-                    np.asarray(buf_et, dtype=np.int64),
-                )
-            if v >= 0:
-                yield _emit_row(v, c, p)
-            return
-        if uid < 0:  # flush sentinel: advances the watermark, carries no state
-            return
-        if state.exists:
-            v, c, p, buf_us, buf_et = state.get
-            if v == -2:  # emitted tombstone: swallow the traffic
-                state.setTimeoutTimestamp(
-                    max(flush_ms, state.getCurrentWatermarkMs() + 1)
-                )
-                return
-            buf_us, buf_et = list(buf_us), list(buf_et)
-        else:
-            v, c, p, buf_us, buf_et = -1, -1, -1, [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            m = pdf["event_type"].map(_FUNNEL_ET)
-            keep = m.notna()
-            buf_us.extend(pdf["us"][keep].astype("int64").tolist())
-            buf_et.extend(m[keep].astype("int64").tolist())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if buf_us:
-            us = np.asarray(buf_us, dtype=np.int64)
-            et = np.asarray(buf_et, dtype=np.int64)
-            ready = us <= wm_us
-            if ready.any():
-                v, c, p = _fold(v, c, p, us[ready], et[ready])
-                pend = ~ready
-                buf_us = us[pend].tolist()
-                buf_et = et[pend].tolist()
-        if per_key_timers and v >= 0 and c >= 0 and wm_us > v + window_us:
-            # the key's row is already immutable (view/click finalized
-            # minima, watermark past view + window rules out any future
-            # purchase): emit NOW, shrink state to the tombstone.
-            # Necessary in the data path, not just the timeout branch —
-            # Spark only delivers hasTimedOut to keys with no data in
-            # the batch, so a steady-traffic key would otherwise never
-            # fire its timer
-            state.update((-2, -1, -1, [], []))
-            state.setTimeoutTimestamp(
-                max(flush_ms, state.getCurrentWatermarkMs() + 1)
-            )
-            yield _emit_row(v, c, p)
-            return
-        state.update((v, c, p, buf_us, buf_et))
-        if per_key_timers and v >= 0:
-            # continuous shape: arm at the key's own immutability horizon
-            # (view + window); clickless keys that outlive it re-arm at
-            # the global horizon in the timeout branch above
-            horizon_ms = (v + window_us) // 1000 + 1
-            state.setTimeoutTimestamp(
-                max(horizon_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        else:
-            state.setTimeoutTimestamp(
-                max(flush_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        return
-        yield  # pragma: no cover — generator form
-
-    return (
-        events.withWatermark("ts", "2 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=FUNNEL_OUTPUT,
-            stateStructType=_FUNNEL_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-SCD2_OUTPUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("valid_from_us", LongType()),
-        StructField("valid_to_us", LongType()),
-        StructField("state_value", StringType()),
-        StructField("version", IntegerType()),
-        StructField("is_current", BooleanType()),
-    ]
-)
-
-_SCD2_STATE = StructType(
-    [
-        StructField("cur_state", StringType()),
-        StructField("cur_from", LongType()),
-        StructField("ver", IntegerType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_eid", ArrayType(LongType())),
-        StructField("buf_et", ArrayType(StringType())),
-    ]
-)
-
-
-def scd2_stateful(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Streaming CDC merge — maintain an SCD type-2 dimension from the
-    event changelog as it arrives (the continuous form of the batch
-    `scd2_user_state`): per user, compress no-op updates and emit each
-    closed validity interval the moment its successor's event time is
-    FINALIZED by the watermark; the still-open interval emits at the
-    flush horizon with is_current = true.
-
-    Same watermark discipline as `funnel_stateful`: arriving events
-    buffer in keyed state; each batch folds, in (event-time, event_id)
-    order, only the buffered prefix at-or-below the current watermark —
-    so closed intervals are immutable when emitted (append-mode-sound),
-    exactly how a streaming MERGE must behave to feed a queryable SCD2
-    table incrementally. Pending-buffer size is bounded by watermark
-    lag; durable state is one (state, from, version) triple per key."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        uid = int(key[0])
-
-        def fold(cur_state, cur_from, ver, us, eid, et):
-            order = np.lexsort((eid, us))
-            closed = []
-            for i in order:
-                e = et[i]
-                if ver == 0 or e != cur_state:
-                    if ver > 0:
-                        closed.append(
-                            (int(cur_from), int(us[i]), cur_state, int(ver))
-                        )
-                    cur_state, cur_from, ver = e, int(us[i]), ver + 1
-            return cur_state, cur_from, ver, closed
-
-        def emit(closed, final=None):
-            rows = [
-                (uid, f, t, s, v, False) for (f, t, s, v) in closed
-            ]
-            if final is not None:
-                rows.append((uid, final[0], None, final[1], final[2], True))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "user_id",
-                        "valid_from_us",
-                        "valid_to_us",
-                        "state_value",
-                        "version",
-                        "is_current",
-                    ],
-                )
-
-        if state.hasTimedOut:
-            cur_state, cur_from, ver, buf_us, buf_eid, buf_et = state.get
-            state.remove()
-            closed = []
-            if len(buf_us):  # end-of-input: everything pending is final
-                cur_state, cur_from, ver, closed = fold(
-                    cur_state,
-                    cur_from,
-                    ver,
-                    np.asarray(buf_us, dtype=np.int64),
-                    np.asarray(buf_eid, dtype=np.int64),
-                    list(buf_et),
-                )
-            final = (cur_from, cur_state, ver) if ver > 0 else None
-            yield from emit(closed, final)
-            return
-        if uid < 0:  # flush sentinel: advances the watermark only
-            return
-        if state.exists:
-            cur_state, cur_from, ver, buf_us, buf_eid, buf_et = state.get
-            buf_us, buf_eid, buf_et = (
-                list(buf_us),
-                list(buf_eid),
-                list(buf_et),
-            )
-        else:
-            cur_state, cur_from, ver = "", -1, 0
-            buf_us, buf_eid, buf_et = [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            buf_us.extend(pdf["us"].astype("int64").tolist())
-            buf_eid.extend(pdf["event_id"].astype("int64").tolist())
-            buf_et.extend(pdf["event_type"].astype(str).tolist())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        closed = []
-        if buf_us:
-            us = np.asarray(buf_us, dtype=np.int64)
-            eid = np.asarray(buf_eid, dtype=np.int64)
-            et = np.asarray(buf_et, dtype=object)
-            ready = us <= wm_us
-            if ready.any():
-                cur_state, cur_from, ver, closed = fold(
-                    cur_state, cur_from, ver, us[ready], eid[ready], et[ready]
-                )
-                pend = ~ready
-                buf_us = us[pend].tolist()
-                buf_eid = eid[pend].tolist()
-                buf_et = list(et[pend])
-            else:
-                buf_us, buf_eid, buf_et = us.tolist(), eid.tolist(), list(et)
-        state.update((cur_state, cur_from, ver, buf_us, buf_eid, buf_et))
-        state.setTimeoutTimestamp(
-            max(flush_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield from emit(closed)
-
-    return (
-        events.withWatermark("ts", "2 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SCD2_OUTPUT,
-            stateStructType=_SCD2_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-SKIPGRAM_OUTPUT = StructType(
-    [
-        StructField("center", StringType()),
-        StructField("context", StringType()),
-    ]
-)
-
-_SKIPGRAM_STATE = StructType(
-    [
-        StructField("p1", StringType()),
-        StructField("p2", StringType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_eid", ArrayType(LongType())),
-        StructField("buf_et", ArrayType(StringType())),
-    ]
-)
-
-
-def skipgram_stateful(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Streaming training-example generation — emit word2vec-style
-    (center, context) skip-gram pairs (window ±2, symmetric) from
-    per-user event sequences AS THEY ARRIVE: the online counterpart of
-    the batch ``skipgram_pairs`` window pass, for pipelines that mine
-    examples from a live clickstream instead of a nightly batch.
-
-    Same watermark discipline as ``funnel_stateful``: arriving events
-    buffer in keyed state; each batch folds, in (event-time, event_id)
-    order, only the watermark-finalized prefix — each finalized event e
-    emits its four pairs against the two predecessors p1/p2 held in
-    state ((p1,e),(e,p1),(p2,e),(e,p2), exactly the batch lead(1)/
-    lead(2) pairs), then shifts p2←p1, p1←e. Durable state per key is
-    TWO strings regardless of history length; emission is incremental
-    and append-mode-sound (a pair, once its center/context are below
-    the watermark, never changes). The end-of-input flush timer folds
-    the last watermark-lag's worth of pending events."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        uid = int(key[0])
-
-        def fold(p1, p2, us, eid, et):
-            order = np.lexsort((eid, us))
-            centers, contexts = [], []
-            for i in order:
-                e = et[i]
-                if p1 is not None:
-                    centers.extend((p1, e))
-                    contexts.extend((e, p1))
-                if p2 is not None:
-                    centers.extend((p2, e))
-                    contexts.extend((e, p2))
-                p2, p1 = p1, e
-            return p1, p2, centers, contexts
-
-        def emit(centers, contexts):
-            if centers:
-                yield pd.DataFrame({"center": centers, "context": contexts})
-
-        if state.hasTimedOut:
-            p1, p2, buf_us, buf_eid, buf_et = state.get
-            state.remove()
-            if len(buf_us):  # end-of-input: everything pending is final
-                _, _, centers, contexts = fold(
-                    p1 or None,
-                    p2 or None,
-                    np.asarray(buf_us, dtype=np.int64),
-                    np.asarray(buf_eid, dtype=np.int64),
-                    list(buf_et),
-                )
-                yield from emit(centers, contexts)
-            return
-        if uid < 0:  # flush sentinel: advances the watermark only
-            return
-        if state.exists:
-            p1, p2, buf_us, buf_eid, buf_et = state.get
-            buf_us, buf_eid, buf_et = list(buf_us), list(buf_eid), list(buf_et)
-        else:
-            p1, p2, buf_us, buf_eid, buf_et = "", "", [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            buf_us.extend(pdf["us"].astype("int64").tolist())
-            buf_eid.extend(pdf["event_id"].astype("int64").tolist())
-            buf_et.extend(pdf["event_type"].astype(str).tolist())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        centers, contexts = [], []
-        if buf_us:
-            us = np.asarray(buf_us, dtype=np.int64)
-            eid = np.asarray(buf_eid, dtype=np.int64)
-            et = np.asarray(buf_et, dtype=object)
-            ready = us <= wm_us
-            if ready.any():
-                p1, p2, centers, contexts = fold(
-                    p1 or None, p2 or None, us[ready], eid[ready], et[ready]
-                )
-                pend = ~ready
-                buf_us = us[pend].tolist()
-                buf_eid = eid[pend].tolist()
-                buf_et = list(et[pend])
-            else:
-                buf_us, buf_eid, buf_et = us.tolist(), eid.tolist(), list(et)
-        state.update((p1 or "", p2 or "", buf_us, buf_eid, buf_et))
-        state.setTimeoutTimestamp(
-            max(flush_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield from emit(centers, contexts)
-
-    return (
-        events.withWatermark("ts", "2 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SKIPGRAM_OUTPUT,
-            stateStructType=_SKIPGRAM_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-EWMA_OUTPUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", IntegerType()),
-        StructField("ewma_fp", LongType()),
-        StructField("last_v_fp", LongType()),
-    ]
-)
-
-_EWMA_STATE = StructType(
-    [
-        StructField("acc", LongType()),
-        StructField("n", LongType()),
-        StructField("last_v", LongType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_eid", ArrayType(LongType())),
-        StructField("buf_v", ArrayType(LongType())),
-    ]
-)
-
-
-def ewma_stateful(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Continuously-maintained quantized EWMA feature — the streaming
-    form of the batch ``user_value_ewma`` fold: per user, the running
-    fixed-point recursion acc = (acc + v_fp) DIV 2 advances as each
-    event is watermark-FINALIZED, exactly the feature-store pattern
-    where a serving-side feature must reflect the stream up to the
-    watermark at all times.
-
-    Same watermark discipline as ``funnel_stateful``/``scd2_stateful``:
-    arriving events buffer in keyed state; each batch folds, in
-    (event-time, event_id) order, only the buffered prefix at-or-below
-    the watermark (an EWMA folded out of order is a different number —
-    the order gate IS the correctness condition). Durable state is
-    three BIGINTs per key plus the watermark-lag pending buffer; the
-    fold is O(ready events). The feature row itself is only emitted at
-    the end-of-input flush timer (append-mode-sound: the full-history
-    EWMA is final only when input ends), which is what lets the replay
-    share the batch oracle verbatim; a serving deployment would swap
-    the sink for a keyed upsert and read the state store directly."""
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        uid = int(key[0])
-
-        def fold(acc, n, last_v, us, eid, v):
-            order = np.lexsort((eid, us))
-            for i in order:
-                x = int(v[i])
-                acc = (acc + x) // 2
-                last_v = x
-                n += 1
-            return acc, n, last_v
-
-        if state.hasTimedOut:
-            acc, n, last_v, buf_us, buf_eid, buf_v = state.get
-            state.remove()
-            if len(buf_us):  # end-of-input: everything pending is final
-                acc, n, last_v = fold(
-                    acc,
-                    n,
-                    last_v,
-                    np.asarray(buf_us, dtype=np.int64),
-                    np.asarray(buf_eid, dtype=np.int64),
-                    np.asarray(buf_v, dtype=np.int64),
-                )
-            if n > 0:
-                yield pd.DataFrame(
-                    [(uid, int(n), int(acc), int(last_v))],
-                    columns=["user_id", "n_events", "ewma_fp", "last_v_fp"],
-                )
-            return
-        if uid < 0:  # flush sentinel: advances the watermark only
-            return
-        if state.exists:
-            acc, n, last_v, buf_us, buf_eid, buf_v = state.get
-            buf_us, buf_eid, buf_v = list(buf_us), list(buf_eid), list(buf_v)
-        else:
-            acc, n, last_v = 0, 0, 0
-            buf_us, buf_eid, buf_v = [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            buf_us.extend(pdf["us"].astype("int64").tolist())
-            buf_eid.extend(pdf["event_id"].astype("int64").tolist())
-            buf_v.extend(pdf["v_fp"].astype("int64").tolist())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if buf_us:
-            us = np.asarray(buf_us, dtype=np.int64)
-            eid = np.asarray(buf_eid, dtype=np.int64)
-            v = np.asarray(buf_v, dtype=np.int64)
-            ready = us <= wm_us
-            if ready.any():
-                acc, n, last_v = fold(
-                    acc, n, last_v, us[ready], eid[ready], v[ready]
-                )
-                pend = ~ready
-                buf_us = us[pend].tolist()
-                buf_eid = eid[pend].tolist()
-                buf_v = v[pend].tolist()
-        state.update((acc, n, last_v, buf_us, buf_eid, buf_v))
-        state.setTimeoutTimestamp(
-            max(flush_ms, state.getCurrentWatermarkMs() + 1)
-        )
-
-    return (
-        events.withWatermark("ts", "2 seconds")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=EWMA_OUTPUT,
-            stateStructType=_EWMA_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bucketed replay twins — fewer Python group calls for the same semantics
-# ---------------------------------------------------------------------------
-
-_BUCKETED_STATE = StructType([StructField("blob", BinaryType())])
+    return FoldSpec(("event_type",), fold, final, FUNNEL_OUTPUT, "30 seconds")
 
 
 def bucketed_stateful(
     events: DataFrame,
     flush_ms: int,
-    value_cols: list,
-    fold_fn,
-    final_fn,
-    out_schema: StructType,
-    n_buckets: int = 16,
-    watermark: str = "30 seconds",
-    batch_reduce=None,
+    spec: FoldSpec,
+    n_buckets: Optional[int] = 16,
 ) -> DataFrame:
-    """Keyed-state replay with state coarsened to ``n_buckets`` hash
-    buckets of user_id — the generic harness behind the bucketed
-    streaming twins (VERDICT r8 task 3: the per-key
-    ``applyInPandasWithState`` replicas pay one Python call + one Arrow
-    group + one state (de)serialization PER KEY PER BATCH — ~2 s of pure
-    machinery for 1500 keys at sf0.1, measured with a trivial counter fn
-    — while the semantics only need per-USER ordering, which the bucket
-    fn preserves internally). This is exactly the state-coarsening that
+    """The watermark-fold driver: run ``spec`` over an event stream with
+    columns (user_id, us, event_id, *spec.value_cols, ts).
+
+    Watermark discipline (the Flink-CEP / keyed-ProcessFunction
+    discipline): arriving rows buffer in state; each batch folds, in
+    (user, event-time, event_id) order, only the buffered prefix
+    at-or-below the current watermark — a finalized, complete prefix, so
+    every emitted row is immutable (append-mode-sound) — and keeps the
+    rest pending. The pending buffer is bounded by the watermark lag
+    times the per-user rate. The end-of-input flush timer at ``flush_ms``
+    folds the pending tail and emits ``spec.final`` per user.
+
+    State is coarsened to ``n_buckets`` hash buckets of user_id: the
+    per-key form pays one Python call + one Arrow group + one state
+    (de)serialization PER KEY PER BATCH (~2 s of pure machinery for 1500
+    keys at sf0.1, measured with a trivial counter fn), while the
+    semantics only need per-USER ordering, which the fold loop preserves
+    inside a bucket. This is the state-coarsening that
     ``transformWithState``'s operator-scoped state would give (probed,
-    protobuf-gated — streaming/tws.py); at real scale ``n_buckets``
-    rides the shuffle-partition count so state per bucket stays
-    users/buckets-bounded. Local default 16 (r11 A/B at sf0.1, 8 state
-    partitions: 64 buckets pay 64 group-call Arrow flushes for no extra
-    parallelism — 8/16-bucket runs sit 0.2-0.3 s lower inside a ±0.25 s
-    noise band).
+    protobuf-gated — streaming/tws.py); at real scale ``n_buckets`` rides
+    the shuffle-partition count. Local default 16 (r11 A/B at sf0.1, 8
+    state partitions: 64 buckets pay 64 group-call Arrow flushes for no
+    extra parallelism). ``n_buckets=None`` groups by user_id instead —
+    the per-key reference form tests/test_bucketed_stateful.py compares
+    the bucketed runs against.
 
-    Watermark discipline is IDENTICAL to the per-key replicas: arriving
-    rows buffer in bucket state; each batch folds, in (user, event-time,
-    event_id) order, only the watermark-finalized prefix, via
-    ``fold_fn(uid, ustate_or_None, rows) -> (ustate', out_rows)`` called
-    once per (user, batch); the end-of-input flush timer folds the
-    pending tail and emits ``final_fn(uid, ustate) -> out_rows``.
-    Per-key parity is pinned by tests/test_bucketed_stateful.py — the
-    bucketed twin must emit the exact row SET of the per-key replica
-    (which itself sits under the batch-oracle hash gate).
-
-    END-OF-INPUT FAST PATH (r11, VERDICT r10 task 1): the flush sentinel
-    (user_id < 0 — the bounded-replay analog of Flink's end-of-input
-    watermark) is broadcast to EVERY bucket (the one-row sentinel
-    explodes to ``n_buckets`` rows JVM-side), and a bucket that sees it
-    folds everything it holds IN THE DATA BATCH — all rows are final at
-    end-of-input by definition — emits, and drops its state without
-    registering a timer. The file source delivers files in order and the
-    sentinel file sorts last, so a bucket's sentinel can never precede
-    its data. This collapses the pre-r11 shape (batch 1 pickles the full
-    event set into bucket state; the trailing no-data batch unpickles,
-    folds, and emits) into ONE Python pass with no state round-trip —
-    the two-batch cost was the whole remaining streaming-overhead gap.
-    Sentinel-less streams (the continuous deployment) keep the
-    buffer-at-watermark / timer-flush discipline unchanged
-    (tests/test_bucketed_stateful.py::test_multibatch_timer_path).
-
-    State is one pickled blob per bucket: (stats dict uid->ustate,
-    pending row list). Pickle here is INTERNAL state representation —
-    emitted rows, the oracle-gated surface, never pass through it.
-
-    ``batch_reduce(out_rows) -> out_rows`` (optional) collapses a
-    bucket's emission batch before it crosses Arrow — for twins whose
-    consumers aggregate anyway (skipgram: 400 K raw pairs per replay
-    collapse to <=25 distinct (center, context) counts per bucket), the
-    map-side combine that a JVM partial aggregate would do, applied at
-    the operator boundary. Totals are batch-additive, so the multi-batch
-    timer path emits partial counts per batch and the consumer's SUM is
-    unchanged."""
-    import pickle
-
-    from itertools import groupby
-
-    out_cols = [f.name for f in out_schema.fields]
+    END-OF-INPUT FAST PATH: the flush sentinel (user_id < 0 — the
+    bounded-replay analog of Flink's end-of-input watermark) is broadcast
+    to EVERY bucket, and a bucket that sees it folds everything it holds
+    IN THE DATA BATCH — all rows are final at end-of-input — emits, and
+    drops its state without registering a timer. The file source
+    delivers files in order and the sentinel file sorts last, so a
+    bucket's sentinel can never precede its data. Under per-user grouping
+    the sentinel is its own inert group and every user flushes on the
+    timer instead. Sentinel-less streams (the continuous deployment) keep
+    the buffer-at-watermark / timer-flush discipline
+    (tests/test_bucketed_stateful.py::test_multibatch_timer_path)."""
+    out_cols = [f.name for f in spec.out_schema.fields]
 
     def fn(
         key: Tuple[Any, ...],
@@ -1252,26 +760,29 @@ def bucketed_stateful(
             rows.sort(key=lambda r: (r[0], r[1], r[2]))
             out = []
             for uid, grp in groupby(rows, key=lambda r: r[0]):
-                ustate, emitted = fold_fn(uid, stats.get(uid), list(grp))
-                stats[uid] = ustate
+                stats[uid], emitted = spec.fold(uid, stats.get(uid), list(grp))
                 out.extend(emitted)
             return out
+
+        def flush(stats, pending):
+            # end of input: every buffered row is final
+            out = fold_ready(stats, pending)
+            for uid in sorted(stats):
+                out.extend(spec.final(uid, stats[uid]))
+            return out
+
+        def emit(out):
+            if out:
+                if spec.batch_reduce is not None:
+                    out = spec.batch_reduce(out)
+                yield pd.DataFrame(out, columns=out_cols)
 
         if state.hasTimedOut:
             stats, pending = pickle.loads(state.get[0])
             state.remove()
-            out = fold_ready(stats, pending) if pending else []
-            for uid in sorted(stats):
-                out.extend(final_fn(uid, stats[uid]))
-            if out:
-                if batch_reduce is not None:
-                    out = batch_reduce(out)
-                yield pd.DataFrame(out, columns=out_cols)
+            yield from emit(flush(stats, pending))
             return
-        if state.exists:
-            stats, pending = pickle.loads(state.get[0])
-        else:
-            stats, pending = {}, []
+        stats, pending = pickle.loads(state.get[0]) if state.exists else ({}, [])
         eoi = False  # end-of-input sentinel delivered in THIS batch
         for pdf in pdfs:
             if not len(pdf):
@@ -1286,239 +797,168 @@ def bucketed_stateful(
                 uids[keep].tolist(),
                 pdf["us"][keep].astype("int64").tolist(),
                 pdf["event_id"][keep].astype("int64").tolist(),
-            ] + [pdf[c][keep].tolist() for c in value_cols]
+            ] + [pdf[c][keep].tolist() for c in spec.value_cols]
             pending.extend(zip(*cols))
         if eoi:
-            # end-of-input: every buffered row is final — fold in (user,
-            # time, id) order, emit the finals, drop the bucket's state;
             # no timer, so the replay completes in this batch
-            out = fold_ready(stats, pending) if pending else []
-            for uid in sorted(stats):
-                out.extend(final_fn(uid, stats[uid]))
             if state.exists:
                 state.remove()
-            if out:
-                if batch_reduce is not None:
-                    out = batch_reduce(out)
-                yield pd.DataFrame(out, columns=out_cols)
+            yield from emit(flush(stats, pending))
             return
         wm_us = state.getCurrentWatermarkMs() * 1000
-        out = []
-        if pending:
-            ready = [r for r in pending if r[1] <= wm_us]
-            if ready:
-                pending = [r for r in pending if r[1] > wm_us]
-                out = fold_ready(stats, ready)
+        ready = [r for r in pending if r[1] <= wm_us]
+        pending = [r for r in pending if r[1] > wm_us]
+        out = fold_ready(stats, ready)
         state.update((pickle.dumps((stats, pending)),))
         state.setTimeoutTimestamp(
             max(flush_ms, state.getCurrentWatermarkMs() + 1)
         )
-        if out:
-            if batch_reduce is not None:
-                out = batch_reduce(out)
-            yield pd.DataFrame(out, columns=out_cols)
+        yield from emit(out)
 
-    sel = ["user_id", "us", "event_id", *value_cols, "ts"]
-    # normal rows take their hash bucket; the one-row end-of-input sentinel
-    # (user_id < 0) explodes to EVERY bucket so each group can flush in the
-    # data batch (one extra row per bucket, JVM-side)
-    bkt = F.explode(
-        F.when(
-            F.col("user_id") >= 0,
-            F.array(F.pmod(F.col("user_id"), F.lit(n_buckets)).cast("int")),
-        ).otherwise(F.sequence(F.lit(0), F.lit(n_buckets - 1)))
-    ).alias("bkt")
-    return (
-        events.withWatermark("ts", watermark)
-        .select(*sel, bkt)
-        .groupBy("bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=_BUCKETED_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    sel = ["user_id", "us", "event_id", *spec.value_cols, "ts"]
+    watermarked = events.withWatermark("ts", spec.watermark)
+    keyed = (
+        watermarked.select(*sel).groupBy("user_id")
+        if n_buckets is None
+        else watermarked.select(*sel, _bucket_col("user_id", n_buckets)).groupBy(
+            "bkt"
         )
     )
-
-
-def ewma_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Bucketed twin of ``ewma_stateful`` — same fold, same flush-only
-    emission, same output set (pinned per-key-parity + batch oracle);
-    2.3 s vs 3.8 s at sf0.1 (min-of-3 alternating)."""
-
-    def fold(uid, ustate, rows):
-        acc, n, last_v = ustate or (0, 0, 0)
-        for r in rows:
-            x = int(r[3])
-            acc = (acc + x) // 2
-            last_v = x
-            n += 1
-        return (acc, n, last_v), []
-
-    def final(uid, ustate):
-        acc, n, last_v = ustate
-        return [(uid, int(n), int(acc), int(last_v))] if n > 0 else []
-
-    return bucketed_stateful(
-        events, flush_ms, ["v_fp"], fold, final, EWMA_OUTPUT
+    return keyed.applyInPandasWithState(
+        fn,
+        outputStructType=spec.out_schema,
+        stateStructType=_BUCKETED_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
-def scd2_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Bucketed twin of ``scd2_stateful`` — closed intervals emit as the
-    watermark finalizes their successor, the open interval at flush."""
-
-    def fold(uid, ustate, rows):
-        cur_state, cur_from, ver = ustate or ("", -1, 0)
-        closed = []
-        for r in rows:
-            e = r[3]
-            if ver == 0 or e != cur_state:
-                if ver > 0:
-                    closed.append(
-                        (uid, int(cur_from), int(r[1]), cur_state, int(ver), False)
-                    )
-                cur_state, cur_from, ver = e, int(r[1]), ver + 1
-        return (cur_state, cur_from, ver), closed
-
-    def final(uid, ustate):
-        cur_state, cur_from, ver = ustate
-        if ver > 0:
-            return [(uid, int(cur_from), None, cur_state, int(ver), True)]
-        return []
-
-    return bucketed_stateful(
-        events, flush_ms, ["event_type"], fold, final, SCD2_OUTPUT,
-        watermark="2 seconds",
-    )
-
-
-def funnel_stateful_bucketed(
-    events: DataFrame, flush_ms: int, window_us: int
-) -> DataFrame:
-    """Bucketed twin of ``funnel_stateful`` — the identical stage-wise
-    masked-min fold (``funnel_fold``, chunking-invariant over the
-    watermark-finalized prefixes the harness delivers), one row per user
-    with a matched view, emitted at the flush horizon. The per-key-timer
-    replica remains the CONTINUOUS deployment form (incremental
-    emit-when-provably-immutable, pinned live by
-    tests/test_continuous_cep.py); this twin carries the bounded-replay
-    entry, where emission timing is unobservable and the per-key Python
-    group-call machinery was the dominant cost (3.1-3.4 s -> ~2 s at
-    sf0.1)."""
-    import numpy as np
-
-    def fold(uid, ustate, rows):
-        v, c, p = ustate or (-1, -1, -1)
-        us, et = [], []
-        for r in rows:
-            code = _FUNNEL_ET.get(r[3])
-            if code is None:
-                continue
-            us.append(r[1])
-            et.append(code)
-        if us:
-            v, c, p = funnel_fold(
-                v,
-                c,
-                p,
-                np.asarray(us, dtype=np.int64),
-                np.asarray(et, dtype=np.int64),
-                window_us,
-            )
-        return (v, c, p), []
-
-    def final(uid, ustate):
-        v, c, p = ustate
-        if v < 0:
-            return []
-        stage = 1 + int(c >= 0) + int(p >= 0)
-        return [
-            (uid, int(v), int(c) if c >= 0 else None,
-             int(p) if p >= 0 else None, stage)
-        ]
-
-    return bucketed_stateful(
-        events, flush_ms, ["event_type"], fold, final, FUNNEL_OUTPUT
-    )
-
-
-def skipgram_stateful_bucketed(events: DataFrame, flush_ms: int) -> DataFrame:
-    """Bucketed twin of ``skipgram_stateful`` — each finalized event
-    emits its four ±2-window pairs against the per-user p1/p2 history."""
-
-    def fold(uid, ustate, rows):
-        p1, p2 = ustate or (None, None)
-        out = []
-        for r in rows:
-            e = r[3]
-            if p1 is not None:
-                out.append((p1, e))
-                out.append((e, p1))
-            if p2 is not None:
-                out.append((p2, e))
-                out.append((e, p2))
-            p2, p1 = p1, e
-        return (p1, p2), out
-
-    def final(uid, ustate):
-        return []
-
-    return bucketed_stateful(
-        events, flush_ms, ["event_type"], fold, final, SKIPGRAM_OUTPUT,
-        watermark="2 seconds",
-    )
-
-
-SKIPGRAM_COUNT_OUTPUT = StructType(
+_FUNNEL_STATE = StructType(
     [
-        StructField("center", StringType()),
-        StructField("context", StringType()),
-        StructField("cnt", LongType()),
+        StructField("v_us", LongType()),
+        StructField("c_us", LongType()),
+        StructField("p_us", LongType()),
+        StructField("buf_us", ArrayType(LongType())),
+        StructField("buf_et", ArrayType(IntegerType())),
     ]
 )
 
+_ALL_FINAL = np.iinfo(np.int64).max  # end of input: every event is final
 
-def skipgram_stateful_counted(events: DataFrame, flush_ms: int) -> DataFrame:
-    """``skipgram_stateful_bucketed`` with the map-side combine applied at
-    the operator boundary: the event-type vocabulary is tiny, so a
-    bucket's ~25 K raw pairs per replay collapse to <=25 distinct
-    (center, context, cnt) rows before crossing Arrow — exactly the
-    partial aggregation the consumer (a global pair-count) would force
-    the engine to do anyway, done where the data is. Per-batch counts
-    are additive, so the multi-batch timer path stays correct under the
-    consumer's SUM. Count parity with the raw bucketed twin (and through
-    it the per-key replica) is pinned by tests/test_bucketed_stateful.py."""
-    from collections import Counter
 
-    def fold(uid, ustate, rows):
-        p1, p2 = ustate or (None, None)
-        out = []
-        for r in rows:
-            e = r[3]
-            if p1 is not None:
-                out.append((p1, e))
-                out.append((e, p1))
-            if p2 is not None:
-                out.append((p2, e))
-                out.append((e, p2))
-            p2, p1 = p1, e
-        return (p1, p2), out
+def funnel_stateful(events: DataFrame, flush_ms: int, window_us: int) -> DataFrame:
+    """The funnel matcher (``funnel_spec``) in its CONTINUOUS deployment
+    shape — the reference's timer-per-auction pattern
+    (NexmarkQueryX.java:465), keyed per user. Arriving events buffer in
+    state and each batch folds the watermark-finalized prefix with
+    ``funnel_fold``, as in ``bucketed_stateful``; but a key with a
+    matched view arms its timer at ``view + window`` instead of the
+    global horizon ``flush_ms``. When it fires, the key's row is emitted
+    and its state dropped iff the row is provably immutable under the
+    batch semantics: view and click are watermark-finalized minima, and
+    no future purchase can land inside ``[click, view + window]`` once
+    the watermark passed ``view + window``. Because the batch semantics
+    put NO upper bound on the click, a clickless key can still upgrade
+    (stage 1 → 2) at any future time — those keys re-arm at ``flush_ms``
+    and only settle at end-of-input (Flink CEP would bound them with the
+    pattern's within(T); the batch oracle does not, so neither do we).
+    Because Spark only delivers hasTimedOut to keys with NO data in the
+    batch, the immutability check also runs on the data path — a
+    steady-traffic key emits the moment the watermark proves its row,
+    timer or not. After emission the state shrinks to a three-int
+    tombstone (v = -2) that swallows later traffic — the batch oracle
+    says one row per user, so a later view must NOT start a fresh match
+    (Flink CEP's SKIP_PAST_LAST_EVENT would; a production deployment
+    choosing that semantics just drops the tombstone). Tombstones are
+    removed at the end-of-input horizon. Incremental emission before
+    end-of-input is pinned by tests/test_continuous_cep.py."""
+    out_cols = [f.name for f in FUNNEL_OUTPUT.fields]
 
-    def final(uid, ustate):
-        return []
+    def fold_ready(v, c, p, buf_us, buf_et, wm_us):
+        # fold the buffered prefix at-or-below the watermark, keep the rest
+        us = np.asarray(buf_us, dtype=np.int64)
+        et = np.asarray(buf_et, dtype=np.int64)
+        ready = us <= wm_us
+        v, c, p = funnel_fold(v, c, p, us[ready], et[ready], window_us)
+        return v, c, p, us[~ready].tolist(), et[~ready].tolist()
 
-    def reduce_counts(out):
-        return [(c, x, n) for (c, x), n in sorted(Counter(out).items())]
+    def fn(
+        key: Tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        uid = int(key[0])
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        horizon_ms = max(flush_ms, state.getCurrentWatermarkMs() + 1)
 
-    return bucketed_stateful(
-        events,
-        flush_ms,
-        ["event_type"],
-        fold,
-        final,
-        SKIPGRAM_COUNT_OUTPUT,
-        watermark="2 seconds",
-        batch_reduce=reduce_counts,
+        def settle(v, c, p):
+            # the row is immutable (view/click finalized minima, watermark
+            # past view + window): emit it and leave a tombstone so later
+            # events can't restart the match; removed at end of input
+            state.update((-2, -1, -1, [], []))
+            state.setTimeoutTimestamp(horizon_ms)
+            return pd.DataFrame([_funnel_row(uid, v, c, p)], columns=out_cols)
+
+        if state.hasTimedOut:
+            v, c, p, buf_us, buf_et = state.get
+            if v == -2:  # emitted tombstone: nothing left to say
+                state.remove()
+                return
+            if wm_us < flush_ms * 1000:
+                # per-key horizon fired (watermark passed view + window,
+                # but NOT end-of-input)
+                v, c, p, buf_us, buf_et = fold_ready(v, c, p, buf_us, buf_et, wm_us)
+                if v >= 0 and c >= 0:
+                    yield settle(v, c, p)
+                else:
+                    # clickless: stage may still upgrade — hold to the
+                    # end-of-input horizon
+                    state.update((v, c, p, buf_us, buf_et))
+                    state.setTimeoutTimestamp(horizon_ms)
+                return
+            state.remove()
+            v, c, p, _, _ = fold_ready(v, c, p, buf_us, buf_et, _ALL_FINAL)
+            if v >= 0:
+                yield pd.DataFrame([_funnel_row(uid, v, c, p)], columns=out_cols)
+            return
+        if uid < 0:  # flush sentinel: advances the watermark, carries no state
+            return
+        if state.exists:
+            v, c, p, buf_us, buf_et = state.get
+            if v == -2:  # emitted tombstone: swallow the traffic
+                state.setTimeoutTimestamp(horizon_ms)
+                return
+            buf_us, buf_et = list(buf_us), list(buf_et)
+        else:
+            v, c, p, buf_us, buf_et = -1, -1, -1, [], []
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            m = pdf["event_type"].map(_FUNNEL_ET)
+            keep = m.notna()
+            buf_us.extend(pdf["us"][keep].astype("int64").tolist())
+            buf_et.extend(m[keep].astype("int64").tolist())
+        v, c, p, buf_us, buf_et = fold_ready(v, c, p, buf_us, buf_et, wm_us)
+        if v >= 0 and c >= 0 and wm_us > v + window_us:
+            yield settle(v, c, p)
+            return
+        state.update((v, c, p, buf_us, buf_et))
+        # arm at the key's own immutability horizon (view + window);
+        # clickless keys that outlive it re-arm at the global horizon
+        state.setTimeoutTimestamp(
+            max((v + window_us) // 1000 + 1, state.getCurrentWatermarkMs() + 1)
+            if v >= 0
+            else horizon_ms
+        )
+
+    return (
+        events.withWatermark("ts", "2 seconds")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=FUNNEL_OUTPUT,
+            stateStructType=_FUNNEL_STATE,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )

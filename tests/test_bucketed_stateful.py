@@ -1,10 +1,11 @@
-"""Bucketed streaming twins must emit the EXACT row set of their per-key
-replicas (r9, VERDICT r8 task 3): `bucketed_stateful` coarsens keyed
-state into hash buckets to amortize the per-key Python group-call
-machinery, and this suite is what licenses that — the per-key replicas
-are the reference forms (they sit under the batch-oracle hash gate via
-the replay entries' shared oracles), so set-equality here transfers the
-oracle guarantee to the bucketed twins. Run at sf0.001 like the rest of
+"""Bucketed state must emit the EXACT row set of per-key state (r9,
+VERDICT r8 task 3): `bucketed_stateful` coarsens keyed state into hash
+buckets to amortize the per-key Python group-call machinery, and this
+suite is what licenses that — the per-key forms (``n_buckets=None``,
+and the continuous ``funnel_stateful``) are the reference forms (they
+sit under the batch-oracle hash gate via the replay entries' shared
+oracles and tests/test_stateful.py), so set-equality here transfers the
+oracle guarantee to the bucketed runs. Run at sf0.001 like the rest of
 CI; the driver re-gates the bucketed entries at sf0.01.
 """
 
@@ -14,33 +15,45 @@ from nexmark_vanilla_flink_spark.plans.linkage import _sentinel_event_stream
 from nexmark_vanilla_flink_spark.streaming.runner import run_available_now
 from nexmark_vanilla_flink_spark.plans.linkage import _FUNNEL_WINDOW_US
 from nexmark_vanilla_flink_spark.streaming.stateful import (
-    ewma_stateful,
-    ewma_stateful_bucketed,
+    EWMA_SPEC,
+    SCD2_SPEC,
+    SKIPGRAM_COUNTED_SPEC,
+    SKIPGRAM_SPEC,
+    bucketed_stateful,
+    funnel_spec,
     funnel_stateful,
-    funnel_stateful_bucketed,
-    scd2_stateful,
-    scd2_stateful_bucketed,
-    skipgram_stateful,
-    skipgram_stateful_bucketed,
+    tagged_union,
+    union_join_stateful,
 )
 
+SPECS = {
+    "ewma": (EWMA_SPEC, True),
+    "scd2": (SCD2_SPEC, False),
+    "skipgram": (SKIPGRAM_SPEC, False),
+    "skipgram_counted": (SKIPGRAM_COUNTED_SPEC, False),
+    "funnel": (funnel_spec(_FUNNEL_WINDOW_US), False),
+}
+
+
+def _per_key(name):
+    spec, _ = SPECS[name]
+    return lambda s, f: bucketed_stateful(s, f, spec, n_buckets=None)
+
+
 PAIRS = {
-    "ewma": (ewma_stateful, ewma_stateful_bucketed, True),
-    "scd2": (scd2_stateful, scd2_stateful_bucketed, False),
-    "skipgram": (skipgram_stateful, skipgram_stateful_bucketed, False),
+    "ewma": _per_key("ewma"),
+    "scd2": _per_key("scd2"),
+    "skipgram": _per_key("skipgram"),
     # per-key-TIMER form vs bucketed flush-horizon emission: the row SET
     # must be identical even though emission timing differs
-    "funnel": (
-        lambda s, f: funnel_stateful(s, f, _FUNNEL_WINDOW_US, per_key_timers=True),
-        lambda s, f: funnel_stateful_bucketed(s, f, _FUNNEL_WINDOW_US),
-        False,
-    ),
+    "funnel": lambda s, f: funnel_stateful(s, f, _FUNNEL_WINDOW_US),
 }
 
 
 @pytest.mark.parametrize("name", sorted(PAIRS))
 def test_bucketed_matches_per_key(spark, sf_dir, name):
-    per_key, bucketed, with_value = PAIRS[name]
+    per_key = PAIRS[name]
+    spec, with_value = SPECS[name]
     stream, flush_ms = _sentinel_event_stream(
         spark, sf_dir, with_value=with_value
     )
@@ -49,7 +62,7 @@ def test_bucketed_matches_per_key(spark, sf_dir, name):
         spark, sf_dir, with_value=with_value
     )
     got = run_available_now(
-        bucketed(stream2, flush_ms2), output_mode="append"
+        bucketed_stateful(stream2, flush_ms2, spec), output_mode="append"
     )
     assert [f.name for f in got.schema.fields] == [
         f.name for f in ref.schema.fields
@@ -60,40 +73,68 @@ def test_bucketed_matches_per_key(spark, sf_dir, name):
     assert len(a) > 0
 
 
+def _union_tagged(spark, sf_dir):
+    """The replay entry's one-scan tagged stream: signups are persons
+    (side 1), views stand in for auctions (side 2)."""
+    from pyspark.sql import functions as F
+
+    from nexmark_vanilla_flink_spark.streaming.sources import stream_events
+
+    ev = stream_events(spark, sf_dir)
+    return ev.filter(F.col("event_type").isin("signup", "view")).select(
+        F.when(F.col("event_type") == "signup", 1)
+        .otherwise(2)
+        .cast("int")
+        .alias("side"),
+        F.col("user_id"),
+        F.col("event_id").alias("row_id"),
+        F.col("ts"),
+    )
+
+
+@pytest.mark.parametrize("name", sorted(SPECS) + ["union_join"])
+def test_per_key_form_has_no_buckets(spark, sf_dir, name):
+    """``n_buckets=None`` really keys state per user: its plan has no
+    bucket column (no ``pmod`` hash, no sentinel ``explode``), while the
+    default plan does — otherwise the parity tests above would compare
+    the bucketed run with itself."""
+
+    def plan(n_buckets):
+        if name == "union_join":
+            df = union_join_stateful(
+                _union_tagged(spark, sf_dir), n_buckets=n_buckets
+            )
+        else:
+            spec, with_value = SPECS[name]
+            stream, flush_ms = _sentinel_event_stream(
+                spark, sf_dir, with_value=with_value
+            )
+            df = bucketed_stateful(stream, flush_ms, spec, n_buckets=n_buckets)
+        return df._jdf.queryExecution().analyzed().toString()
+
+    per_key = plan(None)
+    assert "Generate" not in per_key and "pmod" not in per_key, per_key
+    bucketed = plan(16)
+    assert "pmod" in bucketed, bucketed
+    # the union join emits on arrival with no end-of-input sentinel, so
+    # its bucket column is the bare hash; the watermark-fold driver's
+    # bucket column broadcasts the sentinel to every bucket
+    if name != "union_join":
+        assert "Generate explode" in bucketed, bucketed
+
+
 def test_bucketed_small_bucket_count(spark, sf_dir):
     """n_buckets smaller than the key count still yields the identical
     set — bucket hashing only affects placement, never the fold."""
     stream, flush_ms = _sentinel_event_stream(spark, sf_dir, with_value=True)
     ref = run_available_now(
-        ewma_stateful_bucketed(stream, flush_ms), output_mode="append"
+        bucketed_stateful(stream, flush_ms, EWMA_SPEC), output_mode="append"
     )
-    from nexmark_vanilla_flink_spark.streaming.stateful import (
-        EWMA_OUTPUT,
-        bucketed_stateful,
-    )
-
     stream2, flush_ms2 = _sentinel_event_stream(
         spark, sf_dir, with_value=True
     )
-
-    def fold(uid, ustate, rows):
-        acc, n, last_v = ustate or (0, 0, 0)
-        for r in rows:
-            x = int(r[3])
-            acc = (acc + x) // 2
-            last_v = x
-            n += 1
-        return (acc, n, last_v), []
-
-    def final(uid, ustate):
-        acc, n, last_v = ustate
-        return [(uid, int(n), int(acc), int(last_v))] if n > 0 else []
-
     got = run_available_now(
-        bucketed_stateful(
-            stream2, flush_ms2, ["v_fp"], fold, final, EWMA_OUTPUT,
-            n_buckets=3,
-        ),
+        bucketed_stateful(stream2, flush_ms2, EWMA_SPEC, n_buckets=3),
         output_mode="append",
     )
     a = sorted([tuple(r) for r in got.collect()], key=repr)
@@ -151,13 +192,13 @@ def test_multibatch_timer_path(spark, sf_dir, tmp_path):
     # a sentinel (there is none in this stream)
     flush_ms = hi // 1000 - 3600 * 1000
     got = run_available_now(
-        ewma_stateful_bucketed(stream, flush_ms), output_mode="append"
+        bucketed_stateful(stream, flush_ms, EWMA_SPEC), output_mode="append"
     )
     ref_stream, ref_flush = _sentinel_event_stream(
         spark, sf_dir, with_value=True
     )
     ref = run_available_now(
-        ewma_stateful_bucketed(ref_stream, ref_flush),
+        bucketed_stateful(ref_stream, ref_flush, EWMA_SPEC),
         output_mode="append",
         no_data_batch=False,
     )
@@ -168,38 +209,21 @@ def test_multibatch_timer_path(spark, sf_dir, tmp_path):
 
 def test_union_join_bucketed_parity(spark, sf_dir):
     """The bucketed Q8 union join must emit the exact row SET of the
-    per-key replica (which itself matches the batch join —
+    per-key form (which itself matches the batch join —
     tests/test_stateful.py). n_buckets=3 < key count forces multiple
     users per bucket, exercising the per-user buffer isolation."""
-    from pyspark.sql import functions as F
-
-    from nexmark_vanilla_flink_spark.streaming.sources import (
-        stream_events,
-        stream_nexmark,
-    )
-    from nexmark_vanilla_flink_spark.streaming.stateful import (
-        union_join_stateful,
-        union_join_stateful_bucketed,
-    )
+    from nexmark_vanilla_flink_spark.streaming.sources import stream_nexmark
 
     s = stream_nexmark(spark, sf_dir)
     ref = run_available_now(
-        union_join_stateful(s["persons"], s["auctions"]),
+        union_join_stateful(
+            tagged_union(s["persons"], s["auctions"]), n_buckets=None
+        ),
         output_mode="append",
         no_data_batch=False,
     )
-    ev = stream_events(spark, sf_dir)
-    tagged = ev.filter(F.col("event_type").isin("signup", "view")).select(
-        F.when(F.col("event_type") == "signup", 1)
-        .otherwise(2)
-        .cast("int")
-        .alias("side"),
-        F.col("user_id"),
-        F.col("event_id").alias("row_id"),
-        F.col("ts"),
-    )
     got = run_available_now(
-        union_join_stateful_bucketed(tagged, n_buckets=3),
+        union_join_stateful(_union_tagged(spark, sf_dir), n_buckets=3),
         output_mode="append",
         no_data_batch=False,
     )
@@ -209,26 +233,21 @@ def test_union_join_bucketed_parity(spark, sf_dir):
 
 
 def test_skipgram_counted_parity(spark, sf_dir):
-    """The counted twin's (center, context) -> sum(cnt) table must equal
-    the raw bucketed twin's pair counts (which itself is set-parity-pinned
-    against the per-key replica above)."""
+    """The counted spec's (center, context) -> sum(cnt) table must equal
+    the raw skip-gram pair counts (which are set-parity-pinned against the
+    per-key form above)."""
     from collections import Counter
-
-    from nexmark_vanilla_flink_spark.streaming.stateful import (
-        skipgram_stateful_bucketed,
-        skipgram_stateful_counted,
-    )
 
     stream, flush_ms = _sentinel_event_stream(spark, sf_dir)
     raw = run_available_now(
-        skipgram_stateful_bucketed(stream, flush_ms),
+        bucketed_stateful(stream, flush_ms, SKIPGRAM_SPEC),
         output_mode="append",
         no_data_batch=False,
     )
     ref = Counter((r["center"], r["context"]) for r in raw.collect())
     stream2, flush_ms2 = _sentinel_event_stream(spark, sf_dir)
     counted = run_available_now(
-        skipgram_stateful_counted(stream2, flush_ms2),
+        bucketed_stateful(stream2, flush_ms2, SKIPGRAM_COUNTED_SPEC),
         output_mode="append",
         no_data_batch=False,
     )

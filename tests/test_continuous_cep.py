@@ -18,8 +18,9 @@ from nexmark_vanilla_flink_spark.plans.linkage import (
 )
 from nexmark_vanilla_flink_spark.sources.tables import load_table
 from nexmark_vanilla_flink_spark.streaming.stateful import (
+    SCD2_SPEC,
+    bucketed_stateful,
     funnel_stateful,
-    scd2_stateful,
 )
 
 _SCHEMA = "user_id long, event_type string, us long, event_id long"
@@ -99,7 +100,7 @@ def test_funnel_per_key_timers_emit_before_end_of_input(spark, sf_dir):
         sdf, flush_ms = _sliced_source(spark, sf_dir, d)
         batches = _run_collecting_epochs(
             spark,
-            funnel_stateful(sdf, flush_ms, _FUNNEL_WINDOW_US, per_key_timers=True),
+            funnel_stateful(sdf, flush_ms, _FUNNEL_WINDOW_US),
             "funnel_cont",
         )
     assert batches, "no output at all"
@@ -127,7 +128,9 @@ def test_scd2_closed_intervals_emit_before_end_of_input(spark, sf_dir):
     with tempfile.TemporaryDirectory(prefix="scd2_cont_") as d:
         sdf, flush_ms = _sliced_source(spark, sf_dir, d)
         batches = _run_collecting_epochs(
-            spark, scd2_stateful(sdf, flush_ms), "scd2_cont"
+            spark,
+            bucketed_stateful(sdf, flush_ms, SCD2_SPEC, n_buckets=None),
+            "scd2_cont",
         )
     assert batches
     epochs = [e for e, _ in batches]

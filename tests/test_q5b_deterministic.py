@@ -2,9 +2,9 @@
 NexmarkQuery5b.java:204: accumulate per key, onTimer(now+10s) → emit+clear).
 
 The wall-clock timer makes the streaming query nondeterministic by design, so
-this drives the SAME applyInPandasWithState function with a virtual clock — a
-fake GroupState whose hasTimedOut flag *is* the clock — making the
-accumulate → re-arm → flush → clear cycle assertable, batch by batch."""
+this drives the SAME applyInPandasWithState function (``q5b_flush_fn``) with
+a virtual clock — a fake GroupState whose hasTimedOut flag *is* the clock —
+making the accumulate → re-arm → flush → clear cycle assertable, batch by batch."""
 
 import pandas as pd
 
@@ -41,32 +41,12 @@ class FakeState:
         self.timeout_ms = ms
 
 
-def _fn(spark, flush_ms=10_000):
-    # reach the inner function exactly as applyInPandasWithState would
-    captured = {}
-
-    class Grab:
-        def withColumn(self, *a, **k):
-            return self
-
-        def groupBy(self, *a, **k):
-            return self
-
-        def applyInPandasWithState(self, fn, **k):
-            captured["fn"] = fn
-            return self
-
-    assert spark is not None  # F.col in the builder needs a live SparkContext
-    stateful.q5b_proc_time_flush(Grab(), flush_interval_ms=flush_ms)
-    return captured["fn"]
-
-
 def _batch(bids, ts):
     return pd.DataFrame({"bid": bids, "b_ts_ns": ts})
 
 
-def test_accumulates_and_arms_10s_timer(spark):
-    fn = _fn(spark)
+def test_accumulates_and_arms_10s_timer():
+    fn = stateful.q5b_flush_fn(10_000)
     st = FakeState()
     out = list(fn((7,), iter([_batch([3.0, 9.0], [5_000_000_000, 6_000_000_000])]), st))
     assert out == []  # nothing emitted before the timer fires
@@ -75,8 +55,8 @@ def test_accumulates_and_arms_10s_timer(spark):
     assert st.timeout_ms == 10_000  # NexmarkQuery5b.java:204 — now + 10 s
 
 
-def test_second_batch_merges_into_existing_state(spark):
-    fn = _fn(spark)
+def test_second_batch_merges_into_existing_state():
+    fn = stateful.q5b_flush_fn(10_000)
     st = FakeState()
     list(fn((7,), iter([_batch([3.0], [5_000_000_000])]), st))
     list(fn((7,), iter([_batch([2.0, 8.0], [9_000_000_000, 4_000_000_000])]), st))
@@ -84,8 +64,8 @@ def test_second_batch_merges_into_existing_state(spark):
     assert (max_bid, cnt, last_ts) == (8.0, 3, 9_000_000_000)
 
 
-def test_timeout_flushes_accumulated_state_and_clears(spark):
-    fn = _fn(spark)
+def test_timeout_flushes_accumulated_state_and_clears():
+    fn = stateful.q5b_flush_fn(10_000)
     st = FakeState()
     list(fn((7,), iter([_batch([3.0, 9.0], [5_000_000_000, 6_000_000_000])]), st))
     st.hasTimedOut = True
@@ -99,8 +79,8 @@ def test_timeout_flushes_accumulated_state_and_clears(spark):
     assert st.removed  # state cleared after flush (emit-and-clear semantics)
 
 
-def test_flush_then_new_bids_start_fresh_window(spark):
-    fn = _fn(spark)
+def test_flush_then_new_bids_start_fresh_window():
+    fn = stateful.q5b_flush_fn(10_000)
     st = FakeState()
     list(fn((7,), iter([_batch([9.0], [6_000_000_000])]), st))
     st.hasTimedOut = True
@@ -111,8 +91,8 @@ def test_flush_then_new_bids_start_fresh_window(spark):
     assert (max_bid, cnt, last_ts) == (1.0, 1, 7_000_000_000)
 
 
-def test_custom_flush_interval_propagates(spark):
-    fn = _fn(spark, flush_ms=2_500)
+def test_custom_flush_interval_propagates():
+    fn = stateful.q5b_flush_fn(2_500)
     st = FakeState()
     list(fn((1,), iter([_batch([1.0], [1_000_000_000])]), st))
     assert st.timeout_ms == 2_500

@@ -9,7 +9,11 @@ from nexmark_vanilla_flink_spark.sources.tables import nexmark_streams
 from nexmark_vanilla_flink_spark.streaming.runner import run_available_now
 from nexmark_vanilla_flink_spark.streaming.sources import stream_nexmark
 from nexmark_vanilla_flink_spark.streaming.stateful import (
+    SCD2_SPEC,
+    bucketed_stateful,
+    funnel_spec,
     hot_items_stateful,
+    tagged_union,
     union_join_stateful,
 )
 
@@ -21,7 +25,9 @@ def _rows(df):
 def test_union_join_stateful_matches_batch_join(spark, sf_dir):
     s = stream_nexmark(spark, sf_dir)
     out = run_available_now(
-        union_join_stateful(s["persons"], s["auctions"]),
+        union_join_stateful(
+            tagged_union(s["persons"], s["auctions"]), n_buckets=None
+        ),
         output_mode="append",
         name="ujs",
     )
@@ -78,7 +84,6 @@ def test_funnel_stateful_multi_microbatch_equals_batch(spark, sf_dir):
         funnel_conversion,
     )
     from nexmark_vanilla_flink_spark.sources.tables import load_table
-    from nexmark_vanilla_flink_spark.streaming.stateful import funnel_stateful
 
     import glob
     import os
@@ -135,7 +140,9 @@ def test_funnel_stateful_multi_microbatch_equals_batch(spark, sf_dir):
             .withColumn("ts", F.timestamp_micros(F.col("us")))
         )
         out = run_available_now(
-            funnel_stateful(sdf, flush_ms, _FUNNEL_WINDOW_US),
+            bucketed_stateful(
+                sdf, flush_ms, funnel_spec(_FUNNEL_WINDOW_US), n_buckets=None
+            ),
             output_mode="append",
             name="funnel_mb",
         )
@@ -163,7 +170,6 @@ def test_scd2_stateful_incremental_emission_equals_batch(spark, sf_dir):
 
     from nexmark_vanilla_flink_spark.plans.linkage import scd2_user_state
     from nexmark_vanilla_flink_spark.sources.tables import load_table
-    from nexmark_vanilla_flink_spark.streaming.stateful import scd2_stateful
 
     ev = load_table(spark, sf_dir, "events")
     lo, hi, max_ts_ns = ev.agg(
@@ -211,7 +217,7 @@ def test_scd2_stateful_incremental_emission_equals_batch(spark, sf_dir):
             .withColumn("ts", F.timestamp_micros(F.col("us")))
         )
         out = run_available_now(
-            scd2_stateful(sdf, flush_ms),
+            bucketed_stateful(sdf, flush_ms, SCD2_SPEC, n_buckets=None),
             output_mode="append",
             name="scd2_mb",
         )
