@@ -14,14 +14,20 @@ durationMs split and state-commit ms (``stream_layers`` in the result).
 
 main() runs the phases in order: relayout (prepare_data), session
 (start_session), build (prewarm_builder_paths, then build_artifacts),
-floors (measure_floors, then end_floors), sweep, retime, comparator,
-report (compact_line) and draw band (draw_band). time_entry, after_entry
-and floor_batch are shared with tools/scale_sweep.py.
+floors (measure_floors, then end_floors), sweep, comparator, report
+(compact_line) and draw band (draw_band). time_entry, after_entry and
+floor_batch are shared with tools/scale_sweep.py.
+
+One sampling rule: the artifact build phase and every entry are each
+timed exactly BENCH_REPEAT times (the entries in whole passes over the
+same order) and keep their minimum; every sample stays in the result
+(``artifact_build_walls``, ``samples``, ``pass_values``), so each draw
+carries its own spread.
 
 Settings (environment):
   BENCH_QUERIES      comma list restricting the sweep (default: every entry)
-  BENCH_REPEAT       timing passes, min kept (default 3)
-  BENCH_BUDGET_S     wall budget for re-timing passes (default 600)
+  BENCH_REPEAT       samples of every entry and of the build phase, min
+                     kept (default 3)
   BENCH_OUT          result JSON path (default bench_result.json here)
   BENCH_DUCKDB       0 disables the built-in DuckDB comparator, which times
                      every batch-oracled query's oracle SQL on the same
@@ -83,32 +89,6 @@ RELAYOUT_ROW_GROUP = 16384
 # splitting still breaks up any hot key. At 100 TB you'd size this UP
 # from the data volume the same way (bytes-per-task, not cores).
 SHUFFLE_PARTITIONS = 8
-# Outlier alarm (VERDICT r6 task 1c): any pass-1 sample above OUTLIER_S is
-# immediately re-taken after a cache clear + GC, up to 2 retries, min kept
-# — the r6 artifact's 46 s source_dup_matrix was exactly this failure mode
-# (sweep-accumulated JVM state landing on one query), and an immediate
-# clean retake reads the real number. Retries are globally budgeted
-# (OUTLIER_BUDGET_S) so a genuinely-slow tail can't double the sweep.
-OUTLIER_S = 5.0
-OUTLIER_BUDGET_S = 120.0
-# Guaranteed re-timing (VERDICT r6 task 1b): even if pass 1 ate the whole
-# budget — exactly how BENCH_r06 collapsed to timing_passes=1 and shipped
-# single-sample GC noise as the headline — the slowest MIN_RETIME batch
-# entries are re-timed anyway. Their retime cost is bounded by the head of
-# the distribution (~tens of seconds), and they are precisely the entries
-# whose pass-1 noise moves the ratio. Since r10 the slowest
-# MIN_RETIME_STREAM streaming entries get the same guarantee:
-# stream_net_factor is a headline number too, and with streaming sorted
-# last in the retime order a budget-bound sweep used to ship SINGLE-sample
-# replay timings (the r10 first full sweep read net_factor 12.1 off cold
-# pass-1 draws that isolated min-of-3 measured 25-30% lower).
-# r11: raised 12/8 -> 20/12 after a slow-box draw spent the whole budget
-# in pass 1 and shipped single-sample timings for 118 entries.
-# r12: stream floor raised to 24 (= the whole oracled streaming cohort):
-# stream_net_factor divides a ~20-entry sum by a ~3 s denominator, so even
-# a few single-sample streaming tails move it by ~1x.
-MIN_RETIME = 20
-MIN_RETIME_STREAM = 24
 
 
 def relayout(sf_dir: str) -> tuple[str, float]:
@@ -193,6 +173,15 @@ def stream_class(name: str) -> tuple[str, int]:
     else:
         cls = "stateless"
     return cls, 2 if "exactly-once" in tags else 1
+
+
+def repeat_count() -> int:
+    """BENCH_REPEAT: how many times every entry and the build phase are
+    timed (default 3)."""
+    n = int(os.environ.get("BENCH_REPEAT", "3"))
+    if n < 1:
+        sys.exit(f"BENCH_REPEAT must be at least 1, not {n}")
+    return n
 
 
 def timed(fn) -> float:
@@ -412,7 +401,8 @@ def prewarm_builder_paths(spark, sf_dir: str) -> None:
 
 def record_draw(path: str, draw: dict) -> list[dict]:
     """Append one full-registry draw to the band file and return the last
-    three draws taken at the same core count (this one included)."""
+    three draws taken at the same core count and the same number of timing
+    passes (this one included)."""
     with open(path, "a") as f:
         f.write(json.dumps(draw) + "\n")
     tail = []
@@ -427,10 +417,15 @@ def record_draw(path: str, draw: dict) -> list[dict]:
                 parsed = json.loads(x)
             except ValueError:
                 continue
-            # band = same-core draws only (legacy untagged lines predate
-            # the cpus field; every draw in this file's history ran at 32
-            # cores)
-            if parsed.get("cpus", 32) == draw["cpus"]:
+            # band = same-core, same-passes draws only (legacy untagged
+            # lines predate the cpus field; every draw in this file's
+            # history ran at 32 cores). Lines without timing_passes were
+            # budget-cut draws, a mix of min-of-1 and min-of-N entries, so
+            # they band with nothing.
+            if (
+                parsed.get("cpus", 32) == draw["cpus"]
+                and parsed.get("timing_passes") == draw["timing_passes"]
+            ):
                 tail.append(parsed)
     return tail[-3:]
 
@@ -454,12 +449,13 @@ def settle_heap(spark, name: str) -> None:
     after a driver GC, and its periodic GC default (30 min) never fires
     inside a sweep — mid-batch major GCs then land inside streaming
     micro-batches. The nudge runs OUTSIDE the timer for every streaming
-    sample in pass 1 and every retime pass alike, so all samples see the
-    same heap discipline; the floor probes measure on an equally settled
-    heap (post-build GC at start, post-stream-cohort at end), keeping the
-    net-of-floor subtraction consistent. Batch entries keep the
-    every-20-queries cadence: their gate (net_ratio 1.2 vs 2.0) has
-    margin, and 178x3 nudges would eat the retime budget."""
+    sample in every pass, so all samples see the same heap discipline; the
+    floor probes measure on an equally settled heap (post-build GC at
+    start, post-stream-cohort at end), keeping the net-of-floor
+    subtraction consistent. Batch entries keep the every-20-queries
+    cadence (in every pass too): their gate (net_ratio 1.2 vs 2.0) has
+    margin, and a ~0.2 s nudge before each of 178x3 samples would add
+    ~100 s of untimed wall to a draw."""
     if is_stream(name):
         spark.sparkContext._jvm.System.gc()
 
@@ -492,7 +488,7 @@ def time_entry(spark, sf_dir: str, name: str, tracer: Tracer | None = None) -> f
     set lives in plans/registry.py and tests/test_bench_guard.py keeps it
     honest) rebuild inside the timer: for those the work IS in the build.
     Because ``after_entry`` clears caches between entries, every sample
-    (pass 1 or retime) pays the same cache-population profile.
+    in every pass pays the same cache-population profile.
 
     With ``tracer`` (perfbench.tracing.Tracer) the timed call is one of its
     samples: labelled, and its job group named, after the entry, and
@@ -600,20 +596,29 @@ def build_artifacts(spark, sf_dir: str, result: dict) -> None:
     duration includes contention from its peers, so their sum
     (``artifact_build_serial_sec``) is an upper bound on a one-at-a-time
     build, reported for the conservative net_ratio_with_builds_serial
-    (ADVICE r10)."""
-    purge_artifact_roots()
-    t0 = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=len(ARTIFACT_BUILDERS) or 1) as ex:
-        for f in [ex.submit(fn, spark, sf_dir) for fn in ARTIFACT_BUILDERS.values()]:
-            f.result()
-    wall = round(time.perf_counter() - t0, 3)
-    spark.catalog.clearCache()
-    # settle the JVM after the concurrent build burst before anything is
-    # timed (same rationale as the every-20-queries GC nudge)
-    spark.sparkContext._jvm.System.gc()
-    builds = pop_build_log()
+    (ADVICE r10).
+
+    The phase is purged and rebuilt ``repeat_count()`` times, like every
+    entry is timed that often: ``artifact_build_sec`` is the minimum wall,
+    the serial sum and records come from that same build, and every wall
+    stays in ``artifact_build_walls``."""
+    runs = []
+    for _ in range(repeat_count()):
+        purge_artifact_roots()
+        t0 = time.perf_counter()
+        with ThreadPoolExecutor(max_workers=len(ARTIFACT_BUILDERS) or 1) as ex:
+            for f in [ex.submit(fn, spark, sf_dir) for fn in ARTIFACT_BUILDERS.values()]:
+                f.result()
+        wall = round(time.perf_counter() - t0, 3)
+        spark.catalog.clearCache()
+        # settle the JVM after the concurrent build burst before anything
+        # is timed (same rationale as the every-20-queries GC nudge)
+        spark.sparkContext._jvm.System.gc()
+        runs.append((wall, pop_build_log()))
+    wall, builds = min(runs, key=lambda r: r[0])
     result.update(
         artifact_build_sec=wall,
+        artifact_build_walls=[w for w, _ in runs],
         artifact_build_serial_sec=round(sum(b["sec"] for b in builds), 3),
         artifact_builds=builds,
         # builds that happen INSIDE the sweep (should stay empty: the
@@ -621,7 +626,7 @@ def build_artifacts(spark, sf_dir: str, result: dict) -> None:
         # unregistered artifact hid its build in a timed sample)
         artifact_builds_in_sweep={},
     )
-    result["phase_walls"]["artifact_build"] = wall
+    result["phase_walls"]["artifact_build"] = round(sum(w for w, _ in runs), 3)
 
 
 def end_floors(spark, sf_dir: str, result: dict, start: dict[str, float]) -> None:
@@ -652,109 +657,52 @@ def end_floors(spark, sf_dir: str, result: dict, start: dict[str, float]) -> Non
     )
 
 
-def sweep(spark, sf_dir: str, names: list[str], tracer: Tracer, result: dict) -> None:
-    """Pass 1: time every entry once, so a COMPLETE result exists whatever
-    the caller's time budget; ``retime`` then takes the min of further
-    passes. Single-shot timings carry ±30% machine noise at sub-second
-    query times (consecutive identical sweeps: 38.5 vs 44.2 s on the batch
-    subset).
-
-    Outlier alarm (VERDICT r6 task 1c): a sample above OUTLIER_S is re-taken
-    at once after a cache clear + GC, up to 2 retries, min kept — the r6
-    artifact's 46 s source_dup_matrix was sweep-accumulated JVM state
-    landing on one query. Retries share OUTLIER_BUDGET_S so a genuinely
-    slow tail can't double the sweep; ``outliers`` keeps each alarm's
-    [first, retake, ...] samples.
-
-    ``result_rows`` is diagnostic: eager entries are counted (the count()
-    is also their warmup, and their rebuild-per-run makes the rows this
-    run's output); lazy entries read -1 — a count() there was a third full
-    execution per query (the correctness driver row-counts every entry)."""
-    timings, rows = result["queries"], result["result_rows"]
-    outliers: dict[str, list[float]] = {}
-    spent = 0.0
-    for qi, name in enumerate(names):
-        if qi and qi % 20 == 0:
-            spark.sparkContext._jvm.System.gc()
-        q = REGISTRY[name]
-        rows[name] = q.spark(spark, sf_dir).count() if EAGER_TAGS & set(q.tags) else -1
-        settle_heap(spark, name)
-        t = time_entry(spark, sf_dir, name, tracer)
-        retries = 0
-        while t > OUTLIER_S and retries < 2 and spent < OUTLIER_BUDGET_S:
-            outliers.setdefault(name, [t])
-            after_entry(spark)
-            spark.sparkContext._jvm.System.gc()
-            r0 = time.perf_counter()
-            t2 = time_entry(spark, sf_dir, name, tracer)
-            spent += time.perf_counter() - r0
-            outliers[name].append(t2)
-            t = min(t, t2)
-            retries += 1
-            if t2 <= OUTLIER_S:
-                break
-        timings[name] = t
-        built = pop_build_log()
-        if built:
-            result["artifact_builds_in_sweep"][name] = built
-        after_entry(spark)
-    result.update(
-        value=round(sum(timings.values()), 3),
-        timing_passes=1,
-        partial="first pass only",
-        outliers=dict(sorted(outliers.items())),
-    )
-
-
-def retime(
-    spark, sf_dir: str, names: list[str], tracer: Tracer, result: dict, deadline: float
+def sweep(
+    spark, sf_dir: str, names: list[str], tracer: Tracer, result: dict, out_path: str
 ) -> None:
-    """Passes 2..BENCH_REPEAT: re-time and keep the min while
-    ``time.perf_counter()`` is before ``deadline`` (BENCH_BUDGET_S after
-    pass 1 started), so a driver timeout never leaves an empty result.
+    """Time every entry exactly ``repeat_count()`` times, in whole passes
+    over ``names`` in the same order, and keep each entry's minimum.
+    Single-shot timings carry ±30% machine noise at sub-second query times
+    (consecutive identical sweeps: 38.5 vs 44.2 s on the batch subset), and
+    a fixed count keeps draws comparable whatever the host speed: a pass
+    is never cut short, so every kept number is a min of the same N.
 
-    Order: batch-oracled entries FIRST (the comparator-gate numerator),
-    slowest-first within each group — min-of-N matters most where pass-1
-    noise is largest, and a budget cut should land on the cheap tail. The
-    slowest MIN_RETIME entries and MIN_RETIME_STREAM streaming entries are
-    re-timed even past the budget (VERDICT r6 task 1b, r10-r12)."""
-    timings = result["queries"]
-    repeat = int(os.environ.get("BENCH_REPEAT", "3"))
-    order = sorted(names, key=lambda n: (is_stream(n), -timings[n]))
-    forced = set(order[:MIN_RETIME]) | set(
-        sorted(filter(is_stream, names), key=lambda n: -timings[n])[:MIN_RETIME_STREAM]
-    )
-    retimed: set[str] = set()
-    passes, partial_passes = 1, 0
-    while passes < repeat:
-        progressed = skipped_for_budget = False
-        for name in order:
-            over = time.perf_counter() >= deadline
-            if over and not (name in forced and name not in retimed):
-                skipped_for_budget = True
-                continue
+    Every pass runs the same heap discipline (the every-20-entries GC
+    nudge, settle_heap before streaming samples) and ends with a flush, so
+    a caller timeout still leaves a parseable file whose ``timing_passes``
+    counts the passes completed. The result keeps each entry's N walls as
+    ``samples`` and each pass's sum as ``pass_values``.
+
+    ``result_rows`` is diagnostic and counted in pass 1: eager entries are
+    counted (the count() is also their warmup, and their
+    rebuild-per-run makes the rows this run's output); lazy entries read
+    -1 — a count() there was a third full execution per query (the
+    correctness driver row-counts every entry)."""
+    timings, rows = result["queries"], result["result_rows"]
+    samples: dict[str, list[float]] = {n: [] for n in names}
+    pass_values: list[float] = []
+    pass_walls: list[float] = []
+    result.update(samples=samples, pass_values=pass_values)
+    result["phase_walls"]["passes"] = pass_walls
+    for p in range(repeat_count()):
+        t0 = time.perf_counter()
+        for qi, name in enumerate(names):
+            if qi and qi % 20 == 0:
+                spark.sparkContext._jvm.System.gc()
+            if p == 0:
+                q = REGISTRY[name]
+                rows[name] = q.spark(spark, sf_dir).count() if EAGER_TAGS & set(q.tags) else -1
             settle_heap(spark, name)
-            timings[name] = min(timings[name], time_entry(spark, sf_dir, name, tracer))
-            retimed.add(name)
-            progressed = True
+            samples[name].append(time_entry(spark, sf_dir, name, tracer))
+            timings[name] = min(samples[name])
+            built = pop_build_log()
+            if built:
+                result["artifact_builds_in_sweep"].setdefault(name, []).extend(built)
             after_entry(spark)
-        if not progressed:
-            break
-        if skipped_for_budget:
-            # ADVICE r7: a budget-exhausted pass that retimed only the
-            # forced entries must not count as a full min-of-N sweep in
-            # timing_passes. It is reported separately, and since the
-            # budget is monotone-exhausted, no further pass can do more.
-            partial_passes += 1
-            break
-        passes += 1
-    del result["partial"]
-    result.update(
-        value=round(sum(timings.values()), 3),
-        timing_passes=passes,
-        partial_passes=partial_passes,
-        retimed=len(retimed),
-    )
+        pass_walls.append(round(time.perf_counter() - t0, 3))
+        pass_values.append(round(sum(samples[n][p] for n in names), 3))
+        result.update(value=round(sum(timings.values()), 3), timing_passes=p + 1)
+        flush(out_path, result)
 
 
 def _ratio(num: float, den: float, ndigits: int = 3) -> float | None:
@@ -872,15 +820,17 @@ def headline(result: dict) -> dict:
 def draw_band(spark, result: dict) -> None:
     """Per-draw band (VERDICT r10 task 8): a FULL-registry draw appends its
     headline numbers to docs/bench_draws.jsonl, and the last three draws at
-    the same core count ride inside the result as ``recent_draws``. The
-    ``cpus`` tag is the LIVE session's parallelism (ADVICE r12: it reflects
-    any SPARK_MASTER=local[N] override), so draws at different core counts
-    never share a band."""
+    the same core count and pass count ride inside the result as
+    ``recent_draws``. The ``cpus`` tag is the LIVE session's parallelism
+    (ADVICE r12: it reflects any SPARK_MASTER=local[N] override), so draws
+    at different core counts never share a band."""
     draw = {
         "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "value": result["value"],
         "n_queries": len(result["queries"]),
         "cpus": spark.sparkContext.defaultParallelism,
+        "timing_passes": result["timing_passes"],
+        "pass_values": result["pass_values"],
         "artifact_build_sec": result["artifact_build_sec"],
         "degraded_box": result["degraded_box"],
         **headline(result),
@@ -905,8 +855,7 @@ def compact_line(result: dict, out_path: str) -> dict:
             compact[k] = head[k]
     compact.update(
         timing_passes=result["timing_passes"],
-        retimed=result["retimed"],
-        n_outliers=len(result["outliers"]),
+        pass_values=result["pass_values"],
         n_queries=len(result["queries"]),
         floor_sec=result["floor_sec"],
         stream_floor_sec=result["stream_floor_sec"],
@@ -984,8 +933,8 @@ def main() -> None:
         "result_rows": {},
         "sf": float(m.group(1)) if m else None,
         "relayout_sec": relayout_sec,
-        # phase walls (r11): where the wall went, so a 1-pass artifact is
-        # diagnosable from the JSON alone
+        # phase walls (r11): where the wall went (one wall per timing pass
+        # under "passes"), diagnosable from the JSON alone
         "phase_walls": {"relayout": relayout_sec or 0.0},
     }
     walls = result["phase_walls"]
@@ -994,20 +943,16 @@ def main() -> None:
     floors_start = measure_floors(spark, sf_dir)
     result.update(floor_sec=floors_start["batch"], stream_floor_sec=floors_start["stateless"])
     t0 = time.perf_counter()
-    sweep(spark, sf_dir, names, tracer, result)
-    walls["pass1"] = round(time.perf_counter() - t0, 3)
-    flush(out_path, result)
-    budget_s = float(os.environ.get("BENCH_BUDGET_S", "600"))
-    retime(spark, sf_dir, names, tracer, result, deadline=t0 + budget_s)
-    walls["retime"] = round(time.perf_counter() - t0 - walls["pass1"], 3)
+    sweep(spark, sf_dir, names, tracer, result, out_path)
+    t1 = time.perf_counter()
     end_floors(spark, sf_dir, result, floors_start)
     result["stream_layers"] = stream_layers(tracer)
     flush(out_path, result)
     if os.environ.get("BENCH_DUCKDB", "1") != "0":
         comparator(spark, sf_dir, names, result)
-    walls["total"] = round(time.perf_counter() - t0, 3)
     # end floors + stream layers + DuckDB comparator
-    walls["post_sweep"] = round(walls["total"] - walls["pass1"] - walls["retime"], 3)
+    walls["post_sweep"] = round(time.perf_counter() - t1, 3)
+    walls["total"] = round(time.perf_counter() - t0, 3)
     flush(out_path, result)
     print(json.dumps(result))
     # BENCH_QUERIES subsets cover a different query set: no draw, no redraw

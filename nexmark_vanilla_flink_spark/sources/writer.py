@@ -135,36 +135,56 @@ def murmur3_hash32(data: bytes, offset: int = 0, length: int | None = None,
     return -code if code != -(1 << 31) else 0
 
 
+def _let(c, body):
+    """``body(c)`` with ``c`` bound once: a one-element ``transform`` binds
+    it to a lambda variable, so a body that reads its input several times
+    does not copy the input's expression tree into each read (chained,
+    the copies would double the tree at every step)."""
+    return F.transform(F.array(c), body)[0]
+
+
 def murmur3_partition_col(key_long, num_partitions: int):
     """The reference partitioner as a PURE COLUMN expression: Kafka
     partition = hash32(first 4 key bytes, seed 104729) % num_partitions,
     where the key is the event's 8-byte big-endian long
     (Serializer.java:171-176) — so the hashed block is the byte-swapped
     HIGH 32 bits of the key. All 32-bit Java int wrap-around is emulated
-    with masked BIGINT arithmetic; JVM-side, codegens, usable in a
-    streaming producer plan (no UDF)."""
+    with masked BIGINT arithmetic; JVM-side, usable in a streaming
+    producer plan (no UDF). Every step that reads its input more than once
+    binds it through ``_let``, so the expression grows linearly in the
+    number of steps."""
     key_long = F.col(key_long) if isinstance(key_long, str) else key_long
-    hi = F.shiftright(key_long, 32).bitwiseAND(F.lit(_M32))
     # little-endian block read of the 4 big-endian bytes = byteswap32(hi)
-    k = (
-        (hi.bitwiseAND(F.lit(0xFF)) * F.lit(1 << 24))
+    k = _let(
+        F.shiftright(key_long, 32).bitwiseAND(F.lit(_M32)),
+        lambda hi: (hi.bitwiseAND(F.lit(0xFF)) * F.lit(1 << 24))
         + (F.shiftright(hi, 8).bitwiseAND(F.lit(0xFF)) * F.lit(1 << 16))
         + (F.shiftright(hi, 16).bitwiseAND(F.lit(0xFF)) * F.lit(1 << 8))
-        + F.shiftright(hi, 24).bitwiseAND(F.lit(0xFF))
+        + F.shiftright(hi, 24).bitwiseAND(F.lit(0xFF)),
     )
 
     def mul32(c, m):
         # (c * m) mod 2^32 without overflowing BIGINT under ANSI mode:
         # split c into 16-bit halves — each partial product stays < 2^48
-        lo = c.bitwiseAND(F.lit(0xFFFF)) * F.lit(m)
-        hi = (F.shiftright(c, 16) * F.lit(m)).bitwiseAND(F.lit(0xFFFF))
-        return (lo + hi * F.lit(1 << 16)).bitwiseAND(F.lit(_M32))
+        return _let(
+            c,
+            lambda c: (
+                c.bitwiseAND(F.lit(0xFFFF)) * F.lit(m)
+                + (F.shiftright(c, 16) * F.lit(m)).bitwiseAND(F.lit(0xFFFF))
+                * F.lit(1 << 16)
+            ).bitwiseAND(F.lit(_M32)),
+        )
 
     def rotl32(c, r):
-        return (
-            (c * F.lit(1 << r)).bitwiseAND(F.lit(_M32))
-            + F.shiftright(c, 32 - r)
-        ).bitwiseAND(F.lit(_M32))
+        return _let(
+            c,
+            lambda c: (
+                (c * F.lit(1 << r)).bitwiseAND(F.lit(_M32)) + F.shiftright(c, 32 - r)
+            ).bitwiseAND(F.lit(_M32)),
+        )
+
+    def xorshift(c, r):
+        return _let(c, lambda c: c.bitwiseXOR(F.shiftright(c, r)))
 
     k = mul32(k, 0xCC9E2D51)
     k = rotl32(k, 15)
@@ -173,16 +193,18 @@ def murmur3_partition_col(key_long, num_partitions: int):
     h = rotl32(h, 13)
     h = (h * F.lit(5) + F.lit(0xE6546B64)).bitwiseAND(F.lit(_M32))
     h = h.bitwiseXOR(F.lit(4))  # fmix32 folds in the length (= 4)
-    h = h.bitwiseXOR(F.shiftright(h, 16))
+    h = xorshift(h, 16)
     h = mul32(h, 0x85EBCA6B)
-    h = h.bitwiseXOR(F.shiftright(h, 13))
+    h = xorshift(h, 13)
     h = mul32(h, 0xC2B2AE35)
-    h = h.bitwiseXOR(F.shiftright(h, 16))
-    signed = F.when(h >= F.lit(1 << 31), h - F.lit(1 << 32)).otherwise(h)
-    code = (
-        F.when(signed >= 0, signed)
-        .when(signed == F.lit(-(1 << 31)), F.lit(0))
-        .otherwise(-signed)
+    h = xorshift(h, 16)
+    # the reference's abs() of Java's int view of h: h as is below 2^31,
+    # 0 for Integer.MIN_VALUE (2^31), otherwise -(h - 2^32)
+    code = _let(
+        h,
+        lambda h: F.when(h < F.lit(1 << 31), h)
+        .when(h == F.lit(1 << 31), F.lit(0))
+        .otherwise(F.lit(1 << 32) - h),
     )
     return (code % F.lit(num_partitions)).cast("int")
 

@@ -44,7 +44,7 @@ from typing import Any, Callable, Iterator, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -58,6 +58,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.time import bucket_start_s
 
 # State of every bucketed operator: one pickled blob per group. Pickle is
 # INTERNAL state representation — emitted rows, the oracle-gated surface,
@@ -98,12 +100,13 @@ _HOT_ITEMS_STATE = StructType(
 )
 
 
-def _hot_items_acc(state: GroupState, pdfs: Iterator[pd.DataFrame]) -> tuple:
-    """Fold a batch of bids into the key's {max, count, last ts}
-    accumulator (the reference Aggregator's add, NexmarkQuery5.java:220)."""
-    max_bid, bid_count, last_ts_ns = (
-        state.get[:3] if state.exists else (float("-inf"), 0, 0)
-    )
+def hot_items_acc(acc: Optional[tuple], pdfs: Iterator[pd.DataFrame]) -> tuple:
+    """Fold a batch of bids into a key's {max, count, last ts} accumulator
+    (the reference Aggregator's add, NexmarkQuery5.java:220). ``acc`` is the
+    stored state, whose first three fields are the accumulator, or None for
+    a new key; shared by the GroupState and the ValueState (streaming/tws.py)
+    operators."""
+    max_bid, bid_count, last_ts_ns = (float("-inf"), 0, 0) if acc is None else acc[:3]
     for pdf in pdfs:
         if len(pdf):
             max_bid = max(max_bid, float(pdf["bid"].max()))
@@ -112,13 +115,10 @@ def _hot_items_acc(state: GroupState, pdfs: Iterator[pd.DataFrame]) -> tuple:
     return max_bid, bid_count, last_ts_ns
 
 
-def _hot_items_flush(
-    state: GroupState, auction_id: int, w_start_s: int
-) -> pd.DataFrame:
-    """The timer fired: emit the key's accumulator as one row and clear
-    its state (reference onTimer, NexmarkQuery5.java:246-250)."""
-    max_bid, bid_count, last_ts_ns, _ = state.get
-    state.remove()
+def hot_items_row(auction_id: int, w_start_s: int, acc: tuple) -> pd.DataFrame:
+    """A key's accumulator as its one emitted row (reference onTimer,
+    NexmarkQuery5.java:246-250)."""
+    max_bid, bid_count, last_ts_ns = acc[:3]
     return pd.DataFrame(
         {
             "auction_id": [auction_id],
@@ -127,6 +127,26 @@ def _hot_items_flush(
             "bid_count": [bid_count],
             "last_bid_ts_s": [last_ts_ns // 1_000_000_000],
         }
+    )
+
+
+def _hot_items_flush(
+    state: GroupState, auction_id: int, w_start_s: int
+) -> pd.DataFrame:
+    """The timer fired: emit the key's accumulator and clear its state."""
+    row = hot_items_row(auction_id, w_start_s, state.get)
+    state.remove()
+    return row
+
+
+def hot_items_keyed(bids: DataFrame, window_s: int) -> GroupedData:
+    """Bids keyed by (item, window start) under the 2 s watermark: the
+    grouping both Q5 timer replicas fold over."""
+    return (
+        bids.withColumn("auction_id", F.col("item_id"))
+        .withColumn("w_start_s", bucket_start_s("b_ts_ns", window_s))
+        .withWatermark("b_ts", "2 seconds")
+        .groupBy("auction_id", "w_start_s")
     )
 
 
@@ -148,25 +168,14 @@ def hot_items_stateful(bids: DataFrame, window_s: int = 3600) -> DataFrame:
             yield _hot_items_flush(state, auction_id, w_start_s)
             return
         w_end_ms = (w_start_s + window_s) * 1000
-        state.update((*_hot_items_acc(state, pdfs), w_end_ms))
+        state.update((*hot_items_acc(state.get if state.exists else None, pdfs), w_end_ms))
         # the reference's registerEventTimeTimer: fire when watermark ≥ window
         # end (clamped above the current watermark — historical replay can
         # have windows that already expired, like the reference's
         # absolute-timer quirk at NexmarkQuery5.java:240)
         state.setTimeoutTimestamp(max(w_end_ms, state.getCurrentWatermarkMs() + 1))
 
-    keyed = (
-        bids.withColumn("auction_id", F.col("item_id"))
-        .withColumn(
-            "w_start_s",
-            F.expr(
-                f"CAST(b_ts_ns DIV {window_s * 1_000_000_000} AS BIGINT) * {window_s}"
-            ),
-        )
-        .withWatermark("b_ts", "2 seconds")
-        .groupBy("auction_id", "w_start_s")
-    )
-    return keyed.applyInPandasWithState(
+    return hot_items_keyed(bids, window_s).applyInPandasWithState(
         fn,
         outputStructType=HOT_ITEMS_OUTPUT,
         stateStructType=_HOT_ITEMS_STATE,
@@ -189,7 +198,7 @@ def q5b_flush_fn(flush_interval_ms: int = 10_000) -> Callable:
         if state.hasTimedOut:
             yield _hot_items_flush(state, int(key[0]), 0)
             return
-        state.update((*_hot_items_acc(state, pdfs), 0))
+        state.update((*hot_items_acc(state.get if state.exists else None, pdfs), 0))
         state.setTimeoutDuration(flush_interval_ms)
 
     return fn

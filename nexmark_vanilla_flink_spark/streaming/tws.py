@@ -24,7 +24,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import (
     DoubleType,
@@ -32,6 +31,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .stateful import HOT_ITEMS_OUTPUT, hot_items_acc, hot_items_keyed, hot_items_row
+
 
 def tws_available() -> bool:
     """transformWithStateInPandas needs protobuf in the Python workers."""
@@ -43,16 +45,6 @@ def tws_available() -> bool:
         return False
 
 
-HOT_ITEMS_OUTPUT = StructType(
-    [
-        StructField("auction_id", LongType()),
-        StructField("w_start_s", LongType()),
-        StructField("max_bid", DoubleType()),
-        StructField("bid_count", LongType()),
-        StructField("last_bid_ts_s", LongType()),
-    ]
-)
-
 _ACC_SCHEMA = StructType(
     [
         StructField("max_bid", DoubleType()),
@@ -63,7 +55,9 @@ _ACC_SCHEMA = StructType(
 
 
 class HotItemsProcessor(StatefulProcessor):
-    """Per-(item, window) accumulator with event-time timer emission."""
+    """Per-(item, window) accumulator with event-time timer emission; the
+    fold and the emitted row are streaming/stateful.py's, shared with
+    ``hot_items_stateful``."""
 
     def __init__(self, window_s: int = 3600):
         self._window_s = window_s
@@ -73,16 +67,8 @@ class HotItemsProcessor(StatefulProcessor):
         self._acc = handle.getValueState("acc", _ACC_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        auction_id, w_start_s = int(key[0]), int(key[1])
-        max_bid, bid_count, last_ts_ns = float("-inf"), 0, 0
-        if self._acc.exists():
-            max_bid, bid_count, last_ts_ns = self._acc.get()
-        for pdf in rows:
-            if len(pdf):
-                max_bid = max(max_bid, float(pdf["bid"].max()))
-                bid_count += int(len(pdf))
-                last_ts_ns = max(last_ts_ns, int(pdf["b_ts_ns"].max()))
-        self._acc.update((max_bid, bid_count, last_ts_ns))
+        w_start_s = int(key[1])
+        self._acc.update(hot_items_acc(self._acc.get() if self._acc.exists() else None, rows))
         # the reference's registerEventTimeTimer at the window end, clamped
         # above the current watermark for historical replay
         w_end_ms = (w_start_s + self._window_s) * 1000
@@ -92,24 +78,11 @@ class HotItemsProcessor(StatefulProcessor):
         return iter(())
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator[pd.DataFrame]:
-        auction_id, w_start_s = int(key[0]), int(key[1])
         if not self._acc.exists():
             return iter(())
-        max_bid, bid_count, last_ts_ns = self._acc.get()
+        row = hot_items_row(int(key[0]), int(key[1]), self._acc.get())
         self._acc.clear()  # onTimer emit + state removal (reference :246-250)
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "auction_id": [auction_id],
-                        "w_start_s": [w_start_s],
-                        "max_bid": [max_bid],
-                        "bid_count": [bid_count],
-                        "last_bid_ts_s": [last_ts_ns // 1_000_000_000],
-                    }
-                )
-            ]
-        )
+        return iter([row])
 
     def close(self) -> None:
         pass
@@ -117,18 +90,7 @@ class HotItemsProcessor(StatefulProcessor):
 
 def hot_items_tws(bids: DataFrame, window_s: int = 3600) -> DataFrame:
     """Q5 on transformWithStateInPandas (ValueState + event-time timers)."""
-    keyed = (
-        bids.withColumn("auction_id", F.col("item_id"))
-        .withColumn(
-            "w_start_s",
-            F.expr(
-                f"CAST(b_ts_ns DIV {window_s * 1_000_000_000} AS BIGINT) * {window_s}"
-            ),
-        )
-        .withWatermark("b_ts", "2 seconds")
-        .groupBy("auction_id", "w_start_s")
-    )
-    return keyed.transformWithStateInPandas(
+    return hot_items_keyed(bids, window_s).transformWithStateInPandas(
         statefulProcessor=HotItemsProcessor(window_s),
         outputStructType=HOT_ITEMS_OUTPUT,
         outputMode="append",
